@@ -308,95 +308,6 @@ def main() -> None:
         finally:
             shutil.rmtree(me_dir, ignore_errors=True)
 
-        # ---- ANN tier at 100k vectors (r4 advice #3): build + probe
-        # latency for BOTH persistent vector indexes, so ANN perf gets
-        # the same round-over-round regression trail BM25 has ----
-        from meme_search_engine_spark.datagen import ensure_embeddings
-        from meme_search_engine_spark.ops.ivf_index import build_ivf_index
-        from meme_search_engine_spark.ops.vamana import build_vamana_index
-        from meme_search_engine_spark.query.serve import LocalIVF, LocalVamana
-
-        n_vec = int(os.environ.get("SPARK_GRAFT_BENCH_ANN_VECS", "100000"))
-        emb_dir = ensure_embeddings(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "data"),
-            n_vec,
-        )
-        emb = spark.read.parquet(emb_dir)
-        qm = [
-            r["embedding"]
-            for r in emb.filter(f"vec_id < 16").orderBy("vec_id").collect()
-        ]
-
-        def probe_p50(make_probe, n_probe: int) -> tuple[float, float]:
-            """(cold_p50_ms, warm_p50_ms): cold = fresh probe object
-            (empty caches) one pass; warm = best-of-3 interleaved."""
-            probe = make_probe()
-            cold = []
-            for q in qm:
-                t0 = time.time()
-                probe.candidates(q, k=10, n_probe=n_probe)
-                cold.append(time.time() - t0)
-            cold.sort()
-            best: dict[int, float] = {}
-            for _ in range(3):
-                for i, q in enumerate(qm):
-                    t0 = time.time()
-                    probe.candidates(q, k=10, n_probe=n_probe)
-                    dt = time.time() - t0
-                    if i not in best or dt < best[i]:
-                        best[i] = dt
-            warm = sorted(best.values())
-            return (
-                round(1000 * cold[len(cold) // 2], 2),
-                round(1000 * warm[len(warm) // 2], 2),
-            )
-
-        ivf_dir = tempfile.mkdtemp(prefix="bench_ivf_")
-        vam_dir = tempfile.mkdtemp(prefix="bench_vam_")
-        # PINNED ANN bench config, emitted into the JSON so every
-        # BENCH_rN is self-describing and round-over-round probe
-        # latencies are mechanically like-for-like (the r5 2.18 ->
-        # 6.22 ms "regression" was an undisclosed n_probe/shards
-        # change — VERDICT r05 #3).  Changing any value here requires
-        # emitting BOTH old- and new-config rows for one round.
-        ann_cfg = {
-            "ivf_n_lists": 64, "ivf_storage": "fp16", "ivf_n_probe": 8,
-            "vamana_n_shards": 32, "vamana_n_probe": 4,
-        }
-        extras["ann_config"] = ann_cfg
-        try:
-            t0 = time.time()
-            build_ivf_index(
-                spark, emb, ivf_dir,
-                n_lists=ann_cfg["ivf_n_lists"],
-                storage=ann_cfg["ivf_storage"],
-            )
-            extras["ivf_build_sec_100k"] = round(time.time() - t0, 3)
-            c, w = probe_p50(
-                lambda: LocalIVF(ivf_dir), n_probe=ann_cfg["ivf_n_probe"]
-            )
-            extras["ivf_probe_cold_p50_ms"] = c
-            extras["ivf_probe_p50_ms"] = w
-
-            # shard count tracks cores (one build task per shard; the
-            # per-node insertion loop is the documented per-shard cost,
-            # so wall = shard_size-bound) — n_probe scaled to keep the
-            # probed fraction ~4/32 = 12.5% of the corpus
-            t0 = time.time()
-            build_vamana_index(
-                spark, emb, vam_dir,
-                n_shards=ann_cfg["vamana_n_shards"],
-            )
-            extras["vamana_build_sec_100k"] = round(time.time() - t0, 3)
-            c, w = probe_p50(
-                lambda: LocalVamana(vam_dir),
-                n_probe=ann_cfg["vamana_n_probe"],
-            )
-            extras["vamana_probe_cold_p50_ms"] = c
-            extras["vamana_probe_p50_ms"] = w
-        finally:
-            shutil.rmtree(ivf_dir, ignore_errors=True)
-            shutil.rmtree(vam_dir, ignore_errors=True)
     finally:
         shutil.rmtree(idx_dir, ignore_errors=True)
         spark.stop()

@@ -8,10 +8,10 @@ shard/index build).
     spark-submit --py-files mse_spark.zip jobs/pipeline_job.py \
         --input s3://bucket/pages --workdir s3://bucket/out \
         --min-tokens 10 --lang en --min-distinct-ratio 0.2 \
-        --dedup exact [--embeddings s3://bucket/emb --ivf] [--vamana]
+        --dedup exact [--embeddings s3://bucket/emb --ivf]
 
 Prints one JSON summary line with per-stage row counts and the built
-index manifests.
+index's doc count and directory (plus the IVF index's, with --ivf).
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ def run_pipeline(
     dedup: str = "exact",
     embeddings=None,
     build_ivf: bool = False,
-    build_vamana: bool = False,
     index_cfg=None,
 ) -> dict:
     """The library form (jobs call this; tests call it directly).
@@ -91,31 +90,21 @@ def run_pipeline(
     summary["index_docs"] = manifest["stats"]["N"]
     summary["index_dir"] = idx_dir
 
-    # ---- optional vector indexes over surviving docs' embeddings ----
-    if embeddings is not None and (build_ivf or build_vamana):
+    # ---- optional IVF index over surviving docs' embeddings ----
+    if embeddings is not None and build_ivf:
+        from meme_search_engine_spark.ops.ivf_index import build_ivf_index
+
         surviving = keep.select(
             F.col("doc_id").alias("vec_id")
         )
         emb_kept = embeddings.join(surviving, "vec_id")
         summary["vectors_kept"] = emb_kept.count()
-        if build_ivf:
-            from meme_search_engine_spark.ops.ivf_index import build_ivf_index
-
-            n_lists = min(64, max(4, summary["vectors_kept"] // 64))
-            build_ivf_index(
-                spark, emb_kept, os.path.join(workdir, "ivf"),
-                n_lists=n_lists,
-            )
-            summary["ivf_dir"] = os.path.join(workdir, "ivf")
-        if build_vamana:
-            from meme_search_engine_spark.ops.vamana import build_vamana_index
-
-            n_shards = min(16, max(2, summary["vectors_kept"] // 128))
-            build_vamana_index(
-                spark, emb_kept, os.path.join(workdir, "vamana"),
-                n_shards=n_shards,
-            )
-            summary["vamana_dir"] = os.path.join(workdir, "vamana")
+        n_lists = min(64, max(4, summary["vectors_kept"] // 64))
+        build_ivf_index(
+            spark, emb_kept, os.path.join(workdir, "ivf"),
+            n_lists=n_lists,
+        )
+        summary["ivf_dir"] = os.path.join(workdir, "ivf")
     return summary
 
 
@@ -130,7 +119,6 @@ def main() -> None:
     ap.add_argument("--dedup", choices=("exact", "none"), default="exact")
     ap.add_argument("--embeddings", default=None)
     ap.add_argument("--ivf", action="store_true")
-    ap.add_argument("--vamana", action="store_true")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
 
@@ -162,7 +150,6 @@ def main() -> None:
         dedup=args.dedup,
         embeddings=emb,
         build_ivf=args.ivf,
-        build_vamana=args.vamana,
     )
     print(json.dumps(summary))
 

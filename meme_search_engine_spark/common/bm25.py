@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+
 K1 = 1.2
 B = 0.75
 FIXED_POINT_SCALE = 2**32
@@ -43,6 +45,25 @@ def bm25_score(
 def to_fixed(score: float) -> int:
     """Fixed-point int64 (half-up, matches SQL floor(x*2^32 + 0.5))."""
     return math.floor(score * FIXED_POINT_SCALE + 0.5)
+
+
+def contribs_float(
+    idf: float, tfs: np.ndarray, dls: np.ndarray, k1: float, b: float, avgdl: float
+) -> np.ndarray:
+    """Unrounded per-posting BM25 contribution — the association order
+    here IS the cross-engine contract (see CLAUDE.md); every fixed-
+    point path rounds THIS value, possibly after a weight multiply."""
+    tfs_f = tfs.astype(np.float64)
+    dls_f = dls.astype(np.float64)
+    tf_norm = tfs_f / (tfs_f + k1 * ((1.0 - b) + (b * dls_f) / avgdl))
+    return idf * (k1 + 1.0) * tf_norm
+
+
+def contribs_fixed(
+    idf: float, tfs: np.ndarray, dls: np.ndarray, k1: float, b: float, avgdl: float
+) -> np.ndarray:
+    contrib = contribs_float(idf, tfs, dls, k1, b, avgdl)
+    return np.floor(contrib * float(FIXED_POINT_SCALE) + 0.5).astype(np.int64)
 
 
 # SQL fragments kept next to the math they mirror, so a formula change

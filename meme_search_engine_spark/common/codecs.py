@@ -140,6 +140,28 @@ def decode_postings_block(doc_ids_bytes: bytes, tfs_bytes: bytes, dls_bytes: byt
     )
 
 
+def decode_blocks_batch(t: dict, sel: list[int]) -> tuple:
+    """Decode the selected blocks of ONE term in a single varbyte pass
+    per stream (varbyte is self-delimiting, so concatenated buffers
+    decode to concatenated values), instead of 3 decode calls + a
+    cumsum PER BLOCK.  Per-block delta->absolute doc ids fall out of
+    the global cumsum minus each block's prefix offset (the first delta
+    of a block is its absolute min doc id, i.e. a delta from 0).
+
+    This is the serve-latency hot path: a head-term query decodes
+    hundreds of blocks, and per-block numpy fixed overhead (~6 array
+    calls x n_blocks) dominated p50 at a 100k-doc index."""
+    counts = t["n"][sel]
+    deltas = varbyte_decode(b"".join(t["doc_ids"][i] for i in sel))
+    tfs = varbyte_decode(b"".join(t["tfs"][i] for i in sel))
+    dls = varbyte_decode(b"".join(t["dls"][i] for i in sel))
+    cum = np.cumsum(deltas, dtype=np.int64)
+    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    offsets = np.where(starts > 0, cum[np.maximum(starts - 1, 0)], 0)
+    d = cum - np.repeat(offsets, counts)
+    return d, tfs, dls
+
+
 # ------------------------------------------------------------------- fp16
 
 def fp16_encode(vec: np.ndarray) -> bytes:

@@ -167,11 +167,11 @@ def collision_free_partitions(
     partitions — i.e. `repartition(P, key_col)` puts every key group
     on its own task.
 
-    Why: repartitioning by a low-cardinality key (IVF lists, Vamana
-    shards) with P == n_keys leaves hash collisions stacking 2-4
-    whole groups on one task while others idle (guide §2.5; measured:
-    32 shard builds landed on 18 tasks, max 3 per task — the stage
-    wall is 3x one shard build).  Because the keys are dense and the
+    Why: repartitioning by a low-cardinality key (IVF lists) with
+    P == n_keys leaves hash collisions stacking 2-4 whole groups on
+    one task while others idle (guide §2.5; measured: 32 per-key
+    builds landed on 18 tasks, max 3 per task — the stage wall is 3x
+    one build).  Because the keys are dense and the
     hash is Spark's own Murmur3, the search is exact and deterministic.
     Falls back to max_factor * n_keys if no exact P exists below it
     (still a far better spread)."""

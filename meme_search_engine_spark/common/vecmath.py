@@ -19,32 +19,3 @@ def l2_normalize(m: np.ndarray, axis: int = 1) -> np.ndarray:
     norm = np.linalg.norm(m, axis=axis, keepdims=True)
     return m / np.maximum(norm, _EPS)
 
-
-def greedy_diverse_prefix(
-    unit_rows: np.ndarray, threshold: float, k: int
-) -> np.ndarray:
-    """Indices of the first <=k rows that survive greedy near-duplicate
-    suppression: rows are visited IN ORDER (callers pass them already
-    ranked best-first) and a row is dropped iff its cosine to any
-    already-kept row exceeds `threshold`.
-
-    This is the reference's query-time result dedup: rerank the
-    visited set, then greedily skip results with cosine > 0.95 to a
-    kept one (/root/reference/src/query_disk_index.rs:99,514-527 —
-    gram matrix + DEDUPLICATE_THRESHOLD).  Shared by the serving path
-    and the batch diversify kernel so both make bit-identical
-    keep/drop decisions (float64 dot products in the same order).
-
-    unit_rows must be L2-normalized (l2_normalize) — cosine is then a
-    plain dot; zero vectors have cosine 0 to everything and are never
-    suppressed by the threshold (>0) alone."""
-    kept: list[int] = []
-    for i in range(len(unit_rows)):
-        if len(kept) >= k:
-            break
-        if kept and float(
-            np.max(unit_rows[kept] @ unit_rows[i])
-        ) > threshold:
-            continue
-        kept.append(i)
-    return np.asarray(kept, dtype=np.int64)

@@ -258,57 +258,3 @@ def ensure_corpus(base_dir: str, n_docs: int, n_files: int = 8) -> tuple[str, st
         write_queries(queries_path, n_docs)
     return pages_dir, queries_path
 
-
-def generate_embeddings(
-    n_vecs: int, dim: int = 64, n_clusters: int = 64
-) -> tuple[np.ndarray, np.ndarray]:
-    """(vec_ids int64[n], vectors float32[n, dim]) — deterministic
-    clustered synthetic embeddings (counter-hashed like everything
-    else in this module: bit-stable across platforms).  Mild cluster
-    structure (vector = cluster center + noise) so IVF/Vamana probes
-    measure realistic routed workloads, not uniform-sphere
-    degeneracy."""
-    ids = np.arange(n_vecs, dtype=np.int64)
-    centers = np.empty((n_clusters, dim), dtype=np.float64)
-    for j in range(dim):
-        centers[:, j] = _uniform(
-            np.arange(n_clusters, dtype=np.uint64), 1000 + j
-        ) * 2.0 - 1.0
-    cluster = (_splitmix64(ids.astype(np.uint64) ^ np.uint64(0xE1)) %
-               np.uint64(n_clusters)).astype(np.int64)
-    vecs = centers[cluster]
-    for j in range(dim):
-        vecs[:, j] += 0.35 * (
-            _uniform(ids.astype(np.uint64), 2000 + j) * 2.0 - 1.0
-        )
-    return ids, vecs.astype(np.float32)
-
-
-def ensure_embeddings(
-    base_dir: str, n_vecs: int, dim: int = 64, n_files: int = 16
-) -> str:
-    """Idempotently materialize an embeddings parquet dir
-    (vec_id long, embedding array<float>) at the given scale."""
-    out_dir = os.path.join(base_dir, f"emb_{n_vecs}_{dim}")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    ids, vecs = generate_embeddings(n_vecs, dim)
-    per = (n_vecs + n_files - 1) // n_files
-    for f in range(n_files):
-        lo, hi = f * per, min((f + 1) * per, n_vecs)
-        if lo >= hi:
-            break
-        table = pa.table(
-            {
-                "vec_id": pa.array(ids[lo:hi], pa.int64()),
-                "embedding": pa.array(
-                    list(vecs[lo:hi]), pa.list_(pa.float32())
-                ),
-            }
-        )
-        pq.write_table(table, os.path.join(out_dir, f"part-{f:04d}.parquet"))
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return out_dir

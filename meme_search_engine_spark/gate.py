@@ -1,10 +1,8 @@
 """Correctness-gate registry: named (Spark query, DuckDB oracle SQL) pairs.
 
-The grading driver runs each Spark query at sf=0.01 and the matching
-SQL in DuckDB over the same parquet tables (pre-registered views:
-region nation customer supplier part orders lineitem events documents
-embeddings), comparing row count + schema + order-insensitive value
-hash.  Column names and value rounding are aligned on both sides.
+Each Spark query runs at sf=0.01 against the matching SQL in DuckDB
+over the same `documents` parquet table (tools/check_oracle.py),
+comparing row count + schema + order-insensitive value hash.  Column names and value rounding are aligned on both sides.
 
 Entries are keyed by SURVEY.md §2 operator ids where applicable, so the
 judge can walk the inventory line by line.
@@ -454,7 +452,7 @@ QUALIFY row_number() OVER (ORDER BY df DESC, term) <= 100
 # ------------------------------------------------------------ the registry
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from . import gate_relational, gate_pipeline
+    from . import gate_pipeline
 
     out: dict[str, Callable] = {
         "bm25_topk": q_bm25_topk,
@@ -465,10 +463,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_lengths": q_doc_lengths,
         "term_df_top": q_term_df_top,
     }
-    out.update(gate_relational.queries())
     out.update(gate_pipeline.queries())
-    # bm25_topk_dedup is NOT registered: the registry is capped at the
-    # driver's 50-entry run budget, and its coverage is redundant
+    # bm25_topk_dedup is NOT registered: its coverage is redundant
     # (W1 dedup == dd_exact_groups, top-k == bm25_topk).  It stays
     # oracle-checked in tests/test_e2e_bm25.py::test_topk_dedup_oracle.
     return out
@@ -488,7 +484,7 @@ def bm25_topk_dedup_oracle_sql() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    from . import gate_relational, gate_pipeline
+    from . import gate_pipeline
 
     bm25_sql = SQL_BM25_TOPK.replace("{QT}", _gate_query_values_sql()).replace(
         "{QK}", _gate_query_k_sql()
@@ -511,6 +507,5 @@ def oracle_sql() -> dict[str, str]:
         "doc_lengths": SQL_DOC_LENGTHS,
         "term_df_top": SQL_TERM_DF_TOP,
     }
-    out.update(gate_relational.oracle_sql())
     out.update(gate_pipeline.oracle_sql())
     return out

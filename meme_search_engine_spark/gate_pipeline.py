@@ -1,5 +1,5 @@
-"""Gate entries for the training-data-pipeline operators (dedup,
-similarity search, text analysis) over documents/embeddings.
+"""Gate entries for the training-data-pipeline operators (dedup, text
+analysis) over documents.
 
 Every entry has a full DuckDB oracle: hash-heavy ops use md5 (present
 in both engines, bit-identical) as the gate hash strategy — the
@@ -14,7 +14,7 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .ops import dedup, similarity, textstats
+from .ops import dedup, textstats
 
 # tokenization as DuckDB SQL (same as gate.SQL_TOKS)
 _TOKS = (
@@ -25,10 +25,6 @@ _TOKS = (
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # ------------------------------------------------------------------- dedup
@@ -74,161 +70,6 @@ def dd_simhash_pairs(spark, sf_dir):
     JVM aggregates, so DuckDB can replay signature, banding, and
     hamming exactly (r01: xxhash64 + per-doc applyInPandas, no_oracle)."""
     return dedup.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=16, bands=4)
-
-
-# -------------------------------------------------------------- similarity
-
-def ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-10 for query vectors 0..2 (JVM fold)."""
-    emb = _emb(spark, sf_dir)
-    queries = (
-        emb.filter(F.col("vec_id") < 3)
-        .select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-        )
-    )
-    out = similarity.cosine_topk_exact(
-        emb.filter(F.col("vec_id") >= 3), queries, k=10
-    )
-    return out.select(
-        "query_id", "rank", "vec_id", F.round("cosine", 4).alias("cosine")
-    )
-
-
-def hybrid_bm25_cosine_topk(spark, sf_dir):
-    """Fused text+vector ranking: BM25 over `documents` + cosine over
-    `embeddings` (query vector = embedding of vec_id == query_id),
-    all-integer fixed-point fusion 3*bm25 + 1*cos — the reference's
-    mixed text/image query mode (common.rs:215-274 weighted channels;
-    query_disk_index.rs:463-473)."""
-    from .gate import GATE_QUERIES, _corpus
-    from .query.dataframe_engine import hybrid_topk
-
-    c = _corpus(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    qtext = spark.createDataFrame(
-        GATE_QUERIES, "query_id int, text string, k int"
-    )
-    qv = emb.filter(F.col("vec_id") < len(GATE_QUERIES)).select(
-        F.col("vec_id").cast("int").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-    )
-    queries = qtext.join(qv, "query_id")
-    doc_vecs = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
-    out = hybrid_topk(c["tf"], c["term_df"], c["stats"], queries, doc_vecs)
-    return out.select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        "doc_id",
-        F.round("score", 4).alias("score"),
-    )
-
-
-_IVF_IDX_CACHE: dict[str, str] = {}
-
-
-def ann_ivf_index_topk(spark, sf_dir):
-    """Persistent IVF index path: build lists partitioned on disk
-    (ops/ivf_index), probe via partition-pruned scan.  Same
-    deterministic-centroid config as ann_ivf_topk, so the same SQL
-    oracle replays it end-to-end; the production path trains balanced
-    k-means instead (pytest-verified recall + balance)."""
-    import tempfile
-
-    from .ops import ivf_index
-    from .ops.similarity import deterministic_centroids
-
-    emb = _emb(spark, sf_dir)
-    base = emb.filter(F.col("vec_id") >= 3)
-    if sf_dir not in _IVF_IDX_CACHE:
-        out = tempfile.mkdtemp(prefix="gate_ivf_")
-        cents = deterministic_centroids(base, 8)
-        # storage="fp32": the DuckDB oracle replays exact f32 cosines
-        # (no half type in DuckDB 1.0.0); the production fp16 default
-        # (decode-in-probe, recall, bytes halved) is pytest-covered in
-        # tests/test_ops.py::test_ivf_index_fp16_storage
-        ivf_index.build_ivf_index(
-            spark, base, out, spill=1, centroids=cents, storage="fp32"
-        )
-        _IVF_IDX_CACHE[sf_dir] = out
-    qpd = (
-        emb.filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        .toPandas()
-    )
-    res = ivf_index.ivf_search(
-        spark, _IVF_IDX_CACHE[sf_dir], qpd, k=10, n_probe=3
-    )
-    return res.select(
-        "query_id", "rank", "vec_id", F.round("cosine", 4).alias("cosine")
-    )
-
-
-_PQ_M, _PQ_DSUB, _PQ_KSUB = 4, 16, 8
-
-
-def pq_adc_topk_gate(spark, sf_dir):
-    """PQ encode + ADC top-k with FIXED data-derived codebooks — the
-    storage tier the reference's DiskANN shards use (64-byte codes +
-    per-query lookup tables, diskann/aopq_train.py).  Codebook (j, k)
-    = subspace j of the l2-normalized embedding of vec_id 3+k — fully
-    deterministic and SQL-expressible, so DuckDB replays the ENTIRE
-    path: normalize -> per-subspace argmin-L2 assignment (uint8 code)
-    -> ADC lookup-table scoring -> top-k.  The trained-codebook
-    production path (train_pq k-means) shares every plan shape and is
-    recall-tested in tests/test_pq.py."""
-    import numpy as np
-
-    from .common.vecmath import l2_normalize
-    from .ops.pq import pq_adc_topk, pq_encode
-
-    emb = _emb(spark, sf_dir)
-    cb = (
-        emb.filter(
-            (F.col("vec_id") >= 3) & (F.col("vec_id") < 3 + _PQ_KSUB)
-        )
-        .orderBy("vec_id")
-        .collect()
-    )
-    x = l2_normalize(np.array([r["embedding"] for r in cb], dtype=np.float64))
-    books = np.stack(
-        [x[:, j * _PQ_DSUB : (j + 1) * _PQ_DSUB] for j in range(_PQ_M)]
-    )
-    codes = pq_encode(emb.filter(F.col("vec_id") >= 3), books)
-    qpd = (
-        emb.filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        .toPandas()
-    )
-    # quantize_scale=1e4: per-subspace LUT entries are fixed-point
-    # BEFORE summation, so both engines rank exact integer sums — an
-    # unquantized float sum has engine-specific association order and
-    # can flip near-tied ADC ranks (r4 ADVICE).  _SQL_PQ_ADC sums the
-    # same rounded BIGINTs — change together.
-    out = pq_adc_topk(codes, books, qpd, k=10, quantize_scale=1e4)
-    return out.select(
-        "query_id", "rank", "vec_id", F.round("cosine", 4).alias("cosine")
-    )
-
-
-def ann_ivf_topk(spark, sf_dir):
-    """IVF-bucketed approximate top-k.  NOT registered: its coverage is
-    redundant with ann_ivf_index_topk (same deterministic-centroid
-    config, same _SQL_IVF oracle, plus the persistent layout) and the
-    registry is capped at the driver's 50-entry run budget; recall and
-    oracle equivalence stay pytest-verified (tests/test_ops.py)."""
-    emb = _emb(spark, sf_dir)
-    qpd = (
-        emb.filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        .toPandas()
-    )
-    out = similarity.ivf_topk(
-        spark, emb.filter(F.col("vec_id") >= 3), qpd, k=10, n_lists=8, n_probe=3
-    )
-    return out.select(
-        "query_id", "rank", "vec_id", F.round("cosine", 4).alias("cosine")
-    )
 
 
 # --------------------------------------------------------------- textstats
@@ -342,106 +183,9 @@ SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming
 FROM ham WHERE hamming <= 16
 """
 
-# denominator clamped at 1e-30 (all-zero vector -> cosine 0, not NaN)
-# to match dataframe_engine._cosine_fixed and serve.search_hybrid
-_SQL_COS = (
-    "list_dot_product({a}, {b}) / greatest(sqrt(list_dot_product({a}, {a})) "
-    "* sqrt(list_dot_product({b}, {b})), 1e-30)"
-)
-
-_SQL_PQ_ADC = """
-WITH nrm AS (
-  SELECT vec_id, embedding,
-         greatest(sqrt(list_dot_product(embedding, embedding)), 1e-30) AS n
-  FROM embeddings
-),
-normv AS (
-  SELECT vec_id, list_transform(embedding, x -> x / n) AS v FROM nrm
-),
-cw AS (  -- codeword (j, k) = subspace j of codebook row k
-  SELECT t.j AS j, n.vec_id - 3 AS k,
-         list_slice(n.v, t.j*16+1, t.j*16+16) AS c
-  FROM normv n, range(0, 4) t(j)
-  WHERE n.vec_id >= 3 AND n.vec_id < 11
-),
-sub AS (
-  SELECT n.vec_id, t.j AS j, list_slice(n.v, t.j*16+1, t.j*16+16) AS s
-  FROM normv n, range(0, 4) t(j)
-  WHERE n.vec_id >= 3
-),
-enc AS (  -- argmin_k (-2 s.c + c.c): np.argmin tie-break = first k
-  SELECT vec_id, j, k FROM (
-    SELECT sub.vec_id, sub.j, cw.k,
-      row_number() OVER (PARTITION BY sub.vec_id, sub.j ORDER BY
-        (-2 * list_dot_product(sub.s, cw.c) + list_dot_product(cw.c, cw.c))
-        ASC, cw.k ASC) AS rn
-    FROM sub JOIN cw ON cw.j = sub.j)
-  WHERE rn = 1
-),
-q AS (SELECT vec_id AS query_id, v AS qv FROM normv WHERE vec_id < 3),
-scored AS (  -- ADC: sum_j round(<q_sub_j, codeword(j, code_j)> * 1e4)
-  -- per-subspace fixed-point BEFORE the sum: exact BIGINT totals,
-  -- association-order-proof ranking (matches pq_adc_topk
-  -- quantize_scale=1e4 — change together)
-  SELECT q.query_id, e.vec_id,
-         sum(CAST(round(list_dot_product(
-               list_slice(q.qv, e.j*16+1, e.j*16+16), cw.c) * 10000)
-             AS BIGINT)) / 10000.0
-           AS cosine
-  FROM enc e JOIN cw ON cw.j = e.j AND cw.k = e.k
-  CROSS JOIN q
-  GROUP BY q.query_id, e.vec_id
-)
-SELECT query_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank,
-       vec_id, round(cosine, 4) AS cosine
-FROM scored
-QUALIFY rank <= 10
-"""
-
-_SQL_IVF = f"""
-WITH v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 3),
-q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE vec_id < 3),
-cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS list_id,
-         embedding AS cvec
-  FROM (SELECT vec_id, embedding FROM v ORDER BY vec_id LIMIT 8)
-),
-assign AS (
-  SELECT vec_id, embedding, list_id FROM (
-    SELECT v.vec_id, v.embedding, c.list_id,
-      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        {_SQL_COS.format(a="v.embedding", b="c.cvec")} DESC, c.list_id) AS rn
-    FROM v CROSS JOIN cents c)
-  WHERE rn = 1
-),
-probe AS (
-  SELECT query_id, qvec, list_id FROM (
-    SELECT q.query_id, q.qvec, c.list_id,
-      row_number() OVER (PARTITION BY q.query_id ORDER BY
-        {_SQL_COS.format(a="q.qvec", b="c.cvec")} DESC, c.list_id) AS rn
-    FROM q CROSS JOIN cents c)
-  WHERE rn <= 3
-),
-scored AS (
-  SELECT p.query_id, a.vec_id,
-         {_SQL_COS.format(a="a.embedding", b="p.qvec")} AS cosine
-  FROM probe p JOIN assign a USING (list_id)
-)
-SELECT query_id,
-  CAST(row_number() OVER (PARTITION BY query_id
-       ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank,
-  vec_id, round(cosine, 4) AS cosine
-FROM scored QUALIFY rank <= 10
-"""
-
 ORACLES: dict[str, str] = {
     "dd_minhash_candidates": _SQL_MINHASH,
     "dd_simhash_pairs": _SQL_SIMHASH,
-    "ann_ivf_index_topk": _SQL_IVF,
-    "pq_adc_topk": _SQL_PQ_ADC,
     "dd_exact_groups": """
         SELECT md5(text) AS fingerprint, count(*) AS n_dups,
                min(doc_id) AS keep_doc_id
@@ -465,26 +209,6 @@ ORACLES: dict[str, str] = {
         SELECT doc_a, doc_b, inter, round(jaccard, 4) AS jaccard
         FROM j WHERE jaccard >= 0.05
         ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20
-    """,
-    "ann_cosine_topk": """
-        WITH q AS (
-          SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-          WHERE vec_id < 3
-        ),
-        v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 3),
-        scored AS (
-          SELECT q.query_id, v.vec_id,
-                 list_dot_product(v.embedding, q.qvec)
-                 / greatest(sqrt(list_dot_product(v.embedding, v.embedding))
-                    * sqrt(list_dot_product(q.qvec, q.qvec)), 1e-30) AS cosine
-          FROM v CROSS JOIN q
-        )
-        SELECT query_id,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank,
-               vec_id, round(cosine, 4) AS cosine
-        FROM scored
-        QUALIFY rank <= 10
     """,
     "ts_quality_scores": f"""
         WITH d AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
@@ -526,83 +250,16 @@ ORACLES: dict[str, str] = {
     """,
 }
 
-def _hybrid_oracle_sql() -> str:
-    """Built lazily: the query VALUES come from gate.GATE_QUERIES via
-    the same tokenizer the engine uses (gate.py imports this module
-    lazily, so a top-level import here would be circular)."""
-    from .common.bm25 import B, FIXED_POINT_SCALE, K1
-    from .query.dataframe_engine import COSINE_STEP_FIXED, COSINE_STEPS
-    from .gate import GATE_QUERIES, _gate_query_k_sql, _gate_query_values_sql
-
-    n_queries = len(GATE_QUERIES)
-    return f"""
-        WITH docs AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-        tf0 AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM docs),
-        tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM tf0 GROUP BY 1,2,3),
-        stats AS (
-          SELECT count(*) AS n, avg(dl) AS avgdl
-          FROM (SELECT doc_id, len(toks) AS dl FROM docs)
-        ),
-        qt AS (SELECT DISTINCT * FROM (VALUES {_gate_query_values_sql()})
-               AS t(query_id, term)),
-        qk AS (SELECT * FROM (VALUES {_gate_query_k_sql()}) AS t(query_id, k)),
-        dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        contribs AS (
-          SELECT q.query_id, tf.doc_id,
-            CAST(floor(ln((s.n - d.df + 0.5)/(d.df + 0.5) + 1.0) * {K1 + 1.0}
-              * (tf.tf/(tf.tf + {K1}*(1.0 - {B} + {B}*tf.dl/s.avgdl)))
-              * {float(FIXED_POINT_SCALE)} + 0.5) AS BIGINT) AS contrib
-          FROM tf
-          JOIN qt q ON tf.term = q.term
-          JOIN dfreq d ON d.term = tf.term
-          CROSS JOIN stats s
-        ),
-        bm AS (SELECT query_id, doc_id, sum(contrib) AS bm25_fixed
-               FROM contribs GROUP BY 1,2),
-        qv AS (SELECT CAST(vec_id AS INTEGER) AS query_id, embedding AS qvec
-               FROM embeddings WHERE vec_id < {n_queries}),
-        cosd AS (
-          SELECT q.query_id, e.vec_id AS doc_id,
-                 CAST(round(list_dot_product(e.embedding, q.qvec)
-                   / greatest(sqrt(list_dot_product(e.embedding, e.embedding))
-                      * sqrt(list_dot_product(q.qvec, q.qvec)), 1e-30)
-                   * {COSINE_STEPS}, 0) AS BIGINT) AS cos4
-          FROM embeddings e CROSS JOIN qv q
-        ),
-        fused AS (
-          SELECT c.query_id, c.doc_id,
-                 3 * COALESCE(b.bm25_fixed, 0)
-                 + 1 * c.cos4 * {COSINE_STEP_FIXED} AS sf
-          FROM cosd c
-          LEFT JOIN bm b ON b.query_id = c.query_id AND b.doc_id = c.doc_id
-        ),
-        ranked AS (
-          SELECT query_id, doc_id, sf,
-                 row_number() OVER (PARTITION BY query_id
-                      ORDER BY sf DESC, doc_id) AS rank
-          FROM fused
-        )
-        SELECT r.query_id, CAST(r.rank AS INTEGER) AS rank, r.doc_id,
-               round(r.sf / {float(FIXED_POINT_SCALE)}, 4) AS score
-        FROM ranked r JOIN qk ON qk.query_id = r.query_id
-        WHERE r.rank <= qk.k
-    """
-
-
 _FNS = {
     # ts_* first: r2's driver run truncated the registry tail and
     # dropped ts_fingerprints_md5 — keep unique coverage off the tail.
     "ts_fingerprints_md5": ts_fingerprints_md5,
     "ts_quality_scores": ts_quality_scores,
     "ts_lang_id": ts_lang_id,
-    "hybrid_bm25_cosine_topk": hybrid_bm25_cosine_topk,
     "dd_exact_groups": dd_exact_groups,
     "dd_jaccard_top_pairs": dd_jaccard_top_pairs,
     "dd_minhash_candidates": dd_minhash_candidates,
     "dd_simhash_pairs": dd_simhash_pairs,
-    "ann_cosine_topk": ann_cosine_topk,
-    "ann_ivf_index_topk": ann_ivf_index_topk,
-    "pq_adc_topk": pq_adc_topk_gate,
 }
 
 
@@ -613,8 +270,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     # key order mirrors queries() exactly: whichever dict the driver
     # iterates, unique-coverage entries stay off the truncatable tail
-    oracles = dict(ORACLES)
-    oracles["hybrid_bm25_cosine_topk"] = _hybrid_oracle_sql()
-    out = {k: oracles[k] for k in _FNS if k in oracles}
-    out.update({k: v for k, v in oracles.items() if k not in out})
-    return out
+    return {k: ORACLES[k] for k in _FNS}

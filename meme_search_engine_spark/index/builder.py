@@ -525,7 +525,11 @@ def _write_manifest(
     out_dir: str, cfg: IndexConfig, stats: dict, snapshot: str
 ) -> dict:
     """manifest.json is the COMMIT MARKER: written last, after every
-    derived dir (segments/term_stats/stats.json) is consistent."""
+    derived dir (segments/term_stats/stats.json) is consistent.  Written
+    to a hidden tmp file and swapped in with os.replace, so a concurrent
+    reader sees the old or the new manifest, never a torn one."""
+    import uuid
+
     manifest = {
         "format_version": 2,
         "config": asdict(cfg),
@@ -533,8 +537,10 @@ def _write_manifest(
         "input_snapshot": snapshot,
         "n_parts": cfg.n_parts,
     }
-    with open(os.path.join(out_dir, "manifest.json"), "w") as fh:
+    tmp = os.path.join(out_dir, f".manifest.json.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as fh:
         json.dump(manifest, fh, indent=1)
+    os.replace(tmp, os.path.join(out_dir, "manifest.json"))
     return manifest
 
 

@@ -1,9 +1,10 @@
-"""Training-data-pipeline operators: deduplication, similarity search,
-text analysis, multimodal plumbing — the ops a 100 TB web-text corpus
-pipeline needs around the index itself.
+"""Training-data-pipeline operators around the index: deduplication,
+text analysis, and the offline embedding library (brute-force/IVF
+similarity, balanced k-means, PQ, multimodal decode plumbing) — the
+ops a 100 TB web-text corpus pipeline needs beside BM25 retrieval.
+None of the embedding ops is on the serving path.
 
 Reference analogues: sliding-window simhash+URL dedup
-(/root/reference/src/dump_processor.rs:332-391), query-time cosine
-near-dup suppression (src/query_disk_index.rs:99,514-527), CLIP-space
-brute-force and DiskANN ANN search, quality scoring (meme-rater/*).
+(/root/reference/src/dump_processor.rs:332-391), CLIP-space
+brute-force and IVF search, quality scoring (meme-rater/*).
 """

@@ -282,7 +282,7 @@ def pq_adc_topk(
             # boundary ties are the common case here, and argpartition
             # would keep an arbitrary one (nondeterministic under
             # repartitioning, wrong vs the vec_id tie-break)
-            from .similarity import partial_topk_indices
+            from ..common.topk import partial_topk_indices
 
             idx = partial_topk_indices(scores, vec_ids, kk)
             top = np.take_along_axis(scores, idx, axis=0).T.ravel()

@@ -16,6 +16,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from ..common.topk import partial_topk_indices
 from ..common.vecmath import l2_normalize
 
 import pyspark.sql.functions as F
@@ -53,34 +54,6 @@ def cosine_topk_exact(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "vec_id", "cosine")
     )
-
-
-def partial_topk_indices(
-    scores: np.ndarray, vec_ids: np.ndarray, kk: int
-) -> np.ndarray:
-    """Column-wise top-kk row indices of ``scores`` (B, Q) honoring the
-    GLOBAL tie-break (score desc, vec_id asc) at the k-boundary: ties
-    at the threshold keep the smallest vec_ids, so every partition
-    emits a superset of its contribution to the exact global top-k.
-    A plain argpartition keeps an ARBITRARY tied element — wrong the
-    moment scores tie exactly (duplicate vectors, or PQ codes, where
-    equal codes always score equal).  O(B) per query via a threshold
-    partition, not a full sort."""
-    n, q = scores.shape
-    kk = min(kk, n)  # cannot return more rows than exist
-    idx = np.empty((kk, q), dtype=np.int64)
-    if kk == n:
-        idx[:] = np.arange(n)[:, None]
-        return idx
-    for qi in range(q):
-        sc = scores[:, qi]
-        thr = np.partition(sc, n - kk)[n - kk]
-        above = np.flatnonzero(sc > thr)
-        need = kk - len(above)
-        tied = np.flatnonzero(sc == thr)
-        tied = tied[np.argsort(vec_ids[tied], kind="stable")[:need]]
-        idx[:, qi] = np.concatenate([above, tied])
-    return idx
 
 
 def cosine_topk_gemm(

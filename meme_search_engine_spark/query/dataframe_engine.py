@@ -58,6 +58,8 @@ def query_terms_local(
     has_k = "k" in queries.columns
     seen = set()
     for r in rows:
+        if r["text"] is None:
+            continue  # explode(tokens(null)) yields no rows either
         k = int(r["k"]) if has_k and r["k"] is not None else int(default_k)
         for term in _tok(r["text"]):
             seen.add((r["query_id"], k, term))
@@ -255,257 +257,3 @@ def bm25_topk(
         )
     )
 
-
-# --------------------------------------------------- hybrid text+vector
-
-# the embedding channel is quantized to 1e-4 cosine steps, then scaled
-# into the BM25 fixed-point space with an INTEGER factor so the fusion
-# is exact int64 arithmetic (cross-engine hash-stable); 1e-4 matches
-# the precision the ann gates already verified across Spark and DuckDB
-COSINE_STEPS = 10_000
-COSINE_STEP_FIXED = FIXED_POINT_SCALE // COSINE_STEPS
-
-
-def _cosine_fixed(vec: str, qvec: str):
-    """round(cosine * 1e4) as int64 — the quantized embedding channel."""
-    dot = F.aggregate(
-        F.zip_with(vec, qvec, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(c, c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    # clamp the denominator so an all-zero embedding scores cosine 0
-    # (not NaN -> null) — same convention as serve.search_hybrid's
-    # np.maximum(denom, 1e-30) and l2_normalize's zero-row handling
-    cos = dot / F.greatest(norm(vec) * norm(qvec), F.lit(1e-30))
-    return F.round(cos * F.lit(float(COSINE_STEPS)), 0).cast("long")
-
-
-def hybrid_topk(
-    tf: DataFrame,
-    term_df: DataFrame,
-    stats: dict,
-    queries: DataFrame,
-    doc_vecs: DataFrame,
-    w_text: int = 3,
-    w_vec: int = 1,
-    default_k: int = 10,
-) -> DataFrame:
-    """Fused text+vector ranking — the reference's mixed query mode:
-    one query carries BOTH text terms and an embedding, and every
-    channel contributes weight_i * score_i to a single ranked list
-    (/root/reference/src/common.rs:215-274 query algebra;
-    query_disk_index.rs:463-473 per-channel weights at score time).
-
-    queries: (query_id, text, k, qvec array<float>);
-    doc_vecs: (doc_id, embedding array<float>).
-    score_fixed = w_text * bm25_fixed + w_vec * cos4 * COSINE_STEP_FIXED
-    — all-integer fusion (hash-stable across engines).
-
-    DENSE: every doc scores the cosine channel (query broadcast, JVM
-    fold, no shuffle on the doc side until the per-query aggregate).
-    Exact, and the right oracle — but at 10^12 docs the dense channel
-    is the bottleneck; use hybrid_topk_pruned there."""
-    qt = query_terms(queries.select("query_id", "text", "k"), default_k)
-    qdf = qt.join(term_df, "term_hash")
-    scored = tf.join(F.broadcast(qdf), "term_hash").withColumn(
-        "contrib_fixed", _contrib_fixed(stats["N"], stats["avgdl"])
-    )
-    bm = scored.groupBy("query_id", "doc_id").agg(
-        F.sum("contrib_fixed").alias("bm25_fixed")
-    )
-    qv = queries.select("query_id", "k", "qvec")
-    cos = doc_vecs.crossJoin(F.broadcast(qv)).withColumn(
-        "cos4", _cosine_fixed("embedding", "qvec")
-    )
-    fused = cos.join(bm, ["query_id", "doc_id"], "left").withColumn(
-        "score_fixed",
-        F.lit(w_text) * F.coalesce(F.col("bm25_fixed"), F.lit(0))
-        + F.lit(w_vec) * F.col("cos4") * F.lit(COSINE_STEP_FIXED),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_fixed"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select(
-            "query_id",
-            "rank",
-            "doc_id",
-            "score_fixed",
-            (F.col("score_fixed") / F.lit(float(FIXED_POINT_SCALE))).alias(
-                "score"
-            ),
-        )
-    )
-
-
-def hybrid_topk_pruned(
-    spark,
-    tf: DataFrame,
-    term_df: DataFrame,
-    stats: dict,
-    queries: DataFrame,
-    doc_vecs: DataFrame,
-    w_text: int = 3,
-    w_vec: int = 1,
-    default_k: int = 10,
-    n_candidates: int = 50,
-    vec_candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Scale path for hybrid_topk: candidate generation then exact
-    fused rerank — the reference reranks a shard's ANN candidates with
-    the full score channels (query_disk_index.rs:486-527 gram-matrix
-    rerank) instead of scoring the corpus densely.
-
-    Candidates per query = (BM25 top-C) ∪ (cosine top-C); both
-    channels are then re-scored EXACTLY on that union with the same
-    integer fusion as hybrid_topk.  C >= k trades recall for cost the
-    same way the reference's beam does; equality to the dense ranking
-    on the test corpora is pytest-asserted.
-
-    The fusion join touches only Q x 2C broadcastable candidate rows —
-    never docs x Q.  Channel candidate cost: text top-C is the
-    broadcast-join BM25 aggregate (only term-matching postings move);
-    the DEFAULT vector top-C is cosine_topk_exact — a shuffle-free
-    per-partition GEMM scan, linear in corpus size — so at 10^12 docs
-    pass `vec_candidates` (query_id, doc_id) from the partition-pruned
-    persistent index instead (ops.ivf_index.ivf_search / pq ADC),
-    trading exactness of the candidate SET for sublinear probe cost,
-    exactly like the reference's shard routing."""
-    from ..ops.similarity import cosine_topk_exact
-
-    # bm25_topk honors per-query k; candidate generation overrides to C
-    cand_text = bm25_topk(
-        tf, term_df, stats,
-        queries.select(
-            "query_id", "text", F.lit(n_candidates).alias("k")
-        ),
-        default_k=n_candidates,
-    ).select("query_id", "doc_id")
-    if vec_candidates is not None:
-        cand_vec = vec_candidates.select("query_id", "doc_id")
-    else:
-        cand_vec = cosine_topk_exact(
-            doc_vecs.select(
-                F.col("doc_id").alias("vec_id"), "embedding"
-            ),
-            queries.select("query_id", "qvec"),
-            k=n_candidates,
-        ).select("query_id", F.col("vec_id").alias("doc_id"))
-    cands = cand_text.union(cand_vec).distinct()
-
-    qt = query_terms(queries.select("query_id", "text", "k"), default_k)
-    qdf = qt.join(term_df, "term_hash")
-    bm = (
-        tf.join(F.broadcast(qdf), "term_hash")
-        .join(F.broadcast(cands), ["query_id", "doc_id"])
-        .withColumn(
-            "contrib_fixed", _contrib_fixed(stats["N"], stats["avgdl"])
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib_fixed").alias("bm25_fixed"))
-    )
-    qv = queries.select("query_id", "k", "qvec")
-    cos = (
-        doc_vecs.join(
-            F.broadcast(cands), "doc_id"
-        )
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("cos4", _cosine_fixed("embedding", "qvec"))
-    )
-    fused = cos.join(bm, ["query_id", "doc_id"], "left").withColumn(
-        "score_fixed",
-        F.lit(w_text) * F.coalesce(F.col("bm25_fixed"), F.lit(0))
-        + F.lit(w_vec) * F.col("cos4") * F.lit(COSINE_STEP_FIXED),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_fixed"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select(
-            "query_id",
-            "rank",
-            "doc_id",
-            "score_fixed",
-            (F.col("score_fixed") / F.lit(float(FIXED_POINT_SCALE))).alias(
-                "score"
-            ),
-        )
-    )
-
-
-def diversify_topk(
-    ranked: DataFrame,
-    doc_vecs: DataFrame,
-    k: int = 10,
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Query-time near-duplicate suppression of RESULTS — the
-    reference's serving behavior of reranking the visited set and
-    greedily dropping results with cosine > threshold to an
-    already-kept one (/root/reference/src/query_disk_index.rs:99,
-    514-527: gram matrix + DEDUPLICATE_THRESHOLD 0.95).
-
-    ranked: a candidate POOL per query — (query_id, doc_id,
-    score_fixed, ...) ranked output deeper than the final k (e.g.
-    hybrid_topk_pruned with per-query k widened to C); pools of only
-    k rows can't replace suppressed results.  doc_vecs: (doc_id,
-    embedding).  Candidates without an embedding row drop out (same
-    inner-join semantics as the hybrid engines).
-
-    Per query: visit candidates in (-score_fixed, doc_id) order, drop
-    any with cosine > threshold to a kept result, emit the first k
-    survivors re-ranked 1..k.  The keep/drop decisions come from the
-    SAME shared kernel as LocalSearcher.search_hybrid(dedup_threshold=)
-    (common.vecmath.greedy_diverse_prefix) — serve == batch
-    bit-identically (pytest).  Greedy selection is inherently
-    sequential in k but per-QUERY independent, so it distributes as
-    one applyInPandas over query groups of <=pool rows each — the
-    same per-query grouping shape as the WAND merge, never a
-    corpus-sized group."""
-    import numpy as np
-    import pandas as pd
-
-    from ..common.vecmath import greedy_diverse_prefix, l2_normalize
-
-    qt = dict(ranked.dtypes)["query_id"]
-    schema = (
-        f"query_id {qt}, rank int, doc_id long, score_fixed long, "
-        "score double"
-    )
-    pool = ranked.join(doc_vecs, "doc_id").select(
-        "query_id", "doc_id", "score_fixed", "embedding"
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["score_fixed", "doc_id"], ascending=[False, True],
-            kind="mergesort",
-        ).reset_index(drop=True)
-        unit = l2_normalize(
-            np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        )
-        keep = greedy_diverse_prefix(unit, threshold, k)
-        out = pdf.iloc[keep]
-        return pd.DataFrame(
-            {
-                "query_id": out["query_id"].to_numpy(),
-                "rank": np.arange(1, len(out) + 1, dtype=np.int32),
-                "doc_id": out["doc_id"].to_numpy(np.int64),
-                "score_fixed": out["score_fixed"].to_numpy(np.int64),
-                "score": out["score_fixed"].to_numpy(np.int64)
-                / float(FIXED_POINT_SCALE),
-            }
-        )
-
-    return pool.groupBy("query_id").applyInPandas(kernel, schema)

@@ -17,22 +17,33 @@ Response JSON:
 GET /presets lists saved presets; PUT semantics via
 {"save_preset": "name", "text": [[...], ...]} persist one.
 
-Hybrid text+vector queries (the reference's mixed text/image mode):
-    {"query": "free text", "qvec": [f32...], "weights": [3, 1],
-     "top_k": 10}
-served when the server is constructed with embeddings_path (exact
-rerank source) AND ivf_dir (partition-pruned candidate index); raw
-image bytes still 400 (embed client-side, pass qvec).
+Every POST gets exactly one reply and one count in /metrics: 200 for
+an answer, 400 for a malformed body (not a JSON object, a bad top_k,
+an unknown field or query shape), 404 for an unknown preset, and a
+500 counted as kind="internal" for any other failure.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .serve import LocalSearcher
+
+# request field that selects the query shape -> metrics kind, in
+# routing priority order
+_SHAPES = {
+    "save_preset": "save_preset",
+    "preset": "preset",
+    "text": "weighted",
+    "query": "simple",
+}
+_FIELDS = frozenset(_SHAPES) | {"top_k"}
+MAX_TOP_K = 10_000
 
 
 class _Server(ThreadingHTTPServer):
@@ -159,11 +170,48 @@ class Metrics:
 def make_handler(
     searcher: LocalSearcher,
     presets: PresetStore,
-    embeddings_path: str | None = None,
     metrics: Metrics | None = None,
-    ivf_dir: str | None = None,
 ):
     metrics = metrics or Metrics()
+    log = logging.getLogger(__name__)
+
+    def parse(raw: bytes) -> tuple[str, dict, int]:
+        """(shape, request, k) of a POST body; ValueError/TypeError
+        when it is malformed."""
+        req = json.loads(raw or b"{}")
+        if not isinstance(req, dict):
+            raise ValueError("body must be a JSON object")
+        unknown = sorted(set(req) - _FIELDS)
+        shape = next((f for f in _SHAPES if f in req), None)
+        if unknown or shape is None:
+            raise ValueError(
+                f"query shape not supported (unknown fields {unknown}); "
+                "need 'text', 'query', or 'preset'"
+            )
+        k = int(req.get("top_k", 10))
+        if not 1 <= k <= MAX_TOP_K:
+            raise ValueError(f"top_k must be in [1, {MAX_TOP_K}]")
+        return shape, req, k
+
+    def answer(shape: str, req: dict, k: int) -> tuple[int, dict]:
+        if shape == "save_preset":
+            if "text" not in req:
+                return 400, {"error": "save_preset needs 'text' terms"}
+            terms = [(str(t), float(w)) for t, w in req["text"]]
+            presets.save(str(req["save_preset"]), terms)
+            return 200, {"saved": str(req["save_preset"])}
+        if shape == "preset":
+            terms = presets.get(str(req["preset"]))
+            if terms is None:
+                return 404, {"error": f"unknown preset {req['preset']!r}"}
+            matches = searcher.search_weighted(terms, k, with_urls=True)
+        elif shape == "text":
+            terms = [(str(t), float(w)) for t, w in req["text"]]
+            matches = searcher.search_weighted(terms, k, with_urls=True)
+        else:
+            matches = searcher.search(str(req["query"]), k, with_urls=True)
+        return 200, {"matches": matches}
+
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, fmt, *args):  # quiet
             pass
@@ -177,126 +225,22 @@ def make_handler(
             self.wfile.write(body)
 
         def do_POST(self):
+            kind, ms = "invalid", 0.0
             try:
                 length = int(self.headers.get("Content-Length", "0"))
-                req = json.loads(self.rfile.read(length) or b"{}")
-            except (ValueError, json.JSONDecodeError):
-                return self._reply(400, {"error": "invalid JSON body"})
-            if "images" in req:
-                return self._reply(
-                    400,
-                    {
-                        "error": "raw image terms are not supported; embed "
-                        "client-side and pass {'qvec': [...]} for the "
-                        "hybrid text+vector mode"
-                    },
-                )
-            k = int(req.get("top_k", 10))
-            if k < 1:
-                return self._reply(400, {"error": "top_k must be >= 1"})
-            if k > 10_000:
-                # k feeds n_candidates (max(k, ...)) and LocalVamana's
-                # beam (max(manifest_beam, k)): an unclamped top_k is
-                # the same exact-rerank-over-the-whole-table DoS the
-                # pool clamps below exist to prevent (ADVICE r07)
-                return self._reply(
-                    400, {"error": "top_k must be <= 10000"}
-                )
-            import time as _time
-
-            kind = (
-                "hybrid" if "qvec" in req
-                else "preset" if "preset" in req
-                else "weighted" if "text" in req
-                else "simple"
-            )
-            t0 = _time.time()
-            try:
-                if "save_preset" in req:
-                    if "text" not in req:
-                        return self._reply(
-                            400, {"error": "save_preset needs 'text' terms"}
-                        )
-                    terms = [(str(t), float(w)) for t, w in req["text"]]
-                    presets.save(str(req["save_preset"]), terms)
-                    return self._reply(
-                        200, {"saved": str(req["save_preset"])}
-                    )
-                if "qvec" in req:
-                    # hybrid text+vector query — the reference's mixed
-                    # text/image channels (query_disk_index.rs:463-527)
-                    if embeddings_path is None or ivf_dir is None:
-                        return self._reply(
-                            400,
-                            {
-                                "error": "server started without an "
-                                "embeddings table + IVF index; hybrid "
-                                "queries disabled"
-                            },
-                        )
-                    qvec = [float(x) for x in req["qvec"]]
-                    # per-position defaults: [5] means w_text=5 with the
-                    # DEFAULT w_vec=1 (not w_vec=3)
-                    w_raw = req.get("weights", [])
-                    if not isinstance(w_raw, list) or len(w_raw) > 2:
-                        return self._reply(
-                            400,
-                            {"error": "weights must be a list of <=2 numbers"},
-                        )
-                    w_text = w_raw[0] if len(w_raw) > 0 else 3
-                    w_vec = w_raw[1] if len(w_raw) > 1 else 1
-                    # optional query-time near-dup suppression of
-                    # results (the reference's DEDUPLICATE_THRESHOLD
-                    # 0.95 gram-matrix drop, query_disk_index.rs:99)
-                    dt = req.get("dedup_threshold")
-                    # pool-sizing knobs per request (the reference's
-                    # QueryRequest carries per-query config,
-                    # common.rs:201-209) — clamped: the body is
-                    # untrusted, so 0 / negative / giant values never
-                    # reach ivf.candidates (a huge pool is an exact
-                    # rerank over the whole table)
-                    n_cand = max(
-                        k, min(int(req.get("n_candidates", 50)), 10_000)
-                    )
-                    n_probe = max(
-                        1, min(int(req.get("n_probe", 8)), 256)
-                    )
-                    matches = searcher.search_hybrid(
-                        str(req.get("query", "")),
-                        qvec,
-                        embeddings_path,
-                        k,
-                        w_text=int(w_text),
-                        w_vec=int(w_vec),
-                        with_urls=True,
-                        ivf_dir=ivf_dir,
-                        n_candidates=n_cand,
-                        n_probe=n_probe,
-                        dedup_threshold=(
-                            float(dt) if dt is not None else None
-                        ),
-                    )
-                elif "preset" in req:
-                    terms = presets.get(str(req["preset"]))
-                    if terms is None:
-                        return self._reply(
-                            404, {"error": f"unknown preset {req['preset']!r}"}
-                        )
-                    matches = searcher.search_weighted(terms, k, with_urls=True)
-                elif "text" in req:
-                    terms = [(str(t), float(w)) for t, w in req["text"]]
-                    matches = searcher.search_weighted(terms, k, with_urls=True)
-                elif "query" in req:
-                    matches = searcher.search(str(req["query"]), k, with_urls=True)
-                else:
-                    return self._reply(
-                        400, {"error": "need 'text', 'query', or 'preset'"}
-                    )
+                shape, req, k = parse(self.rfile.read(length))
+                kind = _SHAPES[shape]
+                t0 = time.time()
+                code, payload = answer(shape, req, k)
+                ms = (time.time() - t0) * 1000.0
             except (TypeError, ValueError) as e:
-                metrics.observe(kind, 0.0, ok=False)
-                return self._reply(400, {"error": f"bad request: {e}"})
-            metrics.observe(kind, (_time.time() - t0) * 1000.0, ok=True)
-            self._reply(200, {"matches": matches})
+                code, payload = 400, {"error": f"bad request: {e}"}
+            except Exception as e:
+                log.exception("query failed")
+                kind = "internal"
+                code, payload = 500, {"error": f"internal error: {type(e).__name__}"}
+            metrics.observe(kind, ms, ok=code == 200)
+            self._reply(code, payload)
 
         def do_GET(self):
             if self.path == "/metrics":
@@ -337,16 +281,11 @@ class SearchServer:
         index_dir: str,
         host: str = "127.0.0.1",
         port: int = 0,
-        embeddings_path: str | None = None,
-        ivf_dir: str | None = None,
     ):
         self.searcher = LocalSearcher(index_dir)
         self.presets = PresetStore(index_dir)
         self._httpd = _Server(
-            (host, port),
-            make_handler(
-                self.searcher, self.presets, embeddings_path, ivf_dir=ivf_dir
-            ),
+            (host, port), make_handler(self.searcher, self.presets)
         )
         self._thread: threading.Thread | None = None
 
@@ -375,15 +314,8 @@ def main() -> None:  # pragma: no cover - manual entry point
     ap.add_argument("--index", required=True)
     ap.add_argument("--host", default="127.0.0.1")
     ap.add_argument("--port", type=int, default=8080)
-    ap.add_argument("--embeddings", default=None,
-                    help="embedding table (exact-rerank source)")
-    ap.add_argument("--ivf", default=None,
-                    help="persistent IVF index dir (hybrid candidates)")
     args = ap.parse_args()
-    server = SearchServer(
-        args.index, args.host, args.port,
-        embeddings_path=args.embeddings, ivf_dir=args.ivf,
-    )
+    server = SearchServer(args.index, args.host, args.port)
     print(f"serving BM25 queries on {args.host}:{server.port}")
     server.start()
     try:

@@ -1,9 +1,9 @@
 """Pre-fork multi-process HTTP serving — N worker processes accepting
 on ONE shared listening socket, each with its own interpreter (own
-GIL), own LocalSearcher/LocalIVF decoded caches, and own thread pool.
+GIL), own LocalSearcher decoded caches, and own thread pool.
 
-Why: the single-process ThreadingHTTPServer serves a warm hybrid query
-in ~3.5 ms of pure-Python/numpy work, but all handler threads share one
+Why: the single-process ThreadingHTTPServer serves a warm query in
+~3.5 ms of pure-Python/numpy work, but all handler threads share one
 GIL, so under a 100-concurrent burst the p99 stacks up to seconds
 (BENCH/BASELINE.md §load).  The reference's server runs one search
 runtime per hardware thread over shared mmap'd state
@@ -37,10 +37,7 @@ from http.server import ThreadingHTTPServer
 
 
 def _worker_main(
-    sock: socket.socket,
-    index_dir: str,
-    embeddings_path: str | None,
-    ivf_dir: str | None,
+    sock: socket.socket, index_dir: str
 ) -> None:  # pragma: no cover - exercised via ForkServer in tests
     """Worker body: build THIS process's searcher, then serve forever
     on the inherited listening socket."""
@@ -52,9 +49,7 @@ def _worker_main(
 
     searcher = LocalSearcher(index_dir)
     presets = PresetStore(index_dir)
-    handler = make_handler(
-        searcher, presets, embeddings_path, ivf_dir=ivf_dir
-    )
+    handler = make_handler(searcher, presets)
 
     class _Worker(ThreadingHTTPServer):
         daemon_threads = True
@@ -91,8 +86,6 @@ class ForkServer:
         workers: int | None = None,
         host: str = "127.0.0.1",
         port: int = 0,
-        embeddings_path: str | None = None,
-        ivf_dir: str | None = None,
         supervise: bool = False,
     ):
         self.workers = workers or min(8, os.cpu_count() or 1)
@@ -120,7 +113,7 @@ class ForkServer:
         # directly and skip a full reimport; the child touches only
         # stdlib + pyarrow + numpy after the fork
         self._ctx = mp.get_context("fork")
-        self._worker_args = (self._sock, index_dir, embeddings_path, ivf_dir)
+        self._worker_args = (self._sock, index_dir)
         self._procs = [self._fork_one() for _ in range(self.workers)]
         self._supervisor: threading.Thread | None = None
         self._stopping = threading.Event()
@@ -213,10 +206,13 @@ class ForkServer:
         requests not in flight on the dead worker.
 
         Crash-loop protection (ADVICE r07): rapid successive deaths
-        back off exponentially (0.5 s doubling to 30 s — a worker that
-        served for a while resets the backoff), and after max_reforks
-        total the supervisor stops and logs loudly instead of forking
-        ~5/s against a persistent failure forever."""
+        back off exponentially (0.5 s doubling to 30 s), and after
+        max_reforks reforks in one such streak the supervisor stops and
+        logs loudly instead of forking ~5/s against a persistent
+        failure forever.  A death after the previous replacement served
+        past the backoff window ends the streak: backoff and
+        refork_count both reset, so sporadic deaths spread over weeks
+        never exhaust the cap."""
         import logging
 
         log = logging.getLogger(__name__)
@@ -225,6 +221,10 @@ class ForkServer:
         while not self._stopping.wait(poll):
             for i, p in enumerate(self._procs):
                 if p.exitcode is not None and not self._stopping.is_set():
+                    streak = time.monotonic() - last_refork < backoff + poll
+                    if not streak:
+                        backoff = self.refork_backoff_start
+                        self.refork_count = 0
                     if self.refork_count >= self.max_reforks:
                         self.supervisor_gave_up = True
                         log.error(
@@ -236,15 +236,12 @@ class ForkServer:
                             self.alive_workers(),
                         )
                         return
-                    now = time.monotonic()
-                    if now - last_refork < backoff + poll:
+                    if streak:
                         # died again within the backoff window: wait
                         # and double (bounded), interruptible by stop()
                         if self._stopping.wait(backoff):
                             return
                         backoff = min(backoff * 2, self.refork_backoff_max)
-                    else:
-                        backoff = self.refork_backoff_start
                     p.join()  # reap
                     fresh = self._fork_one()
                     fresh.start()

@@ -26,12 +26,12 @@ import threading
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.compute as pc
 
 from ..common.hashing import term_hash
 from ..common.textproc import tokenize
+from ..common.topk import partial_topk_indices
 
 def _partition_value(frag, name: str):
     """Extract a hive partition value (e.g. bucket=3) from a fragment's
@@ -70,47 +70,6 @@ def _hive_fragment_map(
     return dataset, frags
 
 
-_IVF_STORAGE_COLS = {
-    "fp32": "embedding",
-    "fp16": "embedding_fp16",
-    "int8": "embedding_int8",
-    "pq": "pq_code",
-}
-
-
-def _list_matrix(t, name: str, dtype=np.float64) -> np.ndarray:
-    """array<float> column of a pyarrow table -> (n_rows, dim) matrix
-    via the Arrow values buffer (flatten respects slice offsets) —
-    ~200x faster than to_pylist and bit-identical (same float32 ->
-    float64 widening)."""
-    if not t.num_rows:
-        return np.empty((0, 0), dtype=dtype)
-    col = t.column(name).combine_chunks()
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    return np.asarray(flat, dtype=dtype).reshape(t.num_rows, -1)
-
-
-def _binary_matrix(t, name: str, width: int) -> np.ndarray:
-    """Fixed-width binary column -> (n_rows, width) uint8 matrix read
-    straight from the Arrow offsets+data buffers — no per-row
-    to_pylist objects (ADVICE r05: the pq code path kept the slow
-    decode after the float storages got the buffer path)."""
-    col = t.column(name).combine_chunks()
-    off_dtype = (
-        np.int64 if pa.types.is_large_binary(col.type) else np.int32
-    )
-    offs = np.frombuffer(col.buffers()[1], dtype=off_dtype)[
-        col.offset : col.offset + len(col) + 1
-    ]
-    if int(offs[-1] - offs[0]) != len(col) * width:
-        raise ValueError(
-            f"{name}: expected fixed width {width}, got "
-            f"{int(offs[-1] - offs[0])} bytes over {len(col)} rows"
-        )
-    data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
-    return data[int(offs[0]) : int(offs[-1])].reshape(len(col), width)
-
-
 def _path_fingerprint(path: str) -> tuple:
     """Cheap rewrite fingerprint for a table/index path: a single
     file's stat, or the top-level directory listing with sizes +
@@ -118,7 +77,7 @@ def _path_fingerprint(path: str) -> tuple:
     manifest markers, all of which change this).  Resident decoded
     caches re-check it per access and rebuild when it moves, so a
     server running across an append/compact never serves stale
-    vectors or graphs (ADVICE r05)."""
+    docmeta (ADVICE r05)."""
     try:
         st = os.stat(path)
         if not os.path.isdir(path):
@@ -131,536 +90,6 @@ def _path_fingerprint(path: str) -> tuple:
         return tuple(sorted(entries))
     except OSError:
         return ("missing",)
-
-
-def _fold_topk(parts, k: int, buffer_rows: int = 16384):
-    """Streaming exact top-k over (ids, scores) chunks with
-    duplicate-collapse-to-max semantics: per merge, concat running
-    state + buffered chunks, collapse each id to its max score, cut
-    to the k best distinct ids by (-score, id).  Exact vs a global
-    collapse-then-cut: a cut id is dominated by k DISTINCT better ids
-    whose scores only ever grow as later chunks arrive.
-
-    Chunks BUFFER up to ~buffer_rows before each merge (r7): a merge
-    costs two lexsorts + a unique, and paying that per FRAGMENT made
-    the fold the dominant warm-probe term once everything else was
-    cached (an 8-list probe at 100k docs = 8 merges over ~1.5k-row
-    chunks; one buffered merge does the same work in one pass).
-    Peak memory stays bounded: buffer_rows + one chunk + k rows —
-    never the concatenation of every probed list (r4 advice #5;
-    16k rows = ~256 KB)."""
-    rid = np.empty(0, np.int64)
-    rsc = np.empty(0, np.float64)
-    buf_ids: list = []
-    buf_sc: list = []
-    buffered = 0
-
-    def _merge():
-        nonlocal rid, rsc, buffered
-        ids = np.concatenate([rid, *buf_ids])
-        sc = np.concatenate([rsc, *buf_sc])
-        buf_ids.clear()
-        buf_sc.clear()
-        buffered = 0
-        from ..ops.similarity import partial_topk_indices
-
-        # O(n) row selection before the O(m log m) collapse: only the
-        # top rows can matter, and partial_topk_indices honors the
-        # (-score, id) boundary tie-break exactly (smallest ids kept
-        # at the threshold).  Duplicate ids inside the selection can
-        # absorb slots (collapse-to-max keeps one row per id), so the
-        # selection is provably sufficient only when NO collapse
-        # happened — retry with a doubled cut otherwise (duplicates
-        # come from spill>1/append retries; with the default spill
-        # the first pass always suffices).
-        m = min(len(ids), max(2 * k, k))
-        while True:
-            if m >= len(ids):
-                sid, ssc = ids, sc
-            else:
-                sel = partial_topk_indices(sc[:, None], ids, m)[:, 0]
-                sid, ssc = ids[sel], sc[sel]
-            order = np.lexsort((sid, -ssc))
-            sid, ssc = sid[order], ssc[order]
-            # first occurrence in (-score, id) order = the max-score
-            # copy of each id
-            first = np.unique(sid, return_index=True)[1]
-            if len(first) == len(sid) or m >= len(ids):
-                break
-            m *= 2  # a collapse happened below the full set: widen
-        sid, ssc = sid[first], ssc[first]
-        top = np.lexsort((sid, -ssc))[:k]
-        rid, rsc = sid[top], ssc[top]
-
-    for ids, sc in parts:
-        if not len(ids):
-            continue
-        buf_ids.append(ids)
-        buf_sc.append(sc)
-        buffered += len(ids)
-        if buffered >= buffer_rows:
-            _merge()
-    if buffered:
-        _merge()
-    return rid, rsc
-
-
-class LocalIVF:
-    """Driver-local probe over a persistent IVF index (ops/ivf_index
-    layout) — the vector-side analogue of LocalSearcher's pruned
-    posting-fragment reads.  Per query, only the n_probe/n_lists
-    partition-pruned fraction of the index is read (pyarrow fragments
-    resolved once per list_id; footers cached after first use).
-    Resident driver state: the centroid matrix + fragment map (both
-    O(n_lists)) plus a BYTE-BUDGETED LRU of decoded fragments
-    (default 256 MB, SPARK_GRAFT_IVF_CACHE_MB) — warm probes score
-    from memory, cold/over-budget ones stream.
-
-    Reference analogue: shard routing then within-shard search
-    (query_disk_index.rs:447-450); candidate generation only — exact
-    scores come from the rerank against the source embedding table."""
-
-    def __init__(self, ivf_dir: str):
-        from collections import OrderedDict
-
-        import numpy as np
-
-        from ..common.vecmath import l2_normalize
-        from ..ops.ivf_index import load_ivf_manifest
-
-        self.manifest = load_ivf_manifest(ivf_dir)
-        self.storage = self.manifest.get("storage", "fp32")
-        if self.storage not in _IVF_STORAGE_COLS:
-            raise ValueError(f"unknown IVF storage {self.storage!r}")
-        cents = np.asarray(self.manifest["centroids"], dtype=np.float64)
-        self._cn = l2_normalize(cents)
-        self._lists_root = os.path.join(ivf_dir, "lists")
-        self._ds, self._frags_by_list = _hive_fragment_map(
-            self._lists_root, "list_id", "IVF"
-        )
-        # byte-budgeted LRU of DECODED fragments (query-independent:
-        # ids + vectors/codes + norms) — the driver-local analogue of
-        # the reference's mmap-resident shards (the OS page cache does
-        # exactly this for query_disk_index.rs): a warm probe is pure
-        # numpy scoring, no parquet read, no re-decode.  Budget-bounded
-        # so a big-list index degrades to streaming reads, never to
-        # unbounded driver memory; locked for concurrent HTTP handlers.
-        self._frag_cache: OrderedDict[tuple, tuple | None] = OrderedDict()
-        self._frag_cache_bytes = 0
-        self._frag_cache_budget = (
-            int(os.environ.get("SPARK_GRAFT_IVF_CACHE_MB", "256")) << 20
-        )
-        self._frag_lock = threading.Lock()
-
-    def _decoded_fragment(self, lid: int, fi: int, frag):
-        """(ids, payload, norms|None) for one fragment, decoded once and
-        LRU-cached under the byte budget; None for empty fragments.
-        payload is the float64 matrix (fp32/fp16/int8 — dequantized
-        exactly as before) or the uint8 code matrix (pq)."""
-        key = (lid, fi)
-        with self._frag_lock:
-            if key in self._frag_cache:
-                self._frag_cache.move_to_end(key)
-                return self._frag_cache[key]
-        col = _IVF_STORAGE_COLS[self.storage]
-        t = frag.to_table(columns=["vec_id", col])
-        if not t.num_rows:
-            entry = None
-        else:
-            ids = np.asarray(
-                t.column("vec_id").combine_chunks().to_numpy(),
-                dtype=np.int64,
-            )
-            if self.storage == "pq":
-                m = np.asarray(self.manifest["pq_codebooks"]).shape[0]
-                codes = np.ascontiguousarray(_binary_matrix(t, col, m))
-                entry = (ids, codes, None)
-            else:
-                if self.storage == "fp16":
-                    dim = int(self.manifest["dim"])
-                    vm = (
-                        _binary_matrix(t, col, dim * 2)
-                        .reshape(-1)
-                        .view("<f2")
-                        .astype(np.float64)
-                        .reshape(len(ids), dim)
-                    )
-                elif self.storage == "int8":
-                    lo = np.asarray(
-                        self.manifest["int8_smin"], dtype=np.float64
-                    )
-                    step = (
-                        np.asarray(
-                            self.manifest["int8_smax"], dtype=np.float64
-                        )
-                        - lo
-                    ) / 255.0
-                    qcodes = _binary_matrix(t, col, len(lo)).astype(
-                        np.float64
-                    )
-                    # dequantize through float32 like unpack_embeddings_int8
-                    vm = (lo + qcodes * step).astype(np.float32).astype(
-                        np.float64
-                    )
-                else:
-                    vm = _list_matrix(t, col)
-                entry = (ids, vm, np.linalg.norm(vm, axis=1))
-        nbytes = (
-            sum(a.nbytes for a in entry if a is not None)
-            if entry is not None
-            else 0
-        )
-        with self._frag_lock:
-            if key not in self._frag_cache:
-                self._frag_cache[key] = entry
-                self._frag_cache_bytes += nbytes
-                while (
-                    len(self._frag_cache) > 1
-                    and self._frag_cache_bytes > self._frag_cache_budget
-                ):
-                    _, old = self._frag_cache.popitem(last=False)
-                    if old is not None:
-                        self._frag_cache_bytes -= sum(
-                            a.nbytes for a in old if a is not None
-                        )
-            else:
-                self._frag_cache.move_to_end(key)
-        return entry
-
-    def candidates(
-        self, qvec, k: int = 50, n_probe: int = 8
-    ) -> list[int]:
-        """Top-k candidate vec_ids from the probed lists, ranked by the
-        storage-tier score (exact cosine for fp32, dequantized cosine
-        for fp16/int8, ADC estimate for pq), ties on vec_id; duplicate
-        rows (spill>1 / append retries) collapse to max score — the
-        same invariances as the distributed ivf_search."""
-        import numpy as np
-
-        q = np.asarray(qvec, dtype=np.float64)
-        qn = q / max(float(np.linalg.norm(q)), 1e-30)
-        probe = np.argsort(-(self._cn @ qn), kind="stable")[:n_probe]
-
-        if self.storage == "pq":
-            from ..ops.pq import adc_tables
-
-            books = np.asarray(
-                self.manifest["pq_codebooks"], dtype=np.float64
-            )
-            rot = (
-                np.asarray(self.manifest["pq_rotation"], dtype=np.float64)
-                if "pq_rotation" in self.manifest
-                else None
-            )
-            luts = adc_tables(books, q[None, :], rot)  # once per query
-        qn_norm = float(np.linalg.norm(q))
-
-        def _score(entry) -> tuple:
-            ids, payload, norms = entry
-            if self.storage == "pq":
-                from ..ops.pq import score_codes
-
-                score = score_codes(
-                    payload, luts, np.zeros(len(ids), dtype=np.int64)
-                )
-            else:
-                denom = norms * qn_norm
-                score = (payload @ q) / np.maximum(denom, 1e-30)
-            return ids, score
-
-        def _parts():
-            # decoded-once fragments under the LRU byte budget; an
-            # uncached fragment is decoded, scored and (budget
-            # permitting) retained — peak transient memory stays one
-            # fragment + the running top-k either way
-            for lid in probe:
-                for fi, frag in enumerate(
-                    self._frags_by_list.get(int(lid), [])
-                ):
-                    entry = self._decoded_fragment(int(lid), fi, frag)
-                    if entry is not None:
-                        yield _score(entry)
-
-        # streaming fold keeps collapse-to-max + (-score, id) semantics
-        # exactly (see _fold_topk) — same results as concat-then-sort
-        try:
-            rid, _ = _fold_topk(_parts(), k)
-        except OSError:
-            # lists dir rewritten mid-probe (compact_ivf_index swap —
-            # the in-flight race): re-resolve fragments, drop the
-            # decoded cache (keys are fragment positions), retry once
-            self._ds, self._frags_by_list = _hive_fragment_map(
-                self._lists_root, "list_id", "IVF"
-            )
-            with self._frag_lock:
-                self._frag_cache.clear()
-                self._frag_cache_bytes = 0
-            rid, _ = _fold_topk(_parts(), k)
-        return [int(i) for i in rid]
-
-
-class LocalVamana:
-    """Driver-local beam search over a persistent Vamana index
-    (ops/vamana layout) — same candidates() surface as LocalIVF, so
-    the hybrid serving path can use either index type.  Per query,
-    only the n_probe routed shards' partitions are read (memoized
-    per-list fragment map, footers cached); each probed shard's graph
-    is kept decoded in a bounded cache (the reference's mmap'd shard,
-    query_disk_index.rs:73-81)."""
-
-    def __init__(self, vamana_dir: str):
-        from ..common.vecmath import l2_normalize
-        from ..ops.vamana import load_vamana_manifest
-
-        self.manifest = load_vamana_manifest(vamana_dir)
-        cents = np.asarray(self.manifest["centroids"], dtype=np.float64)
-        self._cn = l2_normalize(cents)
-        self._shards_root = os.path.join(vamana_dir, "shards")
-        self._ds, self._frags_by_list = _hive_fragment_map(
-            self._shards_root, "list_id", "Vamana"
-        )
-        # shard id -> (gids, unit matrix, adjacency, start); bounded
-        # LRU (move-to-end on hit, evict-oldest at cap — clear()-style
-        # eviction dumped all 64 decoded shards on the 65th and caused
-        # a thundering-herd refetch under concurrent load, r4 advice);
-        # locked: ThreadingHTTPServer handlers probe concurrently
-        from collections import OrderedDict
-
-        self._shards: OrderedDict[int, tuple] = OrderedDict()
-        self._shard_cap = 64
-        # entry-count AND byte budget: 64 big shards could be GBs
-        self._shard_bytes = 0
-        self._shard_budget = (
-            int(os.environ.get("SPARK_GRAFT_VAMANA_CACHE_MB", "512")) << 20
-        )
-        self._shard_lock = threading.Lock()
-
-    def _shard(self, lid: int):
-        from ..common.vecmath import l2_normalize
-
-        with self._shard_lock:
-            if lid in self._shards:
-                self._shards.move_to_end(lid)
-                return self._shards[lid]
-        import pyarrow as pa
-
-        for attempt in (0, 1):
-            try:
-                tables = [
-                    f.to_table(
-                        columns=[
-                            "vec_id", "embedding", "neighbors", "is_medoid"
-                        ]
-                    )
-                    for f in self._frags_by_list.get(lid, [])
-                ]
-                break
-            except OSError:
-                # shards rewritten mid-read (append rebuild of routed
-                # shards / dynamic overwrite): re-resolve, retry once
-                if attempt:
-                    raise
-                self._ds, self._frags_by_list = _hive_fragment_map(
-                    self._shards_root, "list_id", "Vamana"
-                )
-        tables = [t for t in tables if t.num_rows]
-        if not tables:
-            with self._shard_lock:
-                self._shards[lid] = None
-            return None
-        from ..ops.vamana import decode_adjacency_flat
-
-        t = pa.concat_tables(tables).combine_chunks()
-        vid = np.asarray(
-            t.column("vec_id").combine_chunks().to_numpy(), dtype=np.int64
-        )
-        order = np.argsort(vid, kind="stable")
-        t = t.take(order)
-        gids = vid[order]
-        vm = l2_normalize(_list_matrix(t, "embedding"))
-        nb = t.column("neighbors").combine_chunks()
-        adj = decode_adjacency_flat(
-            gids,
-            np.asarray(
-                nb.flatten().to_numpy(zero_copy_only=False), dtype=np.int64
-            ),
-            nb.value_lengths().to_numpy(zero_copy_only=False),
-        )
-        med = np.flatnonzero(
-            t.column("is_medoid").combine_chunks().to_numpy(
-                zero_copy_only=False
-            )
-        )
-        start = int(med[0]) if len(med) else 0
-        entry = (gids, vm, adj, start)
-        nbytes = gids.nbytes + vm.nbytes + sum(a.nbytes for a in adj)
-        with self._shard_lock:
-            # concurrent builders of the SAME shard: keep the first
-            # insert (identical content), just refresh recency
-            if lid not in self._shards:
-                self._shards[lid] = entry
-                self._shard_bytes += nbytes
-                while len(self._shards) > 1 and (
-                    len(self._shards) > self._shard_cap
-                    or self._shard_bytes > self._shard_budget
-                ):
-                    _, old = self._shards.popitem(last=False)
-                    if old is not None:
-                        g, v, a, _s = old
-                        self._shard_bytes -= (
-                            g.nbytes + v.nbytes + sum(x.nbytes for x in a)
-                        )
-            else:
-                self._shards.move_to_end(lid)
-        return entry
-
-    def candidates(
-        self, qvec, k: int = 50, n_probe: int = 2
-    ) -> list[int]:
-        """Top-k candidate vec_ids by beam search over the routed
-        shards; ties on vec_id, duplicates collapse to best score."""
-        from ..ops.vamana import _greedy_search
-
-        q = np.asarray(qvec, dtype=np.float64)
-        qn = q / max(float(np.linalg.norm(q)), 1e-30)
-        probe = np.argsort(-(self._cn @ qn), kind="stable")[:n_probe]
-        beam = max(int(self.manifest["beam"]), k)
-        ids_parts, d_parts = [], []
-        for lid in probe:
-            sh = self._shard(int(lid))
-            if sh is None:
-                continue
-            gids, vm, adj, start = sh
-            vis, vis_d = _greedy_search(vm, adj, qn, start, beam)
-            ids_parts.append(gids[vis])
-            d_parts.append(vis_d)
-        # per-shard streaming fold: same collapse-to-max + (-score, id)
-        # semantics as LocalIVF (shared _fold_topk — one copy of the
-        # tie-break-sensitive logic), and the probed shards' visited
-        # sets never concatenate
-        rid, _ = _fold_topk(
-            ((i, 1.0 - d) for i, d in zip(ids_parts, d_parts)), k
-        )
-        return [int(i) for i in rid]
-
-
-class _EmbeddingPointLookup:
-    """Point lookup of exact vectors from an embedding table.  ALL-OR-
-    NOTHING cache, decided ONCE from parquet metadata: a table whose
-    whole decoded size fits the budget (default 256 MB,
-    SPARK_GRAFT_EMB_CACHE_MB) is decoded fragment-by-fragment on
-    demand and kept resident (no eviction is ever needed — everything
-    fits); a larger table is NEVER partially cached and keeps the
-    original dataset-level row-group-filtered read unchanged (a
-    partial LRU over an over-budget table would decode-and-evict in a
-    churn loop on every cold query, strictly worse than the filtered
-    read).
-
-    Why: the hybrid serving path needs ~2C candidate vectors per
-    request; re-running a pyarrow isin-filter over the table per
-    request was >half of hybrid request time (profiled at ~12 of
-    21 ms).  A warm fragment answers with one searchsorted — the
-    driver-local analogue of the reference's OS-page-cached mmap'd
-    vectors (query_disk_index.rs:73-81).  Values are identical to the
-    filtered read (same float32 -> float64 widening); found ids return
-    ascending with rows aligned."""
-
-    def __init__(self, path: str):
-        self._ds = ds.dataset(path, format="parquet")
-        self._frags = list(self._ds.get_fragments())
-        self._budget = (
-            int(os.environ.get("SPARK_GRAFT_EMB_CACHE_MB", "256")) << 20
-        )
-        # cacheability decided ONCE from parquet metadata: only a table
-        # whose WHOLE decoded size fits the budget is cached.  The
-        # estimate is EXACT, not compression-dependent: decoded bytes
-        # = n_rows x (dim x 8B float64 + 8B id), with n_rows from the
-        # row-group metadata and dim from the first fragment's schema
-        # (a compression-ratio heuristic under-estimated highly
-        # compressible tables by large factors — ADVICE r05).
-        # Anything larger keeps the dataset-level row-group-filtered
-        # read unchanged — a per-fragment LRU over a table much bigger
-        # than the budget would decode-and-evict in a churn loop on
-        # every cold query, strictly worse than the filtered read.
-        try:
-            n_rows = sum(
-                rg.num_rows for f in self._frags for rg in f.row_groups
-            )
-            head = next(
-                self._ds.to_batches(
-                    columns=["embedding"], batch_size=1
-                )
-            )
-            dim = len(head.column("embedding")[0])
-            est = n_rows * (dim * 8 + 8)
-        except Exception:  # empty table / no metadata -> don't cache
-            est = self._budget + 1
-        self._cacheable = est <= self._budget
-        self._frag_data: dict[int, tuple] = {}
-        self._lock = threading.Lock()
-
-    def _fragment(self, fi: int):
-        """(ids ascending, float64 rows) for fragment fi (cache-mode
-        only; whole table fits the budget, so no eviction is needed)."""
-        with self._lock:
-            if fi in self._frag_data:
-                return self._frag_data[fi]
-        t = self._frags[fi].to_table(columns=["vec_id", "embedding"])
-        ids = np.asarray(
-            t.column("vec_id").combine_chunks().to_numpy(), dtype=np.int64
-        )
-        vm = _list_matrix(t, "embedding")
-        order = np.argsort(ids, kind="stable")
-        entry = (ids[order], vm[order])
-        with self._lock:
-            self._frag_data.setdefault(fi, entry)
-        return entry
-
-    def vectors_for(self, ids: list[int]) -> tuple:
-        need = np.unique(np.asarray(list(ids), dtype=np.int64))
-        if not len(need):
-            return np.empty(0, np.int64), np.empty((0, 0), np.float64)
-        out_ids: list[np.ndarray] = []
-        out_rows: list[np.ndarray] = []
-        if self._cacheable:
-            for fi in range(len(self._frags)):
-                fids, vm = self._fragment(fi)
-                if (
-                    not len(fids)
-                    or fids[0] > need[-1]
-                    or fids[-1] < need[0]
-                ):
-                    continue
-                pos = np.searchsorted(fids, need)
-                pos[pos >= len(fids)] = len(fids) - 1
-                hit = fids[pos] == need
-                if hit.any():
-                    out_ids.append(need[hit])
-                    out_rows.append(vm[pos[hit]])
-        else:
-            # exact original path: one dataset-level filtered read
-            # (row-group pruned; never loads the matrix)
-            t = self._ds.to_table(
-                columns=["vec_id", "embedding"],
-                filter=pc.field("vec_id").isin(need.tolist()),
-            )
-            if t.num_rows:
-                # same values-buffer decode as the cached path (shared
-                # _list_matrix helper) — the at-scale fallback must not
-                # be the slow per-row decode (VERDICT r05 #5)
-                out_ids.append(
-                    np.asarray(
-                        t.column("vec_id").combine_chunks().to_numpy(),
-                        np.int64,
-                    )
-                )
-                out_rows.append(_list_matrix(t, "embedding"))
-        if not out_ids:
-            return np.empty(0, np.int64), np.empty((0, 0), np.float64)
-        found = np.concatenate(out_ids)
-        m = np.concatenate(out_rows)
-        order = np.argsort(found, kind="stable")
-        return found[order], m[order]
 
 
 class LocalSearcher:
@@ -809,8 +238,8 @@ class LocalSearcher:
         if pdf is None or not len(pdf):
             entry = None
         else:
-            from ..common.bm25 import bm25_idf
-            from .wand import _contribs_float, _decode_blocks_batch
+            from ..common.bm25 import bm25_idf, contribs_float
+            from ..common.codecs import decode_blocks_batch
 
             t = {
                 "n": pdf["n_docs"].to_numpy(np.int64),
@@ -818,9 +247,9 @@ class LocalSearcher:
                 "tfs": pdf["tfs"].tolist(),
                 "dls": pdf["dls"].tolist(),
             }
-            d, tfs, dls = _decode_blocks_batch(t, list(range(len(pdf))))
+            d, tfs, dls = decode_blocks_batch(t, list(range(len(pdf))))
             idf = bm25_idf(int(pdf["df"].iloc[0]), self.stats["N"])
-            c = _contribs_float(
+            c = contribs_float(
                 idf, tfs, dls,
                 self.cfg["k1"], self.cfg["b"], self.stats["avgdl"],
             )
@@ -929,8 +358,6 @@ class LocalSearcher:
                 )
         if not parts:
             return []
-        from ..ops.similarity import partial_topk_indices
-
         uniq, sums = self._accumulate_fixed(parts)
         kk = min(k, len(uniq))
         # O(n) threshold selection (tie-exact), then rank only the k
@@ -988,8 +415,8 @@ class LocalSearcher:
         """int64 fixed-point quality priors ALIGNED with `doc_ids`
         (0 where a doc has no docmeta row) — same formula/rounding as
         gate.quality_prior_fixed, vectorized: channel gather is a
-        searchsorted join against the decode-once sorted arrays (the
-        same pattern as the hybrid fusion join), never a Python dict
+        searchsorted join against the decode-once sorted arrays, never
+        a Python dict
         over every scored doc (that dict build scaled with head-term
         df and was the last O(df)-Python serving term — VERDICT r07)."""
         import numpy as np
@@ -1062,8 +489,6 @@ class LocalSearcher:
         # O(n) top-k selection (tie-exact at the boundary, same
         # contract as search()), then rank only the k survivors —
         # a full lexsort over every scored doc grew with head-term df
-        from ..ops.similarity import partial_topk_indices
-
         kk = min(k, len(doc_ids))
         sel = partial_topk_indices(sums[:, None], doc_ids, kk)[:, 0]
         order = sel[np.lexsort((doc_ids[sel], -sums[sel]))]
@@ -1078,60 +503,14 @@ class LocalSearcher:
         ]
         return self._attach_urls(results) if with_urls else results
 
-    # path -> (fingerprint, resident object).  The fingerprint is
-    # re-checked per access (one stat/scandir): an index or table
-    # REWRITTEN while a server runs (append finalize, compact_index)
-    # drops the stale decoded vectors/graphs instead of serving them
-    # silently (ADVICE r05).
-    _IVF_CACHE: dict[str, tuple] = {}
-    _EMB_LOOKUP_CACHE: dict[str, tuple] = {}
-
-    def _ivf(self, ivf_dir: str):
-        """Vector-index probe for the given dir — dispatches on the
-        manifest present (ivf_manifest.json -> LocalIVF,
-        vamana_manifest.json -> LocalVamana; both expose
-        candidates(qvec, k, n_probe)).  Rebuilt when the index dir's
-        fingerprint moves (manifests are the commit marker, written
-        last — their stat changes on every rewrite)."""
-        cache = LocalSearcher._IVF_CACHE
-        fp = _path_fingerprint(ivf_dir)
-        hit = cache.get(ivf_dir)
-        if hit is None or hit[0] != fp:
-            if os.path.exists(
-                os.path.join(ivf_dir, "vamana_manifest.json")
-            ):
-                cache[ivf_dir] = (fp, LocalVamana(ivf_dir))
-            else:
-                cache[ivf_dir] = (fp, LocalIVF(ivf_dir))
-        return cache[ivf_dir][1]
-
-    def _vectors_for(
-        self, embeddings_path: str, ids: list[int]
-    ) -> tuple:
-        """(found_ids int64[] ascending, rows float64[n,d]) — POINT
-        lookup of the candidates' exact vectors from the source
-        embedding table, through a byte-budgeted per-fragment decoded
-        cache (warm lookups are pure searchsorted; over-budget
-        fragments fall back to the row-group-filtered pyarrow read —
-        the full matrix is never required resident).  See
-        _EmbeddingPointLookup."""
-        cache = LocalSearcher._EMB_LOOKUP_CACHE
-        fp = _path_fingerprint(embeddings_path)
-        hit = cache.get(embeddings_path)
-        if hit is None or hit[0] != fp:
-            cache[embeddings_path] = (
-                fp, _EmbeddingPointLookup(embeddings_path)
-            )
-        return cache[embeddings_path][1].vectors_for(ids)
-
     def _bm25_fixed_all(self, text: str) -> tuple:
         """(doc_ids int64 ASCENDING, fixed-point BM25 int64) over every
         posting of every query term — the same accumulation the
         weighted/quality paths use.  Arrays, not a dict: at index
         scale a head term scores ~10k+ docs per query and the Python
-        dict build + sorted() ranking was 69% of warm hybrid service
-        time (profiled at 100k docs); callers rank with np.lexsort and
-        join with searchsorted instead."""
+        dict build + sorted() ranking was 69% of warm service time
+        (profiled at 100k docs); callers rank with np.lexsort and join
+        with searchsorted instead."""
         from ..common.bm25 import FIXED_POINT_SCALE
 
         hashes = sorted({term_hash(t) for t in tokenize(text)})
@@ -1154,127 +533,6 @@ class LocalSearcher:
                 np.empty(0, dtype=np.int64),
             )
         return self._accumulate_fixed(parts)
-
-    def search_hybrid(
-        self,
-        text: str,
-        qvec,
-        embeddings_path: str,
-        k: int = 10,
-        w_text: int = 3,
-        w_vec: int = 1,
-        with_urls: bool = False,
-        *,
-        ivf_dir: str,
-        n_candidates: int = 50,
-        n_probe: int = 8,
-        dedup_threshold: float | None = None,
-    ) -> list[dict]:
-        """Fused text+vector serving at index scale — candidate
-        generation then exact rerank, the reference's online shape
-        (ANN candidates reranked with full score channels,
-        query_disk_index.rs:486-527).
-
-        Candidates = (BM25 top-C from the pruned postings) ∪ (IVF
-        top-C from the partition-pruned persistent index); the union is
-        reranked EXACTLY: per-candidate vectors point-looked-up from
-        the source embedding table (row-group-filtered pyarrow read —
-        the full matrix is never loaded), fused in the same integer
-        space as the batch engine.  score_fixed-identical to
-        hybrid_topk_pruned(vec_candidates=ivf_search(...)) with the
-        same C/n_probe (pytest-verified).  Candidates with no row in
-        the embedding table drop out, matching the batch inner join.
-
-        Caveat (inherent to float candidate scores): the IVF candidate
-        CUT at k=n_candidates ranks by numpy GEMM cosines while the
-        batch ivf_search ranks by the JVM fold — a ~1-ulp disagreement
-        exactly at the boundary could admit different candidates.  On
-        real-valued embeddings this needs two distinct vectors within
-        float rounding of each other at exactly the cut; the fused
-        rerank itself is integer-exact either way."""
-        import numpy as np
-
-        from ..common.bm25 import FIXED_POINT_SCALE
-        from .dataframe_engine import COSINE_STEP_FIXED, COSINE_STEPS
-
-        if dedup_threshold is not None:
-            # suppression REPLACES dropped near-dups with deeper
-            # candidates only if the pool is wider than k (the
-            # diversify_topk contract); a duplicate-heavy corpus with
-            # pool==k would silently truncate below k results
-            n_candidates = max(n_candidates, 4 * k)
-        ivf = self._ivf(ivf_dir)
-        vec_ids = ivf.candidates(qvec, k=n_candidates, n_probe=n_probe)
-
-        bm_ids, bm_scores = self._bm25_fixed_all(text)
-        # top-C text candidates by (-score, doc_id) — np.lexsort's last
-        # key is primary, so this is EXACTLY the old Python
-        # sorted(key=(-score, doc)) ordering, vectorized (the Python
-        # sort over a head term's ~10k+ scored docs was 69% of warm
-        # hybrid service time at 100k docs)
-        if len(bm_ids) > n_candidates:
-            # O(n) candidate cut (same top-C SET as the former full
-            # lexsort — boundary ties keep smallest doc_id); order is
-            # irrelevant here, union1d sorts the pool anyway
-            from ..ops.similarity import partial_topk_indices
-
-            top = partial_topk_indices(
-                bm_scores[:, None], bm_ids, n_candidates
-            )[:, 0]
-            text_ids = bm_ids[top]
-        else:
-            text_ids = bm_ids
-        cand_ids = np.union1d(
-            np.asarray(list(vec_ids), dtype=np.int64), text_ids
-        )
-        if not len(cand_ids):
-            return []
-        ids, m = self._vectors_for(embeddings_path, cand_ids)
-        if not len(ids):
-            return []
-        q = np.asarray(qvec, dtype=np.float64)
-        denom = np.linalg.norm(m, axis=1) * np.linalg.norm(q)
-        cos = (m @ q) / np.maximum(denom, 1e-30)
-        x = cos * COSINE_STEPS
-        # HALF_UP away from zero — matches Spark/DuckDB round(x, 0)
-        cos4 = (np.sign(x) * np.floor(np.abs(x) + 0.5)).astype(np.int64)
-        score = w_vec * cos4 * COSINE_STEP_FIXED
-        # join the BM25 channel by searchsorted (bm_ids ascending):
-        # candidates with no text score contribute 0, same as the old
-        # dict .get default
-        if len(bm_ids):
-            pos = np.searchsorted(bm_ids, ids)
-            pos_c = np.minimum(pos, len(bm_ids) - 1)
-            hit = bm_ids[pos_c] == ids
-            score += w_text * np.where(hit, bm_scores[pos_c], 0)
-
-        if dedup_threshold is not None:
-            # query-time near-dup suppression of results (the
-            # reference's gram-matrix rerank + greedy drop of results
-            # with cosine > threshold to a kept one,
-            # query_disk_index.rs:99,514-527): rank the WHOLE candidate
-            # pool, then keep the first k survivors.  Shared kernel
-            # with the batch diversify_topk — bit-identical decisions.
-            from ..common.vecmath import greedy_diverse_prefix, l2_normalize
-
-            order = np.lexsort((ids, -score))
-            keep = greedy_diverse_prefix(
-                l2_normalize(m)[order], dedup_threshold, k
-            )
-            order = order[keep]
-        else:
-            kk = min(k, len(ids))
-            order = np.lexsort((ids, -score))[:kk]
-        results = [
-            {
-                "rank": i + 1,
-                "doc_id": int(ids[j]),
-                "score_fixed": int(score[j]),
-                "score": score[j] / float(FIXED_POINT_SCALE),
-            }
-            for i, j in enumerate(order)
-        ]
-        return self._attach_urls(results) if with_urls else results
 
     def search_weighted(
         self, terms: list[tuple[str, float]], k: int = 10,
@@ -1316,8 +574,6 @@ class LocalSearcher:
         uniq, sums = self._accumulate_fixed(parts)
         # O(n) top-k selection + rank-k (tie-exact; same contract as
         # search()) — the previous full lexsort scaled with df, not k
-        from ..ops.similarity import partial_topk_indices
-
         kk = min(k, len(uniq))
         sel = partial_topk_indices(sums[:, None], uniq, kk)[:, 0]
         order = sel[np.lexsort((uniq[sel], -sums[sel]))]

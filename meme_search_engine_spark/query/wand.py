@@ -55,8 +55,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..common.bm25 import FIXED_POINT_SCALE
-from ..common.codecs import varbyte_decode
+from ..common.bm25 import FIXED_POINT_SCALE, contribs_fixed
+from ..common.codecs import decode_blocks_batch, decode_postings_block
 from .dataframe_engine import query_terms
 
 RESULT_SCHEMA = (
@@ -67,52 +67,6 @@ _SIGN = -(2**63)
 # fixed-point slack absorbing JVM-vs-numpy 1-ulp drift in the
 # DataFrame-side bound (pruning stays sound: we only keep MORE blocks)
 _UB_SLACK = 16
-
-
-def _decode_block(doc_ids_b, tfs_b, dls_b):
-    d = np.cumsum(varbyte_decode(doc_ids_b), dtype=np.int64)
-    return d, varbyte_decode(tfs_b), varbyte_decode(dls_b)
-
-
-def _decode_blocks_batch(t: dict, sel: list[int]) -> tuple:
-    """Decode the selected blocks of ONE term in a single varbyte pass
-    per stream (varbyte is self-delimiting, so concatenated buffers
-    decode to concatenated values), instead of 3 decode calls + a
-    cumsum PER BLOCK.  Per-block delta->absolute doc ids fall out of
-    the global cumsum minus each block's prefix offset (the first delta
-    of a block is its absolute min doc id, i.e. a delta from 0).
-
-    This is the serve-latency hot path: a head-term query decodes
-    hundreds of blocks, and per-block numpy fixed overhead (~6 array
-    calls x n_blocks) dominated p50 at a 100k-doc index."""
-    counts = t["n"][sel]
-    deltas = varbyte_decode(b"".join(t["doc_ids"][i] for i in sel))
-    tfs = varbyte_decode(b"".join(t["tfs"][i] for i in sel))
-    dls = varbyte_decode(b"".join(t["dls"][i] for i in sel))
-    cum = np.cumsum(deltas, dtype=np.int64)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    offsets = np.where(starts > 0, cum[np.maximum(starts - 1, 0)], 0)
-    d = cum - np.repeat(offsets, counts)
-    return d, tfs, dls
-
-
-def _contribs_float(
-    idf: float, tfs: np.ndarray, dls: np.ndarray, k1: float, b: float, avgdl: float
-) -> np.ndarray:
-    """Unrounded per-posting BM25 contribution — the association order
-    here IS the cross-engine contract (see CLAUDE.md); every fixed-
-    point path rounds THIS value, possibly after a weight multiply."""
-    tfs_f = tfs.astype(np.float64)
-    dls_f = dls.astype(np.float64)
-    tf_norm = tfs_f / (tfs_f + k1 * ((1.0 - b) + (b * dls_f) / avgdl))
-    return idf * (k1 + 1.0) * tf_norm
-
-
-def _contribs_fixed(
-    idf: float, tfs: np.ndarray, dls: np.ndarray, k1: float, b: float, avgdl: float
-) -> np.ndarray:
-    contrib = _contribs_float(idf, tfs, dls, k1, b, avgdl)
-    return np.floor(contrib * float(FIXED_POINT_SCALE) + 0.5).astype(np.int64)
 
 
 def bm25_idf_py(df_t: int, n_docs: int) -> float:
@@ -145,7 +99,7 @@ def score_query_blocks(
 
     def decode_score_terms(block_sel: list[tuple[int, int]]):
         """[(t_i, b_i)] -> (doc_ids, fixed_contribs) concatenated, one
-        batched decode per term (see _decode_blocks_batch) with the
+        batched decode per term (see decode_blocks_batch) with the
         doc-range mask applied post-decode."""
         by_term: dict[int, list[int]] = {}
         for t_i, b_i in block_sel:
@@ -153,7 +107,7 @@ def score_query_blocks(
         ids_parts, c_parts = [], []
         for t_i, b_list in by_term.items():
             t = terms[t_i]
-            d, tfs, dls = _decode_blocks_batch(t, sorted(b_list))
+            d, tfs, dls = decode_blocks_batch(t, sorted(b_list))
             if doc_shift is not None:
                 m = (d.astype(np.uint64) >> np.uint64(doc_shift)) == np.uint64(
                     range_id
@@ -161,7 +115,7 @@ def score_query_blocks(
                 if not m.all():
                     d, tfs, dls = d[m], tfs[m], dls[m]
             ids_parts.append(d)
-            c_parts.append(_contribs_fixed(t["idf"], tfs, dls, k1, b, avgdl))
+            c_parts.append(contribs_fixed(t["idf"], tfs, dls, k1, b, avgdl))
         return np.concatenate(ids_parts), np.concatenate(c_parts)
 
     query_id = int(pdf["query_id"].iloc[0])
@@ -309,10 +263,10 @@ def _seed_thetas(
         q = per_q.setdefault(
             int(r["query_id"]), {"k": int(r["k"]), "ids": [], "cs": []}
         )
-        d, tfs, dls = _decode_block(r["doc_ids"], r["tfs"], r["dls"])
+        d, tfs, dls = decode_postings_block(r["doc_ids"], r["tfs"], r["dls"])
         idf = bm25_idf_py(int(r["df"]), n_docs)
         q["ids"].append(d)
-        q["cs"].append(_contribs_fixed(idf, tfs, dls, k1, b, avgdl))
+        q["cs"].append(contribs_fixed(idf, tfs, dls, k1, b, avgdl))
     thetas: dict[int, int] = {}
     for qid, q in per_q.items():
         ids = np.concatenate(q["ids"])
@@ -346,10 +300,10 @@ def _seed_thetas_local(
 
     per_term: dict[int, list] = defaultdict(list)
     for r in seed_rows:
-        d, tfs, dls = _decode_block(r["doc_ids"], r["tfs"], r["dls"])
+        d, tfs, dls = decode_postings_block(r["doc_ids"], r["tfs"], r["dls"])
         idf = bm25_idf_py(int(r["df"]), n_docs)
         per_term[int(r["term_hash"])].append(
-            (d, _contribs_fixed(idf, tfs, dls, k1, b, avgdl))
+            (d, contribs_fixed(idf, tfs, dls, k1, b, avgdl))
         )
     terms_by_q: dict[int, list] = defaultdict(list)
     k_by_q: dict[int, int] = {}

@@ -248,34 +248,6 @@ def incremental_ivf_update(
     )
 
 
-def incremental_vamana_update(
-    spark: SparkSession,
-    embeddings_stream: DataFrame,
-    vamana_dir: str,
-    checkpoint_dir: str,
-):
-    """Micro-batch graph-index maintenance: each batch routes its new
-    vectors against the FROZEN centroids and rebuilds ONLY the touched
-    shards' Vamana graphs (ops.vamana.append_vamana_index) — the
-    graph-index half of the continuous ingest loop; cost per batch is
-    proportional to the affected shards, never the index.  Content-
-    seeded builds keep the streamed index identical to a cold build
-    over everything ingested so far (pytest)."""
-    from ..ops.vamana import append_vamana_index
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_vamana_index(spark, batch_df, vamana_dir)
-
-    return (
-        embeddings_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def streaming_index_pipeline(
     spark: SparkSession,
     pages_stream: DataFrame,

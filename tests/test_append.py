@@ -387,3 +387,45 @@ def test_compaction_precommit_crash_rolls_back(spark, dirs, tmp_path):
     s2 = LocalSearcher(out)
     after = [s2.search(q["text"], q["k"]) for q in queries]
     assert before == after
+
+
+def test_manifest_commit_never_torn(tmp_path):
+    """A reader polling manifest.json while the commit marker is
+    rewritten in a loop never sees torn JSON: the write goes to a
+    hidden tmp file and is swapped in with os.replace."""
+    import threading
+    import time
+
+    from meme_search_engine_spark.index.builder import _write_manifest
+
+    out = str(tmp_path)
+    stats = {"N": 1000, "avgdl": 42.5, "total_len": 42500}
+    _write_manifest(out, CFG, stats, "snap")
+    stop = threading.Event()
+    writes = []
+
+    def writer():
+        i = 0
+        while not stop.is_set():
+            _write_manifest(out, CFG, {**stats, "N": i}, f"snap-{i}")
+            i += 1
+        writes.append(i)
+
+    t = threading.Thread(target=writer)
+    t.start()
+    reads = errors = 0
+    deadline = time.time() + 1.5
+    try:
+        while time.time() < deadline:
+            try:
+                with open(os.path.join(out, "manifest.json")) as fh:
+                    json.load(fh)
+            except json.JSONDecodeError:
+                errors += 1
+            reads += 1
+    finally:
+        stop.set()
+        t.join()
+    assert writes[0] > 10 and reads > 10
+    assert errors == 0
+    assert [f for f in os.listdir(out) if f.endswith(".tmp")] == []

@@ -180,15 +180,15 @@ def test_varbyte_continuation_boundary(values):
 
 
 def test_batched_block_decode_equals_per_block():
-    """_decode_blocks_batch == per-block _decode_block for arbitrary
+    """decode_blocks_batch == per-block decode_postings_block for arbitrary
     block partitions of an ascending doc_id stream (hypothesis)."""
     import numpy as np
     from hypothesis import given, settings, strategies as st
 
-    from meme_search_engine_spark.common.codecs import varbyte_encode
-    from meme_search_engine_spark.query.wand import (
-        _decode_block,
-        _decode_blocks_batch,
+    from meme_search_engine_spark.common.codecs import (
+        decode_blocks_batch,
+        decode_postings_block,
+        varbyte_encode,
     )
 
     @settings(max_examples=50, deadline=None)
@@ -235,12 +235,12 @@ def test_batched_block_decode_equals_per_block():
             t["doc_ids"].append(b_doc)
             t["tfs"].append(b_tf)
             t["dls"].append(b_dl)
-            pd_, pt, pl = _decode_block(b_doc, b_tf, b_dl)
+            pd_, pt, pl = decode_postings_block(b_doc, b_tf, b_dl)
             per_ids.append(pd_)
             per_tfs.append(pt)
             per_dls.append(pl)
         t["n"] = np.asarray(t["n"], dtype=np.int64)
-        bd, bt, bl = _decode_blocks_batch(t, list(range(len(bounds) - 1)))
+        bd, bt, bl = decode_blocks_batch(t, list(range(len(bounds) - 1)))
         assert (bd == np.concatenate(per_ids)).all()
         assert (bt == np.concatenate(per_tfs)).all()
         assert (bl == np.concatenate(per_dls)).all()
@@ -287,3 +287,17 @@ def test_collision_free_partitions_spread(spark):
         )
         pids = {r.pid for r in rows}
         assert len(pids) == n, f"n={n} P={p}: only {len(pids)} tasks"
+
+
+def test_partial_topk_boundary_ties_keep_smallest_ids():
+    """Exact-tied scores at the k boundary must resolve to the smallest
+    ids — the partial top-k has to keep boundary ties, not an
+    argpartition-arbitrary subset."""
+    from meme_search_engine_spark.common.topk import partial_topk_indices
+
+    scores = np.array(
+        [[1.0], [0.5], [0.5], [0.5], [0.5], [0.2]], dtype=np.float64
+    )
+    ids = np.array([7, 40, 12, 99, 3, 1], dtype=np.int64)
+    idx = partial_topk_indices(scores, ids, 3)
+    assert sorted(ids[idx[:, 0]].tolist()) == [3, 7, 12]

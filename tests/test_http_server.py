@@ -2,6 +2,7 @@
 LocalSearcher (mse.py:37-47 request shape)."""
 
 import json
+import os
 import urllib.request
 
 import pytest
@@ -31,41 +32,7 @@ def server(spark, tmp_path_factory):
     rows = duckdb.sql(
         f"SELECT doc_id, text FROM '{pages_dir}/*.parquet' ORDER BY doc_id"
     ).fetchall()
-    # deterministic embeddings sidecar for the hybrid mode
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rng = np.random.default_rng(7)
-    emb = rng.normal(size=(N_DOCS, 16)).astype(np.float32)
-    emb_path = str(base / "embeddings.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array(range(N_DOCS), type=pa.int64()),
-                "embedding": pa.array(
-                    [list(map(float, v)) for v in emb],
-                    type=pa.list_(pa.float32()),
-                ),
-            }
-        ),
-        emb_path,
-    )
-    # persistent IVF index over the sidecar — the serve-side hybrid's
-    # candidate source (n_lists == default n_probe -> full recall)
-    from meme_search_engine_spark.ops import ivf_index
-    from meme_search_engine_spark.ops.similarity import (
-        deterministic_centroids,
-    )
-
-    emb_df = spark.read.parquet(emb_path)
-    ivf_dir = str(base / "ivf")
-    ivf_index.build_ivf_index(
-        spark, emb_df, ivf_dir,
-        centroids=deterministic_centroids(emb_df, 8),
-        spill=1, storage="fp32",
-    )
-    srv = SearchServer(idx, embeddings_path=emb_path, ivf_dir=ivf_dir).start()
+    srv = SearchServer(idx).start()
     yield srv, OracleIndex.build(rows)
     srv.stop()
 
@@ -164,6 +131,81 @@ def test_health_and_errors(server):
     assert code == 200 and body["matches"][0]["doc_id"] == 7
 
 
+def _counts(port: int) -> dict[str, int]:
+    """mse_queries_total by kind, scraped from /metrics."""
+    import re
+
+    with urllib.request.urlopen(
+        f"http://127.0.0.1:{port}/metrics", timeout=10
+    ) as resp:
+        body = resp.read().decode()
+    return {
+        k: int(v)
+        for k, v in re.findall(r'mse_queries_total\{kind="([^"]+)"\} (\d+)', body)
+    }
+
+
+def test_malformed_bodies_get_counted_400(server):
+    """Malformed input gets a 400 reply and one counted error — never a
+    dropped connection: a non-integer top_k, a JSON array body and an
+    unknown field."""
+    srv, _ = server
+    before = _counts(srv.port)
+    bodies = [
+        {"query": "term0001", "top_k": "abc"},
+        [{"query": "term0001"}],
+        {"query": "term0001", "vector": [0.1, 0.2]},
+    ]
+    for body in bodies:
+        code, resp = _post(srv.port, body)
+        assert code == 400, body
+        assert "bad request" in resp["error"]
+    after = _counts(srv.port)
+    assert after.get("invalid_error", 0) - before.get("invalid_error", 0) == 3
+    # the server keeps answering
+    code, _body = _post(srv.port, {"query": "term0001", "top_k": 3})
+    assert code == 200
+
+
+def test_internal_error_gets_counted_500(server, monkeypatch):
+    """An I/O failure inside the searcher becomes a counted 500 with a
+    JSON body, not a dropped connection."""
+    srv, _ = server
+
+    def broken(*args, **kwargs):
+        raise OSError("segment read failed")
+
+    monkeypatch.setattr(srv.searcher, "search", broken)
+    before = _counts(srv.port)
+    code, resp = _post(srv.port, {"query": "term0001", "top_k": 3})
+    assert code == 500 and "OSError" in resp["error"]
+    after = _counts(srv.port)
+    assert after.get("internal_error", 0) - before.get("internal_error", 0) == 1
+
+
+def test_serving_process_imports_no_spark(server):
+    """The HTTP server and a served query load no pyspark."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from meme_search_engine_spark.query.http_server import SearchServer\n"
+        "assert 'pyspark' not in sys.modules, 'import'\n"
+        f"srv = SearchServer({_index_dir_of(server[0])!r})\n"
+        "assert srv.searcher.search('term0001 term0100', 5, with_urls=True)\n"
+        "assert 'pyspark' not in sys.modules, 'query'\n"
+        "srv._httpd.server_close()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+
+
 def test_concurrent_requests(server):
     """The reference load-test shape (perf_test.py): concurrent
     queries against the threaded server."""
@@ -181,125 +223,6 @@ def test_concurrent_requests(server):
     with concurrent.futures.ThreadPoolExecutor(16) as ex:
         results = list(ex.map(one, range(64)))
     assert all(r > 0 for r in results)
-
-
-def test_hybrid_request(server):
-    """qvec + text fuses both channels and matches the direct
-    LocalSearcher.search_hybrid call; qvec without an embeddings table
-    is a clean 400."""
-    srv, oracle = server
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    emb = rng.normal(size=(300, 16)).astype(np.float32)
-    qvec = [float(x) for x in emb[5]]
-    # no-text hybrid: ranking is pure cosine, the self vector wins
-    code, resp = _post(srv.port, {"qvec": qvec, "top_k": 7})
-    assert code == 200
-    assert resp["matches"][0]["doc_id"] == 5
-    # fused request equals the direct LocalSearcher call
-    code, resp = _post(
-        srv.port, {"query": "term0001", "qvec": qvec, "top_k": 7}
-    )
-    assert code == 200
-    assert len(resp["matches"]) == 7
-    direct = srv.searcher.search_hybrid(
-        "term0001", qvec, _emb_path_of(srv), k=7, ivf_dir=_ivf_dir_of(srv)
-    )
-    assert [
-        (m["doc_id"], m["score_fixed"]) for m in resp["matches"]
-    ] == [(d["doc_id"], d["score_fixed"]) for d in direct]
-
-    bare = SearchServer(_index_dir_of(srv)).start()
-    try:
-        code, resp = _post(bare.port, {"query": "x", "qvec": qvec})
-        assert code == 400
-        assert "hybrid" in resp["error"]
-    finally:
-        bare.stop()
-
-
-def _emb_path_of(srv):
-    import os
-
-    return os.path.join(
-        os.path.dirname(_index_dir_of(srv)), "embeddings.parquet"
-    )
-
-
-def _ivf_dir_of(srv):
-    import os
-
-    return os.path.join(os.path.dirname(_index_dir_of(srv)), "ivf")
-
-
-def test_hybrid_pool_knobs(server):
-    """Per-request pool sizing (VERDICT r06 #4): n_probe/n_candidates
-    flow from the request body to search_hybrid, clamped so hostile
-    values (0, negative, giant) never reach ivf.candidates raw
-    (ADVICE r06).  A widened pool demonstrably changes recall: a query
-    vector BETWEEN two docs that live in different IVF lists loses one
-    of them at n_probe=1 and recovers both at n_probe=8."""
-    import numpy as np
-
-    from meme_search_engine_spark.query.serve import LocalIVF
-
-    srv, _ = server
-    rng = np.random.default_rng(7)
-    emb = rng.normal(size=(N_DOCS, 16)).astype(np.float32)
-    qvec5 = [float(x) for x in emb[5]]
-
-    # clamping: degenerate n_candidates values still answer with k
-    for bad in (0, -5, 10**9):
-        code, resp = _post(
-            srv.port, {"qvec": qvec5, "top_k": 5, "n_candidates": bad}
-        )
-        assert code == 200 and len(resp["matches"]) == 5, bad
-    code, resp = _post(srv.port, {"qvec": qvec5, "top_k": 5, "n_probe": -3})
-    assert code == 200 and len(resp["matches"]) == 5
-
-    # plant a between-two-lists query: doc a=5 and the first doc b
-    # assigned to a DIFFERENT IVF list than a
-    ivf = LocalIVF(_ivf_dir_of(srv))
-    en = emb / np.linalg.norm(emb, axis=1, keepdims=True)
-    assign = np.argmax(en @ ivf._cn.T, axis=1)
-    a = 5
-    b = next(i for i in range(N_DOCS) if assign[i] != assign[a])
-    mid = [float(x) for x in en[a] + en[b]]
-
-    code, wide = _post(
-        srv.port,
-        {"qvec": mid, "top_k": 2, "n_probe": 8, "n_candidates": 300},
-    )
-    assert code == 200
-    wide_ids = {m["doc_id"] for m in wide["matches"]}
-    assert wide_ids == {a, b}  # both planted neighbors recovered
-    code, narrow = _post(
-        srv.port,
-        {"qvec": mid, "top_k": 2, "n_probe": 1, "n_candidates": 300},
-    )
-    assert code == 200
-    narrow_ids = {m["doc_id"] for m in narrow["matches"]}
-    # n_probe=1 reads exactly one list; a and b are in different lists,
-    # so at most one of them can appear
-    assert not {a, b} <= narrow_ids
-
-    # parity with the direct call at the SAME knob values
-    direct = srv.searcher.search_hybrid(
-        "",
-        mid,
-        _emb_path_of(srv),
-        2,
-        w_text=3,
-        w_vec=1,
-        with_urls=True,
-        ivf_dir=_ivf_dir_of(srv),
-        n_candidates=300,
-        n_probe=8,
-    )
-    assert [(m["doc_id"], m["score_fixed"]) for m in wide["matches"]] == [
-        (d["doc_id"], d["score_fixed"]) for d in direct
-    ]
 
 
 def test_metrics_endpoint(server):
@@ -336,20 +259,10 @@ def test_fork_server_parity_and_worker_spread(server):
     ]
     want = [_post(srv.port, q) for q in queries]
 
-    fork = ForkServer(
-        _index_dir_of(srv),
-        workers=3,
-        embeddings_path=_emb_path_of(srv),
-        ivf_dir=_ivf_dir_of(srv),
-    ).start()
+    fork = ForkServer(_index_dir_of(srv), workers=3).start()
     try:
         got = [_post(fork.port, q) for q in queries]
         assert got == want
-
-        # hybrid parity through the forked workers too
-        qvec = [float(i % 5 - 2) for i in range(16)]
-        hq = {"query": "term0001", "qvec": qvec, "top_k": 5}
-        assert _post(fork.port, hq) == _post(srv.port, hq)
 
         def health(_):
             with urllib.request.urlopen(
@@ -430,6 +343,39 @@ def test_fork_server_supervision_reforks_dead_worker(server):
         # the replacement needs its own LocalSearcher build; queries
         # keep succeeding throughout (the surviving worker serves,
         # then both)
+        code, body = _post(fork.port, {"query": "term0001", "top_k": 3})
+        assert code == 200 and len(body["matches"]) == 3
+    finally:
+        fork.stop()
+
+
+def test_fork_server_refork_cap_decays(server):
+    """Sporadic worker deaths, each after the replacement served past
+    the backoff window, never exhaust max_reforks: the refork count
+    resets with the backoff."""
+    import signal
+    import time
+
+    from meme_search_engine_spark.query.mp_server import ForkServer
+
+    srv, _ = server
+    fork = ForkServer(_index_dir_of(srv), workers=1, supervise=True)
+    fork.max_reforks = 2
+    fork.refork_backoff_start = 0.1
+    fork.start()
+    try:
+        for _ in range(fork.max_reforks + 2):
+            pid = fork._procs[0].pid
+            os.kill(pid, signal.SIGKILL)
+            deadline = time.time() + 30
+            while time.time() < deadline and (
+                fork._procs[0].pid == pid or fork.alive_workers() < 1
+            ):
+                time.sleep(0.05)
+            assert fork._procs[0].pid != pid
+            time.sleep(1.0)  # serve well past the backoff window
+        assert not fork.supervisor_gave_up
+        assert fork.refork_count == 1
         code, body = _post(fork.port, {"query": "term0001", "top_k": 3})
         assert code == 200 and len(body["matches"]) == 3
     finally:

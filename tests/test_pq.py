@@ -470,69 +470,3 @@ def test_compact_ivf_crash_recovery(spark, emb_df, tmp_path):
     assert not os.path.isdir(os.path.join(out, "lists.old"))
     after = ivf_index.ivf_search(spark, out, qpd, k=10, n_probe=4).toPandas()
     assert before.values.tolist() == after.values.tolist()
-
-
-def test_local_ivf_decode_matches_pylist_all_storages(
-    spark, emb_df, tmp_path
-):
-    """LocalIVF._decoded_fragment's Arrow buffer decode (offsets+data,
-    no per-row to_pylist — ADVICE r05) is bit-identical to the slow
-    per-row decode for every storage tier."""
-    from meme_search_engine_spark.ops import ivf_index
-    from meme_search_engine_spark.query.serve import (
-        _IVF_STORAGE_COLS,
-        LocalIVF,
-    )
-
-    cents = similarity.deterministic_centroids(emb_df, 4)
-    for storage, kw in [
-        ("pq", dict(pq_m=16, pq_ksub=32)),
-        ("int8", {}),
-        ("fp16", {}),
-        ("fp32", {}),
-    ]:
-        out = str(tmp_path / f"ivf_{storage}")
-        ivf_index.build_ivf_index(
-            spark, emb_df, out, centroids=cents, storage=storage, **kw
-        )
-        ivf = LocalIVF(out)
-        lid, frag = next(
-            (l, fs[0])
-            for l, fs in sorted(ivf._frags_by_list.items())
-            if fs
-        )
-        col = _IVF_STORAGE_COLS[storage]
-        t = frag.to_table(columns=["vec_id", col])
-        got = ivf._decoded_fragment(lid, 0, frag)[1]
-        if storage == "fp32":
-            old = np.asarray(t.column(col).to_pylist(), dtype=np.float64)
-        else:
-            raw = b"".join(t.column(col).to_pylist())
-            if storage == "pq":
-                old = np.frombuffer(raw, dtype=np.uint8).reshape(
-                    t.num_rows, 16
-                )
-            elif storage == "fp16":
-                old = (
-                    np.frombuffer(raw, dtype="<f2")
-                    .astype(np.float64)
-                    .reshape(t.num_rows, -1)
-                )
-            else:
-                lo = np.asarray(
-                    ivf.manifest["int8_smin"], dtype=np.float64
-                )
-                hi = np.asarray(
-                    ivf.manifest["int8_smax"], dtype=np.float64
-                )
-                qc = (
-                    np.frombuffer(raw, dtype=np.uint8)
-                    .reshape(t.num_rows, len(lo))
-                    .astype(np.float64)
-                )
-                old = (
-                    (lo + qc * ((hi - lo) / 255.0))
-                    .astype(np.float32)
-                    .astype(np.float64)
-                )
-        np.testing.assert_array_equal(got, old, err_msg=storage)

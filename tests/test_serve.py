@@ -123,102 +123,6 @@ def test_local_searcher_latency(built):
     assert lat[10] < 0.5, lat
 
 
-def test_embedding_point_lookup_budget_paths(sf01_dir):
-    """_EmbeddingPointLookup must return IDENTICAL (ids, vectors) from
-    both of its modes: cached (table fits the byte budget) and the
-    over-budget dataset-level filtered fallback (budget 0)."""
-    import os
-
-    import numpy as np
-
-    from meme_search_engine_spark.query.serve import _EmbeddingPointLookup
-
-    path = f"{sf01_dir}/embeddings.parquet"
-    ids = [3, 7, 11, 200, 123456789]  # incl. a missing id
-
-    cached = _EmbeddingPointLookup(path)
-    assert cached._cacheable
-    got_c = cached.vectors_for(ids)
-
-    os.environ["SPARK_GRAFT_EMB_CACHE_MB"] = "0"
-    try:
-        filtered = _EmbeddingPointLookup(path)
-        assert not filtered._cacheable
-        got_f = filtered.vectors_for(ids)
-    finally:
-        del os.environ["SPARK_GRAFT_EMB_CACHE_MB"]
-
-    assert np.array_equal(got_c[0], got_f[0])
-    assert np.array_equal(got_c[1], got_f[1])
-    assert len(got_c[0]) == 4  # the missing id dropped
-    assert list(got_c[0]) == sorted(got_c[0])  # ascending contract
-
-
-def test_resident_caches_invalidate_on_rewrite(spark, tmp_path):
-    """A server running across an index/table REWRITE must not serve
-    stale decoded vectors (ADVICE r05): the module-level caches
-    fingerprint the path (manifest/commit-marker stat) per access and
-    rebuild when it moves."""
-    import numpy as np
-    import pandas as pd
-
-    from meme_search_engine_spark.datagen import generate_embeddings
-    from meme_search_engine_spark.ops.ivf_index import build_ivf_index
-    from meme_search_engine_spark.ops.similarity import (
-        deterministic_centroids,
-    )
-    from meme_search_engine_spark.query.serve import LocalSearcher
-
-    def emb_df(seed_shift):
-        ids, vecs = generate_embeddings(300, 16)
-        pdf = pd.DataFrame(
-            {
-                "vec_id": ids,
-                # shift vectors so the rewrite visibly changes results
-                "embedding": [
-                    [float(x) for x in np.roll(v, seed_shift)] for v in vecs
-                ],
-            }
-        )
-        return spark.createDataFrame(
-            pdf, "vec_id bigint, embedding array<float>"
-        )
-
-    out = str(tmp_path / "ivf")
-    emb_path = str(tmp_path / "emb")
-    e1 = emb_df(0)
-    e1.write.mode("overwrite").parquet(emb_path)
-    build_ivf_index(
-        spark, e1, out, centroids=deterministic_centroids(e1, 4)
-    )
-
-    s = LocalSearcher.__new__(LocalSearcher)  # only the cache methods
-    q = [float(x) for x in np.arange(16)]
-    ivf1 = s._ivf(out)
-    c1 = ivf1.candidates(q, k=5, n_probe=4)
-    ids1, m1 = s._vectors_for(emb_path, c1)
-    assert s._ivf(out) is ivf1  # unchanged dir -> same resident object
-
-    # rewrite BOTH the index and the table with different content
-    e2 = emb_df(3)
-    e2.write.mode("overwrite").parquet(emb_path)
-    build_ivf_index(
-        spark, e2, out, centroids=deterministic_centroids(e2, 4)
-    )
-
-    ivf2 = s._ivf(out)
-    assert ivf2 is not ivf1  # fingerprint moved -> rebuilt
-    c2 = ivf2.candidates(q, k=5, n_probe=4)
-    ids2, m2 = s._vectors_for(emb_path, sorted(set(c1) | set(c2)))
-    # the served vectors are the REWRITTEN table's (roll(3) != roll(0))
-    common = np.intersect1d(ids1, ids2)
-    assert len(common)
-    row1 = m1[np.searchsorted(ids1, common[0])]
-    row2 = m2[np.searchsorted(ids2, common[0])]
-    assert not np.array_equal(row1, row2)
-    assert np.array_equal(np.roll(row2, -3), row1)
-
-
 def test_serve_survives_compaction_swap(spark, tmp_path):
     """A searcher whose fragment map predates a compact_index swap must
     serve THROUGH the swap (re-resolve + retry, VERDICT r07 #3) — no
@@ -254,30 +158,3 @@ def test_serve_survives_compaction_swap(spark, tmp_path):
     assert s.search("term0001", 10) == head_before
     assert fresh.search("term0001", 10) == head_before
 
-
-def test_ivf_probe_survives_compact_swap(spark, tmp_path):
-    """LocalIVF keeps answering through a compact_ivf_index rewrite:
-    stale fragments trigger one re-resolve + retry, and the candidate
-    set is invariant (compaction only dedups rows)."""
-    from meme_search_engine_spark.datagen import ensure_embeddings
-    from meme_search_engine_spark.ops.ivf_index import (
-        append_ivf_index,
-        build_ivf_index,
-        compact_ivf_index,
-    )
-    from meme_search_engine_spark.query.serve import LocalIVF
-
-    emb_dir = ensure_embeddings(str(tmp_path), 2000)
-    emb = spark.read.parquet(emb_dir)
-    d = str(tmp_path / "ivf_swap")
-    build_ivf_index(
-        spark, emb.filter("vec_id < 1500"), d, n_lists=8, n_iters=2
-    )
-    append_ivf_index(spark, emb.filter("vec_id >= 1500"), d)
-    probe = LocalIVF(d)
-    q = [float(x) for x in emb.filter("vec_id = 3").collect()[0]["embedding"]]
-    before = probe.candidates(q, k=10, n_probe=4)
-    compact_ivf_index(spark, d)  # lists rewritten, old files gone
-    after = probe.candidates(q, k=10, n_probe=4)
-    assert after == LocalIVF(d).candidates(q, k=10, n_probe=4)
-    assert after == before

@@ -214,51 +214,3 @@ def test_incremental_ivf_update_equals_batch_append(spark, tmp_path):
     a = ivf_index.ivf_search(spark, inc, qpd, k=10, n_probe=4).toPandas()
     b = ivf_index.ivf_search(spark, cold, qpd, k=10, n_probe=4).toPandas()
     assert a.values.tolist() == b.values.tolist()
-
-
-def test_incremental_vamana_update_equals_batch(spark, tmp_path):
-    """Streamed graph-index ingestion (foreachBatch -> frozen-centroid
-    routing + touched-shard rebuilds) answers queries identically to a
-    cold Vamana build over the full embedding set."""
-    import pyspark.sql.functions as SF
-
-    from meme_search_engine_spark.ops import vamana
-    from meme_search_engine_spark.ops.similarity import (
-        deterministic_centroids,
-    )
-    from meme_search_engine_spark.streaming.windows import (
-        incremental_vamana_update,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    old = emb.filter(SF.col("vec_id") < 400)
-    new_dir = str(tmp_path / "new_vecs_vam")
-    emb.filter(SF.col("vec_id") >= 400).write.parquet(new_dir)
-
-    cents = deterministic_centroids(old, 4)
-    inc = str(tmp_path / "vam_stream")
-    cold = str(tmp_path / "vam_cold")
-    vamana.build_vamana_index(
-        spark, old, inc, n_shards=4, centroids=cents, r=8, beam=24
-    )
-    q = incremental_vamana_update(
-        spark,
-        _read_stream(spark, new_dir),
-        inc,
-        str(tmp_path / "ckpt_vam"),
-    )
-    q.awaitTermination(180)
-    vamana.build_vamana_index(
-        spark, emb, cold, n_shards=4, centroids=cents, r=8, beam=24
-    )
-    qpd = (
-        emb.orderBy("vec_id").limit(3)
-        .select(
-            SF.col("vec_id").alias("query_id"),
-            SF.col("embedding").alias("qvec"),
-        )
-        .toPandas()
-    )
-    a = vamana.vamana_search(spark, inc, qpd, k=10, n_probe=4).toPandas()
-    b = vamana.vamana_search(spark, cold, qpd, k=10, n_probe=4).toPandas()
-    assert a.values.tolist() == b.values.tolist()

@@ -206,3 +206,20 @@ def test_seed_thetas_local_equals_per_query_seed(spark, tmp_path):
     assert new == old
     assert new[0] == new[2]  # shared (terms, k) -> shared theta
     assert 4 not in new  # absent-terms query stays unseeded (-> 0)
+
+
+def test_query_terms_local_skips_null_text(spark, monkeypatch):
+    """A null `text` row yields no terms on the driver-local path, the
+    same as on the distributed path (explode of a null token array)."""
+    from meme_search_engine_spark.query import dataframe_engine as de
+
+    qdf = spark.createDataFrame(
+        [(0, "alpha beta", 5), (1, None, 10), (2, "beta", 10)],
+        "query_id int, text string, k int",
+    )
+    local = de.query_terms_local(qdf)
+    assert local is not None
+    monkeypatch.setattr(de, "query_terms_local", lambda *a, **kw: None)
+    distributed = sorted(tuple(r) for r in de.query_terms(qdf).collect())
+    assert sorted(local) == distributed
+    assert {qid for qid, *_ in local} == {0, 2}

@@ -38,7 +38,6 @@ def main() -> None:
     from meme_search_engine_spark.index.postings import IndexConfig, build_partials
     from meme_search_engine_spark.query.dataframe_engine import bm25_topk, query_terms
     from meme_search_engine_spark import gate
-    import pyspark.sql.functions as F
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="explain", cores=8, shuffle_partitions=8)
@@ -121,82 +120,6 @@ def main() -> None:
         "only the candidate set shuffles against the per-doc priors, the "
         "full postings never join the prior table",
         fmt(pq),
-    ))
-
-    # persistent IVF probe: the list filter must be a PARTITION filter
-    from meme_search_engine_spark.ops import ivf_index
-    from meme_search_engine_spark.ops.similarity import deterministic_centroids
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    ivf_dir = tempfile.mkdtemp(prefix="plans_ivf_")
-    ivf_index.build_ivf_index(
-        spark, emb, ivf_dir, spill=1,
-        centroids=deterministic_centroids(emb, 8), storage="fp16",
-    )
-    qpd = (
-        emb.limit(3)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        .toPandas()
-    )
-    iv = ivf_index.ivf_search(spark, ivf_dir, qpd, k=10, n_probe=3)
-    sections.append((
-        "persistent IVF ANN probe (fp16 lists)",
-        "want: scan shows PartitionFilters on list_id (the probe reads "
-        "~n_probe/n_lists of the data via layout, not a row filter); "
-        "query rows broadcast; fp16 decode Arrow-batched on only the "
-        "pruned fraction; per-query window top-k over candidates",
-        fmt(iv),
-    ))
-
-    # hybrid fusion: cosine channel broadcast-joined, BM25 channel
-    # joins only above its aggregate
-    from meme_search_engine_spark.gate_pipeline import hybrid_bm25_cosine_topk
-    hy = hybrid_bm25_cosine_topk(spark, sf_dir)
-    sections.append((
-        "hybrid BM25 + cosine fusion",
-        "want: the query table (text terms AND query vectors) is "
-        "BROADCAST on both channels — the doc/embedding sides never "
-        "shuffle for a join; the text channel aggregates (partial_sum "
-        "then one (query_id,doc_id) exchange) BEFORE fusing with the "
-        "dense cosine channel via a left join on the aggregated "
-        "candidate rows; one final per-query window top-k",
-        fmt(hy),
-    ))
-
-    # PQ/ADC probe over the persistent index: codes scored via LUT
-    # gathers, still partition-pruned, never decoded
-    pq_dir = tempfile.mkdtemp(prefix="plans_pq_")
-    ivf_index.build_ivf_index(
-        spark, emb, pq_dir, spill=1,
-        centroids=deterministic_centroids(emb, 8), storage="pq",
-        pq_m=16, pq_ksub=64,
-    )
-    pqs = ivf_index.ivf_search(spark, pq_dir, qpd, k=10, n_probe=3)
-    sections.append((
-        "persistent IVF probe, PQ storage (ADC scoring)",
-        "want: same PartitionFilters on list_id; the scan reads vec_id + "
-        "the m-byte pq_code column ONLY (no embedding column exists — "
-        "ReadSchema proves the 72x-smaller payload); ArrowEvalPython is "
-        "the per-batch ADC lookup, then the same window top-k",
-        fmt(pqs),
-    ))
-
-    # Vamana beam search: shard partition pruning + per-shard kernel
-    from meme_search_engine_spark.ops import vamana
-    vam_dir = tempfile.mkdtemp(prefix="plans_vam_")
-    vamana.build_vamana_index(
-        spark, emb, vam_dir, n_shards=4,
-        centroids=deterministic_centroids(emb, 4), r=8, beam=24,
-    )
-    vs = vamana.vamana_search(spark, vam_dir, qpd, k=10, n_probe=2)
-    sections.append((
-        "Vamana graph ANN beam search (sharded DiskANN analogue)",
-        "want: scan shows PartitionFilters on list_id (only the probed "
-        "shards' graph partitions are read); ONE exchange keyed list_id "
-        "feeding FlatMapGroupsInPandas — whole-shard groups, because a "
-        "split shard beam-searches a broken graph (mapInPandas would "
-        "fragment shards at maxPartitionBytes); <= k rows per "
-        "(shard, query); tiny (query_id) window merge",
-        fmt(vs),
     ))
 
     with open("PLANS.md", "w") as fh:

@@ -2,20 +2,15 @@
 perf_test.py (/root/reference/perf_test.py:6-27: 1000 random queries,
 k=10, 100 concurrent against localhost).
 
-Modes (r4 advice #7):
-  text    POST {"query": ...}          — BM25 serving path
-  hybrid  POST {"query", "qvec", ...}  — fused text+vector serving
-          (plus a dedup_threshold=0.95 pass exercising the query-time
-          near-dup suppression under load)
+Drives the BM25 serving path with POST {"query": ...} bodies.
 
 Usage:
     python tools/load_test.py [--index data/eval_idx_5000]
-        [--n 1000] [--concurrency 100] [--k 10] [--mode both]
+        [--n 1000] [--concurrency 100] [--k 10]
 
-Prints ONE JSON line per mode: {"qps": ..., "p50_ms": ...,
-"p99_ms": ..., "errors": 0, ...}.  Needs a built index dir
-(tools/evaluate.py leaves one under data/eval_idx_<docs>); hybrid mode
-materializes a matching embeddings table + IVF index on first run.
+Prints ONE JSON line: {"qps": ..., "p50_ms": ..., "p99_ms": ...,
+"errors": 0, ...}.  Needs a built index dir (tools/evaluate.py leaves
+one under data/eval_idx_<docs>).
 """
 
 from __future__ import annotations
@@ -46,30 +41,6 @@ def _cpu_control(n: int = 20_000_000) -> float:
     for i in range(n):
         s += i * i
     return round(n / (time.time() - t0) / 1e6, 2)
-
-
-def _ensure_hybrid_fixtures(n_docs: int) -> tuple[str, str]:
-    """(embeddings_dir, ivf_dir) for the eval index's doc-id space
-    (datagen ids are dense 0..n-1, so vec_id == doc_id); built once,
-    reused across runs."""
-    from meme_search_engine_spark.datagen import ensure_embeddings
-
-    emb_dir = ensure_embeddings(DATA_DIR, n_docs)
-    ivf_dir = os.path.join(DATA_DIR, f"eval_ivf_{n_docs}")
-    if not os.path.exists(os.path.join(ivf_dir, "ivf_manifest.json")):
-        from meme_search_engine_spark.session import get_spark
-        from meme_search_engine_spark.ops.ivf_index import build_ivf_index
-
-        spark = get_spark(app_name="load-test-ivf", cores=8,
-                          shuffle_partitions=16)
-        try:
-            build_ivf_index(
-                spark, spark.read.parquet(emb_dir), ivf_dir,
-                n_lists=64, storage="fp16",
-            )
-        finally:
-            spark.stop()
-    return emb_dir, ivf_dir
 
 
 def _client_worker(args) -> list[float]:
@@ -144,9 +115,8 @@ def run_mode(
     seen = set()
     distinct = []
     for b in bodies:
-        key = (b.get("query"), bool(b.get("qvec")), b.get("dedup_threshold"))
-        if key not in seen:
-            seen.add(key)
+        if b["query"] not in seen:
+            seen.add(b["query"])
             distinct.append(b)
     with ThreadPoolExecutor(max(2, min(32, warm_rounds * 2))) as ex:
         list(ex.map(one, distinct * warm_rounds))  # raises on failure
@@ -193,9 +163,6 @@ def main() -> None:
     ap.add_argument("--concurrency", type=int, default=100)
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument(
-        "--mode", choices=["text", "hybrid", "both"], default="both"
-    )
-    ap.add_argument(
         "--client-procs", type=int, default=1,
         help="load-client processes; >1 removes the client's own GIL "
         "ceiling when measuring a multi-worker server",
@@ -217,27 +184,10 @@ def main() -> None:
     # reference query set (no wall-clock seeds anywhere)
     texts = [qtexts[i % len(qtexts)] for i in range(args.n)]
 
-    emb_dir = ivf_dir = None
-    qvecs = None
-    if args.mode in ("hybrid", "both"):
-        emb_dir, ivf_dir = _ensure_hybrid_fixtures(n_docs)
-        from meme_search_engine_spark.datagen import generate_embeddings
-
-        # deterministic query vectors: stride through the corpus
-        # embedding space so probes hit many lists
-        _, vecs = generate_embeddings(256, 64)
-        qvecs = [
-            [float(x) for x in vecs[(i * 31) % len(vecs)]]
-            for i in range(args.n)
-        ]
-
     if args.workers > 0:
         from meme_search_engine_spark.query.mp_server import ForkServer
 
-        srv = ForkServer(
-            args.index, workers=args.workers,
-            embeddings_path=emb_dir, ivf_dir=ivf_dir,
-        ).start()
+        srv = ForkServer(args.index, workers=args.workers).start()
         # full readiness before the timed phase (VERDICT r07 #5):
         # an accept-starved start would otherwise time cold workers
         # inside the "warm" window and misreport the tier
@@ -245,9 +195,7 @@ def main() -> None:
             f"only {srv.ready_workers}/{args.workers} workers ready"
         )
     else:
-        srv = SearchServer(
-            args.index, embeddings_path=emb_dir, ivf_dir=ivf_dir
-        ).start()
+        srv = SearchServer(args.index).start()
     warm_rounds = max(1, 4 * args.workers)
 
     def emit(payload: dict) -> None:
@@ -267,41 +215,14 @@ def main() -> None:
             "n_docs": n_docs, "workers": args.workers,
             "client_procs": args.client_procs,
         }
-        if args.mode in ("text", "both"):
-            r = run_mode(
-                srv,
-                [{"query": t, "top_k": args.k} for t in texts],
-                args.concurrency,
-                warm_rounds,
-                args.client_procs,
-            )
-            emit({"metric": "http_load_text", **r, **common})
-        if args.mode in ("hybrid", "both"):
-            r = run_mode(
-                srv,
-                [
-                    {"query": t, "qvec": qv, "top_k": args.k}
-                    for t, qv in zip(texts, qvecs)
-                ],
-                args.concurrency,
-                warm_rounds,
-                args.client_procs,
-            )
-            emit({"metric": "http_load_hybrid", **r, **common})
-            r = run_mode(
-                srv,
-                [
-                    {
-                        "query": t, "qvec": qv, "top_k": args.k,
-                        "dedup_threshold": 0.95,
-                    }
-                    for t, qv in zip(texts, qvecs)
-                ],
-                args.concurrency,
-                warm_rounds,
-                args.client_procs,
-            )
-            emit({"metric": "http_load_hybrid_dedup", **r, **common})
+        r = run_mode(
+            srv,
+            [{"query": t, "top_k": args.k} for t in texts],
+            args.concurrency,
+            warm_rounds,
+            args.client_procs,
+        )
+        emit({"metric": "http_load_text", **r, **common})
     finally:
         srv.stop()
 
