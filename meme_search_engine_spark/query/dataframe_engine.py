@@ -19,6 +19,8 @@ aggregate is exact integer math — identical result for any partitioning
 
 from __future__ import annotations
 
+import logging
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -51,6 +53,13 @@ def query_terms_local(
             if len(rows) > max_rows:
                 return None
     except Exception:
+        # the distributed fallback answers identically, but the plan
+        # change must not go unseen
+        logging.getLogger(__name__).warning(
+            "driver-local query tokenization failed; planning it "
+            "distributed instead",
+            exc_info=True,
+        )
         return None
     from ..common.hashing import term_hash as _th
     from ..common.textproc import tokenize as _tok

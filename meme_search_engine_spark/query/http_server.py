@@ -20,7 +20,10 @@ GET /presets lists saved presets; PUT semantics via
 Every POST gets exactly one reply and one count in /metrics: 200 for
 an answer, 400 for a malformed body (not a JSON object, a bad top_k,
 an unknown field or query shape), 404 for an unknown preset, and a
-500 counted as kind="internal" for any other failure.
+500 counted as kind="internal" for any other failure.  GET /metrics
+also carries the searcher's decoded term cache counters
+(mse_term_cache_{hits,misses,evictions}_total) and how often it
+reloaded the resident docmeta (mse_docmeta_reloads_total).
 """
 
 from __future__ import annotations
@@ -146,7 +149,9 @@ class Metrics:
                 if len(self._lat_ms) > 4096:
                     self._lat_ms = self._lat_ms[-2048:]
 
-    def render(self) -> str:
+    def render(self, searcher_counts: dict[str, int]) -> str:
+        """The exposition text; `searcher_counts` (LocalSearcher.counts)
+        become one mse_<name>_total counter each."""
         with self._lock:
             lines = [
                 "# TYPE mse_queries_total counter",
@@ -155,6 +160,9 @@ class Metrics:
                 lines.append(
                     f'mse_queries_total{{kind="{key}"}} {self._counts[key]}'
                 )
+            for name, v in sorted(searcher_counts.items()):
+                lines.append(f"# TYPE mse_{name}_total counter")
+                lines.append(f"mse_{name}_total {v}")
             lat = sorted(self._lat_ms)
             if lat:
                 lines.append("# TYPE mse_query_latency_ms summary")
@@ -244,7 +252,7 @@ def make_handler(
 
         def do_GET(self):
             if self.path == "/metrics":
-                body = metrics.render().encode()
+                body = metrics.render(searcher.counts()).encode()
                 self.send_response(200)
                 self.send_header(
                     "Content-Type", "text/plain; version=0.0.4"

@@ -87,8 +87,10 @@ def score_query_blocks(
 
     pdf columns: query_id, k, term_hash, df, block_id, n_docs,
     min_doc_id, max_doc_id, doc_ids, tfs, dls, block_max_tfnorm.
-    Shared by the distributed grouped-map path (wand_topk) and the
-    driver-local serving path (query.serve.LocalSearcher).
+    Called only by the distributed grouped-map path (wand_topk); the
+    driver-local serving path (query.serve.LocalSearcher) does not
+    prune blocks, it scores every posting of its query terms from its
+    decoded term cache.
 
     doc_shift/range_id: when set, only postings whose unsigned doc_id
     satisfies (udoc >> doc_shift) == range_id are scored — the doc-range

@@ -5,6 +5,7 @@ reindex loop parity, SURVEY.md §2.9)."""
 import json
 import os
 
+import numpy as np
 import pytest
 
 import pyspark.sql.functions as F
@@ -172,12 +173,27 @@ def test_compaction_preserves_results(spark, dirs, tmp_path):
     pages = spark.read.parquet(os.path.join(base, f"pages_{N_DOCS}"))
     out = str(tmp_path / "compact_idx")
     build_index(spark, pages.filter(F.col("doc_id") < SPLIT), out, CFG)
-    append_to_index(spark, pages.filter(F.col("doc_id") >= SPLIT), out)
+    # a searcher opened before the append: its resident docmeta must
+    # pick up the appended docs' URLs and priors, and keep them
+    # through the compaction
+    early = LocalSearcher(out)
+    assert early.urls_for([0]) and not early.urls_for([SPLIT])
+    appended = pages.filter(F.col("doc_id") >= SPLIT)
+    want_urls = {r["doc_id"]: r["url"] for r in appended.collect()}
+    new_ids = np.array(sorted(want_urls), dtype=np.int64)
+
+    def assert_docmeta_fresh():
+        assert early.urls_for(new_ids.tolist()) == want_urls
+        assert (early._priors_fixed_for(new_ids, 0.5, -0.25) != 0).all()
+
+    append_to_index(spark, appended, out)
     assert index_epochs(out) == [0, 1]
+    assert_docmeta_fresh()
     queries = generate_queries(N_DOCS)[:20]
     before = [LocalSearcher(out).search(q["text"], q["k"]) for q in queries]
     compact_index(spark, out)
     assert index_epochs(out) == [0]
+    assert_docmeta_fresh()
     after_s = LocalSearcher(out)
     after = [after_s.search(q["text"], q["k"]) for q in queries]
     assert before == after

@@ -131,17 +131,22 @@ def test_health_and_errors(server):
     assert code == 200 and body["matches"][0]["doc_id"] == 7
 
 
+def _metrics(port: int) -> str:
+    with urllib.request.urlopen(
+        f"http://127.0.0.1:{port}/metrics", timeout=10
+    ) as resp:
+        return resp.read().decode()
+
+
 def _counts(port: int) -> dict[str, int]:
     """mse_queries_total by kind, scraped from /metrics."""
     import re
 
-    with urllib.request.urlopen(
-        f"http://127.0.0.1:{port}/metrics", timeout=10
-    ) as resp:
-        body = resp.read().decode()
     return {
         k: int(v)
-        for k, v in re.findall(r'mse_queries_total\{kind="([^"]+)"\} (\d+)', body)
+        for k, v in re.findall(
+            r'mse_queries_total\{kind="([^"]+)"\} (\d+)', _metrics(port)
+        )
     }
 
 
@@ -239,6 +244,46 @@ def test_metrics_endpoint(server):
     assert 'mse_queries_total{kind="simple"}' in body
     assert 'mse_queries_total{kind="weighted"}' in body
     assert "mse_query_latency_ms_count" in body
+
+
+def _cache_counts(port: int) -> dict[str, int]:
+    """The searcher's cache counters, scraped from /metrics."""
+    import re
+
+    return {
+        k: int(v)
+        for k, v in re.findall(
+            r"^mse_(term_cache_\w+|docmeta_reloads)_total (\d+)$",
+            _metrics(port),
+            re.M,
+        )
+    }
+
+
+def test_metrics_term_cache_counters(server):
+    """One query sent twice: the first send misses the decoded term
+    cache once per term, the second hits it once per term.  The
+    resident docmeta is loaded once, not per request."""
+    srv, _ = server
+    terms = [rare_term(11), "term0211", "absentterm"]
+    query = {"query": " ".join(terms), "top_k": 3}
+    c0 = _cache_counts(srv.port)
+    assert set(c0) == {
+        "term_cache_hits",
+        "term_cache_misses",
+        "term_cache_evictions",
+        "docmeta_reloads",
+    }
+    assert _post(srv.port, query)[0] == 200
+    c1 = _cache_counts(srv.port)
+    assert _post(srv.port, query)[0] == 200
+    c2 = _cache_counts(srv.port)
+    assert c1["term_cache_misses"] - c0["term_cache_misses"] == len(terms)
+    assert c1["term_cache_hits"] == c0["term_cache_hits"]
+    assert c2["term_cache_hits"] - c1["term_cache_hits"] == len(terms)
+    assert c2["term_cache_misses"] == c1["term_cache_misses"]
+    assert c2["term_cache_evictions"] == 0
+    assert c2["docmeta_reloads"] == 1
 
 
 def test_fork_server_parity_and_worker_spread(server):

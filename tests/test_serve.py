@@ -109,6 +109,36 @@ def test_local_searcher_quality_prior_matches_spark_engine(built, spark):
         assert got == sorted(expected), text
 
 
+def test_over_cap_docmeta_fallback_matches_resident(built, monkeypatch):
+    """Above the resident row cap, the per-query filtered docmeta read
+    gives the same URLs, URL-carrying results and quality ranking as
+    the resident arrays; a doc_id absent from docmeta maps to no URL
+    on both paths."""
+    index_dir, _ = built
+    absent = N_DOCS + 3
+    ids = list(range(0, N_DOCS, 7)) + [absent]
+    texts = ["term0001 term0100", "term0007", "the term0042"]
+
+    def answers(s):
+        return (
+            s.urls_for(ids),
+            [s.search(t, 10, with_urls=True) for t in texts],
+            [s.search_quality(t, 10, with_urls=True) for t in texts],
+        )
+
+    resident = LocalSearcher(index_dir)
+    want = answers(resident)
+    assert resident._docmeta_channels() is not None
+    monkeypatch.setattr(LocalSearcher, "_DOCMETA_RESIDENT_MAX_ROWS", 0)
+    fallback = LocalSearcher(index_dir)
+    assert fallback._docmeta_channels() is None
+    got = answers(fallback)
+    assert got == want
+    urls = got[0]
+    assert absent not in urls and len(urls) == len(ids) - 1
+    assert all(u.startswith("https://example") for u in urls.values())
+
+
 def test_local_searcher_latency(built):
     index_dir, _ = built
     searcher = LocalSearcher(index_dir)

@@ -223,3 +223,23 @@ def test_query_terms_local_skips_null_text(spark, monkeypatch):
     distributed = sorted(tuple(r) for r in de.query_terms(qdf).collect())
     assert sorted(local) == distributed
     assert {qid for qid, *_ in local} == {0, 2}
+
+
+def test_query_terms_local_failure_is_logged(caplog):
+    """A failure of the driver-local tokenization falls back to the
+    distributed plan (None) and leaves a warning with the traceback."""
+    import logging
+
+    from meme_search_engine_spark.query import dataframe_engine as de
+
+    class BrokenQueries:
+        columns = ["query_id", "text"]
+
+        def isLocal(self):
+            raise RuntimeError("plan failed")
+
+    with caplog.at_level(logging.WARNING, logger=de.__name__):
+        assert de.query_terms_local(BrokenQueries()) is None
+    (rec,) = [r for r in caplog.records if r.name == de.__name__]
+    assert rec.levelno == logging.WARNING
+    assert rec.exc_info and "plan failed" in str(rec.exc_info[1])
