@@ -8,10 +8,10 @@ shard/index build).
     spark-submit --py-files mse_spark.zip jobs/pipeline_job.py \
         --input s3://bucket/pages --workdir s3://bucket/out \
         --min-tokens 10 --lang en --min-distinct-ratio 0.2 \
-        --dedup exact [--embeddings s3://bucket/emb --ivf]
+        --dedup exact
 
 Prints one JSON summary line with per-stage row counts and the built
-index's doc count and directory (plus the IVF index's, with --ivf).
+index's doc count and directory.
 """
 
 from __future__ import annotations
@@ -33,8 +33,6 @@ def run_pipeline(
     min_distinct_ratio: float = 0.0,
     max_stopword_ratio: float = 1.0,
     dedup: str = "exact",
-    embeddings=None,
-    build_ivf: bool = False,
     index_cfg=None,
 ) -> dict:
     """The library form (jobs call this; tests call it directly).
@@ -90,21 +88,6 @@ def run_pipeline(
     summary["index_docs"] = manifest["stats"]["N"]
     summary["index_dir"] = idx_dir
 
-    # ---- optional IVF index over surviving docs' embeddings ----
-    if embeddings is not None and build_ivf:
-        from meme_search_engine_spark.ops.ivf_index import build_ivf_index
-
-        surviving = keep.select(
-            F.col("doc_id").alias("vec_id")
-        )
-        emb_kept = embeddings.join(surviving, "vec_id")
-        summary["vectors_kept"] = emb_kept.count()
-        n_lists = min(64, max(4, summary["vectors_kept"] // 64))
-        build_ivf_index(
-            spark, emb_kept, os.path.join(workdir, "ivf"),
-            n_lists=n_lists,
-        )
-        summary["ivf_dir"] = os.path.join(workdir, "ivf")
     return summary
 
 
@@ -117,8 +100,6 @@ def main() -> None:
     ap.add_argument("--min-distinct-ratio", type=float, default=0.0)
     ap.add_argument("--max-stopword-ratio", type=float, default=1.0)
     ap.add_argument("--dedup", choices=("exact", "none"), default="exact")
-    ap.add_argument("--embeddings", default=None)
-    ap.add_argument("--ivf", action="store_true")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
 
@@ -138,7 +119,6 @@ def main() -> None:
     from meme_search_engine_spark.lake import load_pages
 
     pages = load_pages(spark, args.input)
-    emb = load_pages(spark, args.embeddings) if args.embeddings else None
     summary = run_pipeline(
         spark,
         pages,
@@ -148,8 +128,6 @@ def main() -> None:
         min_distinct_ratio=args.min_distinct_ratio,
         max_stopword_ratio=args.max_stopword_ratio,
         dedup=args.dedup,
-        embeddings=emb,
-        build_ivf=args.ivf,
     )
     print(json.dumps(summary))
 

@@ -160,18 +160,3 @@ def decode_blocks_batch(t: dict, sel: list[int]) -> tuple:
     offsets = np.where(starts > 0, cum[np.maximum(starts - 1, 0)], 0)
     d = cum - np.repeat(offsets, counts)
     return d, tfs, dls
-
-
-# ------------------------------------------------------------------- fp16
-
-def fp16_encode(vec: np.ndarray) -> bytes:
-    """float vector -> packed little-endian fp16 bytes — the
-    reference's half-precision embedding storage
-    (/root/reference/src/common.rs:98-108): 2x footprint cut for
-    embedding columns at 10^12-row scale, ~1e-3 relative rounding."""
-    return np.asarray(vec, dtype="<f2").tobytes()
-
-
-def fp16_decode(data: bytes) -> np.ndarray:
-    """Inverse of fp16_encode -> float32 vector."""
-    return np.frombuffer(data, dtype="<f2").astype(np.float32)

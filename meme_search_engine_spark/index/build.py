@@ -123,17 +123,6 @@ def term_doc_tf(docs: DataFrame) -> DataFrame:
     )
 
 
-def term_doc_tf_with_terms(docs: DataFrame) -> DataFrame:
-    """tf variant keeping the term string — for display/reporting
-    queries (e.g. top-df terms); the index itself never needs it."""
-    return (
-        docs.select("doc_id", "doc_len", F.explode("tokens").alias("term"))
-        .groupBy("doc_id", "doc_len", "term")
-        .agg(F.count("*").cast("int").alias("tf"))
-        .withColumn("term_hash", F.xxhash64("term"))
-    )
-
-
 def term_df(tf: DataFrame) -> DataFrame:
     """tf -> df(term_hash, df) — document frequency per term."""
     return tf.groupBy("term_hash").agg(F.count("*").alias("df"))

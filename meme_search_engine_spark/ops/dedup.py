@@ -1,5 +1,4 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup.
+"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
 All exact variants are DataFrame built-ins end-to-end; the hash-heavy
 ones keep hashing JVM-side (``xxhash64``) and do only the bit-twiddling
@@ -324,66 +323,3 @@ def simhash_near_pairs(
     return pairs.withColumn(
         "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     ).filter(F.col("hamming") <= max_hamming).select("doc_a", "doc_b", "hamming")
-
-
-# -------------------------------------------------------- embedding cosine
-
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    n_lists: int | None = None,
-    spill: int = 2,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs — the reference's query-time
-    gram-matrix suppression (query_disk_index.rs:486-527) as a batch op.
-
-    n_lists=None: exact O(n^2) cross join (the small-N tool).
-    n_lists=K: the scale path — candidate pairs are restricted to
-    vectors sharing an IVF list (balanced-kmeans buckets, multi-
-    assigned with `spill` so near-boundary pairs keep colliding; the
-    reference's SHARD_SPILL=2 trick).  The join is a bucket equi-join,
-    never all-pairs; recall vs exact is property-tested."""
-    def _pairs(a, b, cond):
-        return a.join(b, cond).select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.embedding").alias("emb_a"),
-            F.col("b.embedding").alias("emb_b"),
-        )
-
-    if n_lists is None:
-        a = embeddings.alias("a")
-        b = embeddings.alias("b")
-        pairs = _pairs(a, b, F.col("a.vec_id") < F.col("b.vec_id"))
-    else:
-        from .kmeans import train_balanced_kmeans
-        from .similarity import ivf_assign
-
-        cents = train_balanced_kmeans(embeddings, n_lists)
-        assigned = ivf_assign(embeddings, cents, spill=spill)
-        a = assigned.alias("a")
-        b = assigned.alias("b")
-        pairs = _pairs(
-            a,
-            b,
-            (F.col("a.list_id") == F.col("b.list_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        ).dropDuplicates(["vec_a", "vec_b"])
-
-    dot = F.aggregate(
-        F.zip_with("emb_a", "emb_b", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda col: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(col, col, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return (
-        pairs.withColumn("cosine", dot / (norm("emb_a") * norm("emb_b")))
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b", "cosine")
-    )

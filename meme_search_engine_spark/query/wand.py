@@ -583,7 +583,7 @@ def wand_topk(
     if exploded is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         return score_query_blocks(
             pdf,
             stats["N"],

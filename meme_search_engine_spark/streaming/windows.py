@@ -217,37 +217,6 @@ def incremental_tf_update(
     )
 
 
-def incremental_ivf_update(
-    spark: SparkSession,
-    embeddings_stream: DataFrame,
-    ivf_dir: str,
-    checkpoint_dir: str,
-):
-    """Micro-batch incremental ANN-index maintenance: each batch of
-    new (vec_id, embedding) rows is assigned against the index's
-    FROZEN centroids and appended into the per-list partition dirs —
-    the vector half of the reference's continuous ingest
-    (reddit_dump.rs pipeline feeding dump_processor shards).  Exactly
-    the ops.ivf_index.append_ivf_index contract: append-duplicates are
-    search-invariant, retrain/rebalance is an explicit rebuild.
-
-    Returns the StreamingQuery (caller stops it / processAllAvailable).
-    """
-    from ..ops.ivf_index import append_ivf_index
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_ivf_index(spark, batch_df, ivf_dir)
-
-    return (
-        embeddings_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def streaming_index_pipeline(
     spark: SparkSession,
     pages_stream: DataFrame,

@@ -20,8 +20,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf001_dir():
     return os.path.join(TESTDATA, "sf0.001")
-
-
-@pytest.fixture(scope="session")
-def sf01_dir():
-    return os.path.join(TESTDATA, "sf0.01")

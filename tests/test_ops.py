@@ -1,15 +1,14 @@
-"""Tests for the training-data-pipeline operators (dedup, similarity,
-textstats, multimodal plumbing)."""
+"""Tests for the training-data-pipeline operators (dedup, textstats,
+multimodal plumbing)."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 import pyspark.sql.functions as F
 
 from meme_search_engine_spark.common.hashing import xxh64_bytes
 from meme_search_engine_spark.common.textproc import tokenize
-from meme_search_engine_spark.ops import dedup, multimodal, similarity, textstats
+from meme_search_engine_spark.ops import dedup, multimodal, textstats
 
 
 @pytest.fixture(scope="module")
@@ -191,248 +190,6 @@ def test_simhash_near_pairs(spark, docs_df):
         for r in dedup.simhash_near_pairs(docs_df, max_hamming=10).collect()
     }
     assert pairs[(0, 1)] == 0
-
-
-# -------------------------------------------------------------- similarity
-
-@pytest.fixture(scope="module")
-def emb_df(spark, sf01_dir):
-    return spark.read.parquet(f"{sf01_dir}/embeddings.parquet").cache()
-
-
-def test_cosine_gemm_matches_exact(spark, emb_df):
-    queries = (
-        emb_df.filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    )
-    base = emb_df.filter(F.col("vec_id") >= 3)
-    exact = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-        for r in similarity.cosine_topk_exact(base, queries, k=10).collect()
-    }
-    qpd = queries.toPandas()
-    gemm = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-        for r in similarity.cosine_topk_gemm(base, qpd, k=10).collect()
-    }
-    assert set(exact) == set(gemm)
-    for key in exact:
-        assert exact[key][0] == gemm[key][0], key  # same ids, same order
-        # JVM fold multiplies float32 pairs; the GEMM path works in
-        # float64 — scores agree to ~1e-7, not bit-exactly
-        assert exact[key][1] == pytest.approx(gemm[key][1], abs=1e-6)
-
-
-def test_balanced_kmeans_balances_and_keeps_recall(spark, emb_df):
-    """train_balanced_kmeans must (a) produce usable, reasonably
-    balanced lists where the first-N stand-in is skewed, and (b) not
-    hurt IVF recall vs brute force."""
-    from meme_search_engine_spark.ops import kmeans
-
-    base = emb_df.filter(F.col("vec_id") >= 5)
-    n_lists = 8
-    cents = kmeans.train_balanced_kmeans(base, n_lists, n_iters=6)
-    assert cents.shape[0] == n_lists
-    sizes = kmeans.assignment_counts(base, cents)
-    n = int(sizes.sum())
-    assert sizes.min() > 0, sizes  # no dead lists
-    assert sizes.max() <= 3 * n / n_lists, sizes  # balanced-ish
-
-    # determinism: same input -> same centroids
-    again = kmeans.train_balanced_kmeans(base, n_lists, n_iters=6)
-    np.testing.assert_array_equal(cents, again)
-
-    queries = (
-        emb_df.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    )
-    exact = {}
-    for r in similarity.cosine_topk_exact(base, queries, k=10).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    qpd = queries.toPandas()
-    approx = {}
-    for r in similarity.ivf_topk(
-        spark, base, qpd, k=10, n_lists=n_lists, n_probe=4, spill=2,
-        centroids=cents,
-    ).collect():
-        approx.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [
-        len(exact[q] & approx.get(q, set())) / len(exact[q]) for q in exact
-    ]
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-
-
-def test_ivf_recall_vs_bruteforce(spark, emb_df):
-    queries = (
-        emb_df.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    )
-    base = emb_df.filter(F.col("vec_id") >= 5)
-    exact = {}
-    for r in similarity.cosine_topk_exact(base, queries, k=10).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    qpd = queries.toPandas()
-    approx = {}
-    for r in similarity.ivf_topk(
-        spark, base, qpd, k=10, n_lists=8, n_probe=4, spill=2
-    ).collect():
-        approx.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [
-        len(exact[q] & approx.get(q, set())) / len(exact[q]) for q in exact
-    ]
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-
-
-def test_embedding_near_dup_exact_and_bucketed(spark):
-    """Planted near-dup vectors: the exact path finds them all; the
-    IVF-bucketed scale path keeps >=90% of the exact pairs without the
-    all-pairs join."""
-    rng = np.random.RandomState(7)
-    dim = 16
-    rows = []
-    vid = 0
-    planted = []
-    for c in range(6):  # 6 well-separated clusters
-        center = rng.randn(dim) * 5
-        for i in range(20):
-            rows.append((vid, (center + rng.randn(dim) * 2).astype(np.float32)))
-            vid += 1
-        # one near-dup pair per cluster (tiny perturbation)
-        base = center + rng.randn(dim)
-        rows.append((vid, base.astype(np.float32)))
-        rows.append((vid + 1, (base + rng.randn(dim) * 0.01).astype(np.float32)))
-        planted.append((vid, vid + 1))
-        vid += 2
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in rows],
-        "vec_id long, embedding array<float>",
-    )
-    exact = {
-        (r["vec_a"], r["vec_b"])
-        for r in dedup.embedding_near_dup_pairs(df, threshold=0.98).collect()
-    }
-    assert set(planted) <= exact
-    bucketed = {
-        (r["vec_a"], r["vec_b"])
-        for r in dedup.embedding_near_dup_pairs(
-            df, threshold=0.98, n_lists=6, spill=2
-        ).collect()
-    }
-    assert bucketed <= exact  # no false pairs (same exact cosine filter)
-    assert len(bucketed & exact) >= 0.9 * len(exact), (len(bucketed), len(exact))
-
-
-def test_persistent_ivf_index_partition_pruned_search(spark, emb_df, tmp_path):
-    """build_ivf_index + ivf_search: recall vs brute force, and the
-    probed scan must be partition-pruned to the probed lists."""
-    import io
-    from contextlib import redirect_stdout
-
-    from meme_search_engine_spark.ops import ivf_index
-
-    base = emb_df.filter(F.col("vec_id") >= 5)
-    out = str(tmp_path / "ivf")
-    manifest = ivf_index.build_ivf_index(
-        spark, base, out, n_lists=8, spill=2, n_iters=4
-    )
-    assert manifest["n_lists"] == 8
-
-    queries = (
-        emb_df.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    )
-    qpd = queries.toPandas()
-    res = ivf_index.ivf_search(spark, out, qpd, k=10, n_probe=4)
-
-    # partition pruning: the lists scan must carry a PartitionFilters
-    # entry on list_id (reads ~n_probe/n_lists of the data)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        res.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "list_id" in plan, plan
-
-    exact = {}
-    for r in similarity.cosine_topk_exact(base, queries, k=10).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    approx = {}
-    for r in res.collect():
-        approx.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [
-        len(exact[q] & approx.get(q, set())) / len(exact[q]) for q in exact
-    ]
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-
-
-def test_ivf_index_fp16_storage(spark, emb_df, tmp_path):
-    """fp16 is the DEFAULT list storage (the reference stores half
-    precision, dump_processor.rs:500-524): list bytes ~halve vs fp32,
-    the probe decodes in-flight, and top-k vec_id sets match the fp32
-    build on this corpus (fp16 error ~1e-3 << cluster margins)."""
-    from meme_search_engine_spark.ops import ivf_index
-
-    base = emb_df.filter(F.col("vec_id") >= 5)
-    out16 = str(tmp_path / "ivf16")
-    out32 = str(tmp_path / "ivf32")
-    m16 = ivf_index.build_ivf_index(spark, base, out16, n_lists=8, n_iters=2)
-    m32 = ivf_index.build_ivf_index(
-        spark, base, out32, n_lists=8, n_iters=2, storage="fp32"
-    )
-    assert m16["storage"] == "fp16" and m32["storage"] == "fp32"
-
-    import os
-
-    def dir_bytes(d):
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(os.path.join(d, "lists"))
-            for f in fs
-            if f.endswith(".parquet")
-        )
-
-    b16, b32 = dir_bytes(out16), dir_bytes(out32)
-    assert b16 < 0.65 * b32, (b16, b32)  # vector column ~halved
-
-    qpd = (
-        emb_df.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        .toPandas()
-    )
-    got16 = {
-        (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivf_index.ivf_search(spark, out16, qpd, k=10, n_probe=4).collect()
-    }
-    got32 = {
-        (r["query_id"], r["rank"]): r["vec_id"]
-        for r in ivf_index.ivf_search(spark, out32, qpd, k=10, n_probe=4).collect()
-    }
-    # same candidates surface; allow rank swaps only between adjacent
-    # near-ties — on this corpus the sets must be identical per query
-    per_q16: dict[int, set] = {}
-    per_q32: dict[int, set] = {}
-    for (q, _), v in got16.items():
-        per_q16.setdefault(q, set()).add(v)
-    for (q, _), v in got32.items():
-        per_q32.setdefault(q, set()).add(v)
-    assert per_q16 == per_q32
-
-
-def test_fp16_pack_roundtrip(spark, emb_df):
-    """fp16-packed embeddings survive a parquet roundtrip at half the
-    bytes and ~1e-3 relative error (common.rs:98-108 parity)."""
-    import numpy as np
-
-    base = emb_df.limit(50)
-    packed = similarity.pack_embeddings_fp16(base)
-    row = packed.select("embedding_fp16").first()
-    dim = len(base.select("embedding").first()["embedding"])
-    assert len(row["embedding_fp16"]) == 2 * dim
-    back = similarity.unpack_embeddings_fp16(packed)
-    orig = {r["vec_id"]: r["embedding"] for r in base.collect()}
-    for r in back.collect():
-        a = np.asarray(orig[r["vec_id"]], dtype=np.float32)
-        b = np.asarray(r["embedding"], dtype=np.float32)
-        assert np.allclose(a, b, atol=2e-3, rtol=1e-2), r["vec_id"]
 
 
 # --------------------------------------------------------------- textstats

@@ -1,6 +1,6 @@
 """End-to-end training-data pipeline (jobs/pipeline_job.run_pipeline):
-filter -> dedup -> index build (+ optional vector indexes), stage
-counts monotone, the built index queryable and duplicate-free."""
+filter -> dedup -> index build, stage counts monotone, the built index
+queryable and duplicate-free."""
 
 import os
 
@@ -56,39 +56,6 @@ def test_pipeline_end_to_end(spark, dirty_pages, tmp_path):
     # none of the planted duplicate doc_ids survived (min-doc_id wins)
     all_ids = {r["doc_id"] for r in res}
     assert not any(i >= 900001 for i in all_ids)
-
-
-def test_pipeline_with_vector_indexes(spark, sf001_dir, tmp_path):
-    import pyspark.sql.functions as F
-
-    from jobs.pipeline_job import run_pipeline
-    from meme_search_engine_spark.index.postings import IndexConfig
-    from meme_search_engine_spark.ops import ivf_index
-
-    pages = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
-    summary = run_pipeline(
-        spark,
-        pages,
-        str(tmp_path / "work2"),
-        dedup="exact",
-        embeddings=emb,
-        build_ivf=True,
-        index_cfg=IndexConfig(salt_shift=10, n_buckets=8, n_parts=2),
-    )
-    assert "ivf_dir" in summary and summary["vectors_kept"] > 0
-    qpd = (
-        emb.orderBy("vec_id").limit(2)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qvec"),
-        )
-        .toPandas()
-    )
-    res = ivf_index.ivf_search(
-        spark, summary["ivf_dir"], qpd, k=5, n_probe=4
-    ).collect()
-    assert len(res) == 10
 
 
 def test_streaming_pipeline_equals_batch(spark, sf001_dir, tmp_path):

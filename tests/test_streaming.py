@@ -166,51 +166,3 @@ def test_incremental_tf_update_equals_batch(spark, tmp_path):
         )
     )
     assert got == expected
-
-
-def test_incremental_ivf_update_equals_batch_append(spark, tmp_path):
-    """Streamed vector ingestion (foreachBatch -> frozen-centroid
-    append) answers queries identically to a cold build over the full
-    embedding set — the ANN half of the online reindex loop."""
-    import pyspark.sql.functions as SF
-
-    from meme_search_engine_spark.ops import ivf_index
-    from meme_search_engine_spark.ops.similarity import (
-        deterministic_centroids,
-    )
-    from meme_search_engine_spark.streaming.windows import (
-        incremental_ivf_update,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    old = emb.filter(SF.col("vec_id") < 400)
-    new_dir = str(tmp_path / "new_vecs")
-    emb.filter(SF.col("vec_id") >= 400).write.parquet(new_dir)
-
-    cents = deterministic_centroids(old, 8)
-    inc = str(tmp_path / "ivf_stream")
-    cold = str(tmp_path / "ivf_cold")
-    ivf_index.build_ivf_index(
-        spark, old, inc, spill=2, centroids=cents, storage="fp16"
-    )
-    q = incremental_ivf_update(
-        spark,
-        _read_stream(spark, new_dir),
-        inc,
-        str(tmp_path / "ckpt_ivf"),
-    )
-    q.awaitTermination(180)
-    ivf_index.build_ivf_index(
-        spark, emb, cold, spill=2, centroids=cents, storage="fp16"
-    )
-    qpd = (
-        emb.orderBy("vec_id").limit(5)
-        .select(
-            SF.col("vec_id").alias("query_id"),
-            SF.col("embedding").alias("qvec"),
-        )
-        .toPandas()
-    )
-    a = ivf_index.ivf_search(spark, inc, qpd, k=10, n_probe=4).toPandas()
-    b = ivf_index.ivf_search(spark, cold, qpd, k=10, n_probe=4).toPandas()
-    assert a.values.tolist() == b.values.tolist()

@@ -2,6 +2,8 @@
 DataFrame engine on the full reference query set; pruning must never
 change results (SURVEY.md §5.3/5.4)."""
 
+import warnings
+
 import pytest
 
 import pyspark.sql.functions as F
@@ -40,7 +42,11 @@ def test_wand_rank_identity_vs_oracle(spark, built):
         [(q["query_id"], q["text"], q["k"]) for q in queries],
         "query_id int, text string, k int",
     )
-    res = wand_topk(spark, segments, term_stats, manifest, qdf)
+    # the grouped-map kernel's eval type is fixed by applyInPandas; a
+    # partial type hint on it makes PySpark warn on every call
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        res = wand_topk(spark, segments, term_stats, manifest, qdf)
     got: dict[int, list] = {}
     for r in res.collect():
         got.setdefault(r["query_id"], []).append(
