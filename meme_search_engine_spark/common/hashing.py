@@ -7,7 +7,7 @@ so this module provides a pure-Python XXH64 implementation matching
 Spark's semantics (seed 42; strings hashed as UTF-8 bytes; longs hashed
 via the 8-byte fast path; multi-argument calls chain the previous hash
 as the next seed).  Verified bit-identical against Spark in
-tests/test_hashing.py.
+tests/test_common.py::test_xxhash64_matches_spark.
 
 Reference analogue: the stable content/URL seahash used for dedup and
 identity (/root/reference/src/reddit_dump.rs:223-231,
@@ -118,66 +118,3 @@ def xxhash64_str_long(s: str, v: int, seed: int = SPARK_DEFAULT_SEED) -> int:
 def term_hash(token: str) -> int:
     """The engine's stable 64-bit term id (signed, Spark-compatible)."""
     return xxhash64_str(token)
-
-
-# ---- Spark Murmur3 (F.hash / HashPartitioning) -----------------------
-
-_M32 = 0xFFFFFFFF
-
-
-def _m3_fmix(h1: int, length: int) -> int:
-    h1 ^= length
-    h1 ^= h1 >> 16
-    h1 = h1 * 0x85EBCA6B & _M32
-    h1 ^= h1 >> 13
-    h1 = h1 * 0xC2B2AE35 & _M32
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def _m3_mix(h1: int, part: int) -> int:
-    k1 = part * 0xCC9E2D51 & _M32
-    k1 = ((k1 << 15) | (k1 >> 17)) & _M32
-    k1 = k1 * 0x1B873593 & _M32
-    h1 = (h1 ^ k1) & _M32
-    h1 = ((h1 << 13) | (h1 >> 19)) & _M32
-    return (h1 * 5 + 0xE6546B64) & _M32
-
-
-def murmur3_int32(k: int, seed: int = SPARK_DEFAULT_SEED) -> int:
-    """Spark-compatible ``hash(int_col)`` (Murmur3 x86_32, seed 42) —
-    what HashPartitioning applies before pmod when repartitioning by an
-    int column.  Verified bit-identical against F.hash in
-    tests/test_hashing.py."""
-    return _m3_fmix(_m3_mix(seed & _M32, k & _M32), 4)
-
-
-def murmur3_int64(k: int, seed: int = SPARK_DEFAULT_SEED) -> int:
-    """Spark-compatible ``hash(bigint_col)`` (two 4-byte blocks)."""
-    h1 = _m3_mix(seed & _M32, k & _M32)
-    h1 = _m3_mix(h1, (k >> 32) & _M32)
-    return _m3_fmix(h1, 8)
-
-
-def collision_free_partitions(
-    n_keys: int, dtype: str = "int", max_factor: int = 64
-) -> int:
-    """Smallest partition count P >= n_keys such that the dense keys
-    0..n_keys-1 hash-partition (pmod(murmur3, P)) into P DISTINCT
-    partitions — i.e. `repartition(P, key_col)` puts every key group
-    on its own task.
-
-    Why: repartitioning by a low-cardinality key (IVF lists) with
-    P == n_keys leaves hash collisions stacking 2-4 whole groups on
-    one task while others idle (guide §2.5; measured: 32 per-key
-    builds landed on 18 tasks, max 3 per task — the stage wall is 3x
-    one build).  Because the keys are dense and the
-    hash is Spark's own Murmur3, the search is exact and deterministic.
-    Falls back to max_factor * n_keys if no exact P exists below it
-    (still a far better spread)."""
-    hasher = murmur3_int32 if dtype == "int" else murmur3_int64
-    hashes = [hasher(i) for i in range(n_keys)]
-    for p in range(max(n_keys, 1), max_factor * max(n_keys, 1)):
-        if len({h % p for h in hashes}) == n_keys:
-            return p
-    return max_factor * max(n_keys, 1)

@@ -251,7 +251,7 @@ def _input_bytes(pages: DataFrame) -> int | None:
 # cache tokenized docs when the input is small enough that one executor
 # tier holds it; above this, accept re-tokenizing per pass (at 10^12
 # docs caching the token arrays would be petabytes)
-CACHE_DOCS_MAX_BYTES = 4 << 30
+DOCS_CACHE_MAX_BYTES = 4 << 30
 
 
 def _cache_budget_bytes(spark: SparkSession) -> int:
@@ -265,10 +265,28 @@ def _cache_budget_bytes(spark: SparkSession) -> int:
     mem = spark.conf.get("spark.driver.memory", "8g")
     m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
     if not m:
-        return CACHE_DOCS_MAX_BYTES
+        return DOCS_CACHE_MAX_BYTES
     mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
     heap = int(m.group(1)) * mult[m.group(2)]
-    return min(CACHE_DOCS_MAX_BYTES, heap // 6)
+    return min(DOCS_CACHE_MAX_BYTES, heap // 6)
+
+
+def _tokenized_docs(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    """The docs every build pass reads, persisted when the input is
+    small enough (see _cache_budget_bytes) so the corpus is tokenized
+    once, not once per pass.  Callers unpersist when done; that is a
+    no-op when nothing was cached.
+
+    The build never reads `text` after tokenization (docmeta stores
+    url/doc_len/ratios, postings only tokens) — project it out before
+    the persist so the cache holds token arrays, not a second copy of
+    every document body (guide §2.3: narrow what opaque stages carry).
+    """
+    docs = docs_from_pages(pages).select("doc_id", "url", "tokens", "doc_len")
+    size = _input_bytes(pages)
+    if size is not None and size <= _cache_budget_bytes(spark):
+        docs = docs.persist()
+    return docs
 
 
 def build_index(
@@ -278,7 +296,6 @@ def build_index(
     cfg: IndexConfig = IndexConfig(),
     parts_per_batch: int | None = None,
     fail_after_batches: int | None = None,
-    cache_docs: bool | None = None,
     timings: dict | None = None,
 ) -> dict:
     """Resumable end-to-end index build.  Returns the manifest dict.
@@ -290,25 +307,12 @@ def build_index(
     one Spark job covers before the ledger commits (None = all pending
     in a single job; tests use 1 to exercise kill/resume).
     fail_after_batches: test hook — raise after N committed batches.
-    cache_docs: persist the tokenized docs between the stats pass and
-    the posting build (None = auto by input size) so the corpus is
-    tokenized once, not once per pass.
     """
     os.makedirs(out_dir, exist_ok=True)
     t = timings if timings is not None else {}
     t0 = time.time()
     snapshot = input_snapshot(pages)
-
-    # the build never reads `text` after tokenization (docmeta stores
-    # url/doc_len/ratios, postings only tokens) — project it out before
-    # the persist so the cache holds token arrays, not a second copy of
-    # every document body (guide §2.3: narrow what opaque stages carry)
-    docs = docs_from_pages(pages).select("doc_id", "url", "tokens", "doc_len")
-    if cache_docs is None:
-        size = _input_bytes(pages)
-        cache_docs = size is not None and size <= _cache_budget_bytes(spark)
-    if cache_docs:
-        docs = docs.persist()
+    docs = _tokenized_docs(spark, pages)
 
     # ---- pass 0: corpus stats + per-part rows (skipped on resume) ----
     stats_path = os.path.join(out_dir, "stats.json")
@@ -392,8 +396,7 @@ def build_index(
             ]
             for f in futs:
                 f.result()
-        if cache_docs:
-            docs.unpersist()
+        docs.unpersist()
         # per-phase walls are CONCURRENT here (their sum exceeds the
         # tail's wall) — keys kept for the scaling-protocol consumers
         t["docmeta"] = tail_t["docmeta"]
@@ -426,8 +429,7 @@ def build_index(
     t["partials"] = round(time.time() - t0, 3)
     t0 = time.time()
     _write_docmeta(docs, out_dir, epoch=0)
-    if cache_docs:
-        docs.unpersist()
+    docs.unpersist()
     t["docmeta"] = round(time.time() - t0, 3)
     t0 = time.time()
 
@@ -691,7 +693,6 @@ def append_to_index(
     spark: SparkSession,
     new_pages: DataFrame,
     out_dir: str,
-    cache_docs: bool | None = None,
     fail_before_finalize: bool = False,
     auto_compact_epochs: int | None = None,
 ) -> dict:
@@ -753,16 +754,10 @@ def append_to_index(
         else:
             epoch = int(led.agg(F.max("epoch")).collect()[0][0]) + 1
 
-    docs = docs_from_pages(new_pages).select(
-        "doc_id", "url", "tokens", "doc_len"
-    )
-    if cache_docs is None:
-        size = _input_bytes(new_pages)
-        cache_docs = size is not None and size <= _cache_budget_bytes(spark)
-    if cache_docs:
-        docs = docs.persist()
+    docs = _tokenized_docs(spark, new_pages)
     new_stats, rows_in_all = corpus_stats_by_part(docs, cfg)
     if new_stats["N"] == 0:
+        docs.unpersist()
         return manifest
     old_max = old.get("max_doc_id")
     if old_max is not None and new_stats["max_doc_id"] is not None:
@@ -803,8 +798,7 @@ def append_to_index(
             epoch, rows_in_all=rows_in_all,
         )
     _write_docmeta(docs, out_dir, epoch)  # serial on purpose, see build_index
-    if cache_docs:
-        docs.unpersist()
+    docs.unpersist()
     if fail_before_finalize:
         raise InjectedFailure("injected append failure before finalize")
 

@@ -39,11 +39,12 @@ def query_terms_local(
     referenced it (one extra job per use — ~0.7 s of a 1.9 s warm WAND
     batch was this planning read).  Small batches tokenize with the
     SAME shared tokenizer and hash with the bit-identical pure xxhash64
-    (tests/test_hashing.py), so the rows are identical — set semantics
-    included.  LocalRelation inputs collect for free; other plans
-    (createDataFrame yields a LogicalRDD, parquet a scan) pay ONE
-    row-limited collect, which replaces the per-reference tokenizer
-    jobs downstream.  Batches past max_rows stay fully distributed.
+    (tests/test_common.py::test_xxhash64_matches_spark), so the rows
+    are identical — set semantics included.  LocalRelation inputs
+    collect for free; other plans (createDataFrame yields a
+    LogicalRDD, parquet a scan) pay ONE row-limited collect, which
+    replaces the per-reference tokenizer jobs downstream.  Batches
+    past max_rows stay fully distributed.
     """
     try:
         if queries.isLocal():

@@ -1,17 +1,3 @@
-from .windows import (
-    tumbling_counts_stream,
-    tumbling_counts_batch,
-    dedup_within_watermark_stream,
-    incremental_tf_update,
-    sessionize_stateful_stream,
-    sessionize_batch,
-)
+from .windows import streaming_index_pipeline
 
-__all__ = [
-    "tumbling_counts_stream",
-    "tumbling_counts_batch",
-    "dedup_within_watermark_stream",
-    "incremental_tf_update",
-    "sessionize_stateful_stream",
-    "sessionize_batch",
-]
+__all__ = ["streaming_index_pipeline"]

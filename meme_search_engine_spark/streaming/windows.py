@@ -1,220 +1,22 @@
-"""Structured Streaming operators.
+"""Structured Streaming index ingest.
 
 The reference is batch + incremental refresh with streaming *shapes*
 (SURVEY.md §2.9): a resumable offset-tracking source
 (/root/reference/src/reddit_dump.rs:269-301), a count-bounded dedup
 window (src/dump_processor.rs:332-391), and an online reindex loop with
-atomic swap (src/main.rs:1005-1035).  Spark-first equivalents:
+atomic swap (src/main.rs:1005-1035).  The Spark-first equivalent is
+``streaming_index_pipeline``: a ``foreachBatch`` micro-batch version of
+the reference's ingest→rebuild→swap loop, with an exact-dedup
+fingerprint table in place of the dedup ring and the
+checkpointLocation playing the role of the seqnum/timestamp readback.
 
-- event-time tumbling windows with watermarks (late data excluded, the
-  high-water-mark pattern);
-- ``dropDuplicatesWithinWatermark`` for the dedup ring buffer —
-  time-bounded instead of count-bounded, and exact within the window;
-- ``foreachBatch`` incremental tf/stats maintenance — the micro-batch
-  version of the reference's ingest→rebuild→swap loop, with the
-  checkpointLocation playing the role of the seqnum/timestamp readback.
-
-Streaming/batch equivalence is pytest-verified: the streamed result of
-each op equals the batch DataFrame result on the same input.
+Streaming/batch equivalence is pytest-verified: the streamed index
+serves the same answers as a batch-built one on the same input.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-
-from ..index.build import term_doc_tf, docs_from_pages
-
-
-def tumbling_counts_batch(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Batch semantics twin of the streaming window agg."""
-    return (
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total")
-    )
-
-
-def tumbling_counts_stream(
-    stream: DataFrame, width: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked tumbling-window counts over an event stream."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total")
-    )
-
-
-def dedup_within_watermark_stream(
-    stream: DataFrame, key_cols: list[str], watermark: str = "2 hours"
-) -> DataFrame:
-    """The reference's 2^20-entry dedup ring (count-bounded sliding
-    window) as a time-bounded exact streaming dedup."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-
-SESSION_OUT_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events int"
-)
-SESSION_STATE_SCHEMA = "start_us long, last_us long, n int"
-
-
-def sessionize_stateful_stream(
-    stream: DataFrame,
-    gap_sec: int = 1800,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    sessionization that emits CLOSED sessions (gap > gap_sec) as they
-    become known and keeps the open session in state until the event-
-    time watermark times it out (the adaptive-poll-interval shape of
-    /root/reference/crawler.py:23-57 as a streaming operator).
-
-    State per user: (session_start_us, last_event_us, n_events).
-    Semantics pytest-verified against the batch sessionizer: streamed
-    closed sessions == batch sessions minus each user's final (still
-    open or timeout-flushed) session when the input arrives in one
-    micro-batch.  Cross-batch LATE events (ts <= last seen) never move
-    last_us backwards: inside the open session's span they are counted
-    into it; older than the session start they are dropped — the
-    explicit reorder tolerance of this operator."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = int(gap_sec) * 1_000_000
-
-    def fn(key, pdfs, state: GroupState):
-        user_id = int(key[0])
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(last_us, unit="us")],
-                    "n_events": [n],
-                }
-            )
-            return
-        ts = pd.concat([p["ts"] for p in pdfs]).sort_values()
-        us = (ts.astype("int64") // 1000).to_numpy()
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us = last_us = int(us[0])
-            n = 0  # events are counted in the loop below
-        out = []
-        for u in us:
-            u = int(u)
-            if n and u <= last_us:
-                # cross-micro-batch late event (legal under the
-                # watermark): never move last_us BACKWARDS — a negative
-                # gap would silently merge sessions and diverge from
-                # the batch sessionizer (ADVICE r02).  An event inside
-                # the open session's span is counted into it; one older
-                # than the session start belongs to an already-emitted
-                # session and is dropped (the explicit reorder bound).
-                if u >= start_us:
-                    n += 1
-                continue
-            if n and u - last_us > gap_us:
-                out.append((start_us, last_us, n))
-                start_us, n = u, 0
-            n += 1
-            last_us = u
-        state.update((start_us, last_us, n))
-        # Spark requires the timeout to sit ABOVE the current watermark
-        # (a user idle longer than the watermark delay flushes on the
-        # very next batch)
-        timeout_ms = max(
-            last_us // 1000 + gap_us // 1000,
-            state.getCurrentWatermarkMs() + 1,
-        )
-        state.setTimeoutTimestamp(timeout_ms)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(out),
-                    "session_start": [
-                        pd.Timestamp(s, unit="us") for s, _, _ in out
-                    ],
-                    "session_end": [
-                        pd.Timestamp(e, unit="us") for _, e, _ in out
-                    ],
-                    "n_events": [c for _, _, c in out],
-                }
-            )
-
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            SESSION_OUT_SCHEMA,
-            SESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def sessionize_batch(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
-    """Batch twin of sessionize_stateful_stream: every session
-    (including each user's final one)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ev = events.withColumn("_prev", F.lag("ts").over(w))
-    gap = F.expr("timestampdiff(MICROSECOND, _prev, ts)")
-    sess = F.sum(
-        F.when(gap.isNull() | (gap > gap_sec * 1_000_000), 1).otherwise(0)
-    ).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return (
-        ev.withColumn("_sess", sess)
-        .groupBy("user_id", "_sess")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count("*").cast("int").alias("n_events"),
-        )
-        .drop("_sess")
-    )
-
-
-def incremental_tf_update(
-    spark: SparkSession,
-    pages_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-):
-    """Micro-batch incremental index maintenance: each batch of new
-    pages appends its (term_hash, doc_id, doc_len, tf) rows to the tf
-    state table — the ingest half of the reference's online reindex
-    loop (main.rs:1005-1035); a periodic finalize compacts tf deltas
-    into posting segments (builder.build_index over the union).
-
-    Returns the StreamingQuery (caller stops it / processAllAvailable).
-    """
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        tf = term_doc_tf(docs_from_pages(batch_df))
-        tf.write.mode("append").parquet(state_dir)
-
-    return (
-        pages_stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def streaming_index_pipeline(

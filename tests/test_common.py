@@ -249,46 +249,6 @@ def test_batched_block_decode_equals_per_block():
     run()
 
 
-def test_murmur3_matches_spark_hash(spark):
-    import pyspark.sql.functions as F
-
-    from meme_search_engine_spark.common.hashing import (
-        murmur3_int32,
-        murmur3_int64,
-    )
-
-    vals = [0, 1, 7, 31, 63, 255, -1, -42, 2**31 - 1, -(2**31)]
-    df = spark.createDataFrame([(v,) for v in vals], "k int")
-    for r in df.select("k", F.hash("k").alias("h")).collect():
-        assert murmur3_int32(r.k) == r.h, r.k
-    lvals = vals + [2**62, -(2**62), 123456789012345]
-    dfl = spark.createDataFrame([(v,) for v in lvals], "k long")
-    for r in dfl.select("k", F.hash("k").alias("h")).collect():
-        assert murmur3_int64(r.k) == r.h, r.k
-
-
-def test_collision_free_partitions_spread(spark):
-    """repartition(P, key) with the searched P puts each dense key in
-    its OWN partition — the 1:1 group->task contract the ANN builds
-    rely on (a plain P == n_keys stacked 2-3 shard builds per task)."""
-    import pyspark.sql.functions as F
-
-    from meme_search_engine_spark.common.hashing import (
-        collision_free_partitions,
-    )
-
-    for n in (8, 32):
-        p = collision_free_partitions(n)
-        df = spark.range(0, n).select(F.col("id").cast("int").alias("k"))
-        rows = (
-            df.repartition(p, "k")
-            .select("k", F.spark_partition_id().alias("pid"))
-            .collect()
-        )
-        pids = {r.pid for r in rows}
-        assert len(pids) == n, f"n={n} P={p}: only {len(pids)} tasks"
-
-
 def test_partial_topk_boundary_ties_keep_smallest_ids():
     """Exact-tied scores at the k boundary must resolve to the smallest
     ids — the partial top-k has to keep boundary ties, not an

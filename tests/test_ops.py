@@ -1,14 +1,12 @@
-"""Tests for the training-data-pipeline operators (dedup, textstats,
-multimodal plumbing)."""
+"""Tests for the training-data-pipeline operators (dedup and textstats)."""
 
-import numpy as np
 import pytest
 
 import pyspark.sql.functions as F
 
 from meme_search_engine_spark.common.hashing import xxh64_bytes
 from meme_search_engine_spark.common.textproc import tokenize
-from meme_search_engine_spark.ops import dedup, multimodal, textstats
+from meme_search_engine_spark.ops import dedup, textstats
 
 
 @pytest.fixture(scope="module")
@@ -238,164 +236,3 @@ def test_fingerprints_pure_python(spark, docs_df):
     )
     fps = {r["doc_id"]: r["rolling_hash"] for r in textstats.fingerprints(df2).collect()}
     assert fps[0] != fps[1]
-
-
-# -------------------------------------------------------------- multimodal
-
-@pytest.fixture(scope="module")
-def media_df(spark):
-    rows = [
-        (0, "image", b"\x01\x02\x03\x04payload0", (None, None, None, "image/png")),
-        (1, "image", b"another-image-payload", (None, None, None, "image/jpeg")),
-        (2, "video", b"vid", (640, 480, 95, "video/mp4")),
-        (3, "audio", b"aud", (None, None, None, "audio/wav")),
-    ]
-    return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-
-
-def test_multimodal_stub_raises(spark, media_df):
-    with pytest.raises(Exception) as ei:
-        multimodal.decode_image_features(media_df, backend="stub").collect()
-    assert "NotImplementedError" in str(ei.value) or "PIL" in str(ei.value)
-
-
-def test_multimodal_fake_backend_plumbing(spark, media_df):
-    feats = {
-        r["media_id"]: r
-        for r in multimodal.decode_image_features(media_df, backend="fake").collect()
-    }
-    assert set(feats) == {0, 1}  # images only
-    assert all(f["width"] >= 16 and f["height"] >= 16 for f in feats.values())
-    # deterministic
-    again = {
-        r["media_id"]: r
-        for r in multimodal.decode_image_features(media_df, backend="fake").collect()
-    }
-    assert {k: tuple(v) for k, v in feats.items()} == {
-        k: tuple(v) for k, v in again.items()
-    }
-    tensors = multimodal.resize_for_embed(media_df, backend="fake").collect()
-    assert all(len(t["tensor"]) == 16 for t in tensors)
-
-
-def test_multimodal_video_frame_expansion(spark, media_df):
-    frames = multimodal.sample_video_frames(
-        media_df, every_n=10, backend="fake"
-    ).collect()
-    assert len(frames) == 10  # 95 frames / every 10 -> 0,10,...,90
-    assert {f["media_id"] for f in frames} == {2}
-    assert [f["frame_idx"] for f in sorted(frames, key=lambda r: r["frame_idx"])][:3] == [0, 10, 20]
-
-
-# ------------------------------------------------- native media decode
-
-def test_imaging_codecs_roundtrip():
-    """Pure byte-level codecs: PPM/BMP encode->decode is pixel-exact,
-    BMP handles row padding (odd widths); RAWV random access returns
-    the exact frame."""
-    from meme_search_engine_spark.common import imaging
-
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, (7, 5, 3), dtype=np.uint8)  # odd width -> pad
-    assert np.array_equal(imaging.decode_pnm(imaging.encode_ppm(img)), img)
-    assert np.array_equal(imaging.decode_bmp(imaging.encode_bmp(img)), img)
-    # sniffing dispatcher
-    assert np.array_equal(imaging.decode_image(imaging.encode_bmp(img)), img)
-
-    frames = rng.randint(0, 256, (9, 4, 6, 3), dtype=np.uint8)
-    blob = imaging.encode_rawv(frames)
-    assert imaging.rawv_n_frames(blob) == 9
-    assert np.array_equal(imaging.decode_rawv_frame(blob, 7), frames[7])
-
-    # unknown format without PIL -> NotImplementedError, not garbage
-    with pytest.raises(NotImplementedError):
-        imaging.decode_image(b"\x89PNG\r\n\x1a\nxxxx")
-
-
-def test_imaging_resize_bilinear():
-    from meme_search_engine_spark.common import imaging
-
-    # constant image stays constant at any scale
-    img = np.full((10, 20, 3), 77, dtype=np.uint8)
-    out = imaging.resize_bilinear(img, 8, 4)
-    assert out.shape == (4, 8, 3) and np.all(out == 77)
-    # identity resize is exact
-    rng = np.random.RandomState(5)
-    img = rng.randint(0, 256, (6, 6, 3), dtype=np.uint8)
-    assert np.array_equal(imaging.resize_bilinear(img, 6, 6), img)
-
-
-@pytest.fixture(scope="module")
-def native_media_df(spark):
-    from meme_search_engine_spark.common import imaging
-
-    rng = np.random.RandomState(11)
-    img0 = rng.randint(0, 256, (12, 9, 3), dtype=np.uint8)
-    img1 = rng.randint(0, 256, (8, 16, 3), dtype=np.uint8)
-    vid = rng.randint(0, 256, (25, 4, 4, 3), dtype=np.uint8)
-    rows = [
-        (0, "image", bytearray(imaging.encode_ppm(img0)), (9, 12, None, "image/x-portable-pixmap")),
-        (1, "image", bytearray(imaging.encode_bmp(img1)), (16, 8, None, "image/bmp")),
-        (2, "video", bytearray(imaging.encode_rawv(vid)), (4, 4, 25, "video/x-raw")),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    return df, img0, img1, vid
-
-
-def test_native_image_decode_features(spark, native_media_df):
-    """The default (native) backend REALLY decodes PPM and BMP on the
-    Spark path: exact dimensions + Rec.601 luma."""
-    from meme_search_engine_spark.common import imaging
-
-    df, img0, img1, _ = native_media_df
-    feats = {
-        r["media_id"]: r
-        for r in multimodal.decode_image_features(df).collect()
-    }
-    assert (feats[0]["width"], feats[0]["height"]) == (9, 12)
-    assert (feats[1]["width"], feats[1]["height"]) == (16, 8)
-    assert feats[0]["mean_luma"] == pytest.approx(imaging.mean_luma(img0))
-    assert feats[1]["mean_luma"] == pytest.approx(imaging.mean_luma(img1))
-
-
-def test_native_resize_and_thumbnails(spark, native_media_df):
-    from meme_search_engine_spark.common import imaging
-
-    df, img0, img1, _ = native_media_df
-    tensors = {
-        r["media_id"]: r["tensor"]
-        for r in multimodal.resize_for_embed(df, target=4).collect()
-    }
-    assert all(len(t) == 4 * 4 * 3 for t in tensors.values())
-    expected0 = (
-        imaging.resize_bilinear(img0, 4, 4).astype(np.float32) / np.float32(255.0)
-    ).ravel()
-    assert np.allclose(np.asarray(tensors[0], dtype=np.float32), expected0)
-
-    thumbs = {
-        r["media_id"]: r for r in multimodal.thumbnails(df, max_side=6).collect()
-    }
-    # aspect preserved: 9x12 -> 4x6 (max side 6), 16x8 -> 6x3
-    assert (thumbs[0]["width"], thumbs[0]["height"]) == (4, 6)
-    assert (thumbs[1]["width"], thumbs[1]["height"]) == (6, 3)
-    # thumbnails are REAL decodable PPM bytes
-    t0 = imaging.decode_pnm(bytes(thumbs[0]["thumb"]))
-    assert t0.shape == (6, 4, 3)
-    assert np.array_equal(t0, imaging.resize_bilinear(img0, 4, 6))
-
-
-def test_native_video_frame_sampling(spark, native_media_df):
-    """RAWV frames decoded on the Spark path: sampled indices, real
-    per-frame luma, only sampled frames touched (random access)."""
-    from meme_search_engine_spark.common import imaging
-
-    df, _, _, vid = native_media_df
-    frames = sorted(
-        multimodal.sample_video_frames(df, every_n=10).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert [f["frame_idx"] for f in frames] == [0, 10, 20]
-    for f in frames:
-        assert f["mean_luma"] == pytest.approx(
-            imaging.mean_luma(vid[f["frame_idx"]])
-        )

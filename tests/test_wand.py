@@ -152,8 +152,6 @@ def test_seed_thetas_local_equals_per_query_seed(spark, tmp_path):
     _seed_thetas over the same blocks — including shared terms across
     queries and duplicated (term set, k) queries (the hot-query /
     tiled-batch shapes the cache exists for)."""
-    import pandas as pd
-
     from meme_search_engine_spark.query.dataframe_engine import query_terms
     from meme_search_engine_spark.query.wand import (
         _block_ub_col,
