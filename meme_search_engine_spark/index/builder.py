@@ -18,7 +18,9 @@ Layout of an index directory:
     stats.json                 corpus stats {N, avgdl} + input snapshot
     partials/part_id=*/        stage-1 salted block rows
     ledger/                    checkpoint ledger (parquet, append)
-    segments/bucket=*/         final block rows (term-hash bucketed)
+    segments/epoch=*/bucket=*/ final block rows (term-hash bucketed)
+    segments/epoch=*/_serving.arrow
+                               per-epoch serving image (query.serve)
     term_stats/                per-term df / n_blocks / global bound
     manifest.json              config + stats + lineage
 """
@@ -34,6 +36,7 @@ from dataclasses import asdict
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..query.serve import index_epochs, write_serving_image
 from .build import corpus_stats_by_part, docs_from_pages
 from .postings import (
     IndexConfig,
@@ -301,7 +304,9 @@ def build_index(
     """Resumable end-to-end index build.  Returns the manifest dict.
 
     timings: pass a dict to collect per-phase wall seconds
-    (stats/partials/docmeta/finalize) — scaling-protocol instrumentation.
+    (stats/partials/ledger/docmeta/finalize, and image: the serving
+    image write, which is part of finalize) — scaling-protocol
+    instrumentation.
 
     parts_per_batch: checkpoint granularity — how many build partitions
     one Spark job covers before the ledger commits (None = all pending
@@ -370,8 +375,9 @@ def build_index(
 
         def _timed(name, fn):
             s = time.time()
-            fn()
+            out = fn()
             tail_t[name] = round(time.time() - s, 3)
+            return out
 
         with ThreadPoolExecutor(3) as ex:
             futs = [
@@ -401,6 +407,7 @@ def build_index(
         # tail's wall) — keys kept for the scaling-protocol consumers
         t["docmeta"] = tail_t["docmeta"]
         t["finalize"] = tail_t["finalize"]
+        t["image"] = futs[2].result()
         t["ledger"] = tail_t["ledger"]
         return _write_manifest(out_dir, cfg, stats, snapshot)
 
@@ -434,7 +441,7 @@ def build_index(
     t0 = time.time()
 
     # ---- stage 2: concat-merge finalize ------------------------------
-    _finalize_epoch(spark, out_dir, cfg, epoch=0)
+    t["image"] = _finalize_epoch(spark, out_dir, cfg, epoch=0)
     t["finalize"] = round(time.time() - t0, 3)
     return _write_manifest(out_dir, cfg, stats, snapshot)
 
@@ -470,11 +477,27 @@ def _write_docmeta(docs: DataFrame, out_dir: str, epoch: int) -> None:
     )
 
 
+def _write_segments_and_image(
+    segments: DataFrame, seg_dir: str, cfg: IndexConfig
+) -> float:
+    """Write one epoch's segments, then derive its serving image from
+    them; -> the image write's wall seconds."""
+    # finalize_segments already bucket-partitioned AND left rows
+    # term_hash-sorted (its window sort), so this write adds no
+    # exchange and parquet row-group min/max stats on term_hash are
+    # tight — the Spark scan's PushedFilters skip whole row groups
+    segments.write.partitionBy("bucket").mode("overwrite").parquet(seg_dir)
+    t0 = time.time()
+    write_serving_image(seg_dir, cfg.n_buckets)
+    return round(time.time() - t0, 3)
+
+
 def _finalize_epoch(
     spark: SparkSession, out_dir: str, cfg: IndexConfig, epoch: int
-) -> None:
-    """Finalize ONE epoch: partials/epoch=E -> segments/epoch=E +
-    term_stats/epoch=E.  Append cost is therefore ∝ the DELTA, never
+) -> float:
+    """Finalize ONE epoch: partials/epoch=E -> segments/epoch=E (with
+    its serving image) + term_stats/epoch=E; -> the image write's wall
+    seconds.  Append cost is therefore ∝ the DELTA, never
     the index (the r02 full-rewrite was the one genuine 100-TB
     blocker): previous epochs' files are untouched, and the read side
     merges epochs for free because blocks of a term are doc-range
@@ -494,18 +517,6 @@ def _finalize_epoch(
     segments = finalize_segments(partials, cfg)
     seg_dir = os.path.join(out_dir, "segments", f"epoch={epoch}")
 
-    def write_segments():
-        (
-            # finalize_segments already bucket-partitioned AND left rows
-            # term_hash-sorted (its window sort), so this write adds no
-            # exchange and parquet row-group min/max stats on term_hash
-            # are tight — both the Spark scan's PushedFilters and the
-            # pyarrow serving path skip whole row groups per query
-            segments.write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(seg_dir)
-        )
-
     def write_term_stats():
         # aggregated from partials, NOT a re-read of the written
         # segments: identical values (same block rows), but the job is
@@ -518,9 +529,13 @@ def _finalize_epoch(
         )
 
     with ThreadPoolExecutor(2) as ex:
-        futs = [ex.submit(write_segments), ex.submit(write_term_stats)]
+        futs = [
+            ex.submit(_write_segments_and_image, segments, seg_dir, cfg),
+            ex.submit(write_term_stats),
+        ]
         for f in futs:
             f.result()
+    return futs[0].result()
 
 
 def _write_manifest(
@@ -544,18 +559,6 @@ def _write_manifest(
         json.dump(manifest, fh, indent=1)
     os.replace(tmp, os.path.join(out_dir, "manifest.json"))
     return manifest
-
-
-def index_epochs(out_dir: str) -> list[int]:
-    """Sorted epoch ids present under segments/."""
-    seg_dir = os.path.join(out_dir, "segments")
-    if not os.path.isdir(seg_dir):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(seg_dir)
-        if d.startswith("epoch=")
-    )
 
 
 _COMPACT_MARKER = "compact.commit"
@@ -653,20 +656,19 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     # compaction wall is max(), not sum()
     from concurrent.futures import ThreadPoolExecutor
 
-    def _write_seg():
-        (
-            segments.write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(seg_tmp, "epoch=0"))
-        )
-
     def _write_ts():
         term_stats_from_partials(
             partials.drop("epoch")
         ).write.mode("overwrite").parquet(os.path.join(ts_tmp, "epoch=0"))
 
+    # the serving image lands in segments.tmp/epoch=0 before the commit
+    # marker, so the swap carries it
+    seg0 = os.path.join(seg_tmp, "epoch=0")
     with ThreadPoolExecutor(2) as ex:
-        for f in [ex.submit(_write_seg), ex.submit(_write_ts)]:
+        for f in [
+            ex.submit(_write_segments_and_image, segments, seg0, cfg),
+            ex.submit(_write_ts),
+        ]:
             f.result()
     # commit point: both tmp dirs are complete; from here the swap only
     # rolls forward (see _apply_compaction_swap/_heal_compaction)

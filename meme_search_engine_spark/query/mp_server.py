@@ -16,9 +16,10 @@ each incoming connection to exactly one waiting worker, no userspace
 load balancer, no proxy hop.
 
 Each worker constructs its own LocalSearcher AFTER the fork (pyarrow
-dataset handles and memory-mapped footers are not fork-safe to share),
-so decoded caches are per-worker: a cold term/fragment is decoded once
-per worker rather than once per host.  That is the standard pre-fork
+handles are not fork-safe to share).  Every worker memory-maps the
+same per-epoch serving image files, so the postings pages sit once in
+the host's page cache; the decoded caches are per-worker: a cold term
+is decoded once per worker rather than once per host.  That is the standard pre-fork
 trade — N× warm memory for N× GIL throughput — and the caches are
 byte-budgeted, so worst-case resident memory is workers × budget.
 """
@@ -98,7 +99,7 @@ class ForkServer:
         self.supervise = supervise
         self.refork_count = 0
         # supervision guard rails (ADVICE r07): a persistent failure
-        # (index dir gone, corrupt fragment) would otherwise hot-loop
+        # (index dir gone, corrupt serving image) would otherwise hot-loop
         # ~5 forks/s forever, each paying a full LocalSearcher build
         self.max_reforks = 50
         self.refork_backoff_start = 0.5

@@ -1,34 +1,42 @@
 """Driver-local low-latency query serving over a built index.
 
 The reference serves queries from a dedicated online process
-(/root/reference/src/query_disk_index.rs: mmap'd codes + io_uring block
-reads + beam search) rather than re-entering the batch engine.  Same
-split here: the INDEX is built by Spark; SERVING reads the pruned
-posting-segment parquet directly via pyarrow.dataset — bucket partition
-pruning + term_hash row filtering, no Spark job, no scheduler latency —
+(src/query_disk_index.rs: mmap'd fixed-size records,
+one offset lookup per term) rather than re-entering the batch engine.
+Same split here: the INDEX is built by Spark; SERVING memory-maps one
+serving image per segment epoch — no Spark job, no scheduler latency —
 and scores from ONE decode-once per-term cache of (doc_ids, float
-contributions) (the analogue of the reference's decode-free fixed
-records) with the SAME fixed-point contribution arithmetic as the
-distributed engines — results are rank- and score-identical
+contributions) with the SAME fixed-point contribution arithmetic as
+the distributed engines — results are rank- and score-identical
 (pytest-verified).
 
-Per-query cost: a query's uncached terms pay one pruned parquet read
-(only their buckets, row-group filtered) that goes straight from the
-Arrow tables into one batched varbyte decode, with no DataFrame round
-trip; cached terms are a pure numpy accumulate.  URLs and quality
+The serving image (`segments/epoch=E/_serving.arrow`, written at
+every commit by write_serving_image) is an uncompressed Arrow IPC file
+derived from the epoch's parquet segments: one record batch per
+term-hash bucket, rows sorted by (term_hash, unsigned min_doc_id).
+The `_` prefix hides it from Spark and pyarrow.dataset.  An epoch
+without one gets it built in memory by the same writer.
+
+Per-query cost: an uncached term costs one searchsorted per epoch
+into the mapped bucket's term_hash column and a zero-copy slice of
+its rows; a query's slices are decoded in one batched varbyte pass,
+and cached terms are a pure numpy accumulate.  URLs and quality
 priors come from the docmeta sidecar held resident as doc_id-sorted
-arrays (the reference's filename projection is an array lookup too,
-query_disk_index.rs:531-541), so attaching URLs is a searchsorted +
-take — low milliseconds per query, vs the ~1-2 s Spark job launch
-floor.
+arrays (a searchsorted + take, like the reference's filename
+projection, query_disk_index.rs:531-541).
+
+A searcher serves the snapshot it opened — the images mapped then,
+scored with that manifest's stats — until it is rebuilt: a mapping
+stays readable after a compaction unlinks its file, and postings
+appended later need a new searcher.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import threading
+import uuid
 from collections import OrderedDict
 
 import numpy as np
@@ -42,38 +50,95 @@ from ..common.hashing import term_hash
 from ..common.textproc import tokenize
 from ..common.topk import partial_topk_indices
 
-def _partition_value(frag, name: str):
-    """Extract a hive partition value (e.g. bucket=3) from a fragment's
-    file PATH (`.../bucket=3/part-...parquet`); None when the key is
-    absent.  Path-derived, not parsed from str(partition_expression) —
-    the expression's repr is not a stable pyarrow API, the hive path
-    layout is ours (builder writes partitionBy("bucket"))."""
-    m = re.search(rf"[\\/]{re.escape(name)}=(-?\d+)[\\/]", str(frag.path))
-    return int(m.group(1)) if m else None
-
-
+SERVING_IMAGE = "_serving.arrow"
 _BLOCK_COLUMNS = ["term_hash", "n_docs", "min_doc_id", "doc_ids", "tfs", "dls"]
+_IMAGE_SCHEMA = pa.schema(
+    [
+        ("term_hash", pa.int64()),
+        ("n_docs", pa.int32()),
+        ("min_doc_id", pa.int64()),
+        ("doc_ids", pa.binary()),
+        ("tfs", pa.binary()),
+        ("dls", pa.binary()),
+    ]
+)
 _DOCMETA_COLUMNS = ["doc_id", "distinct_ratio", "stopword_ratio", "url"]
 _EMPTY = np.empty(0, dtype=np.int64)
 
-def _hive_fragment_map(root: str, key: str, what: str) -> dict[int, list]:
-    """{partition value -> fragments} for a hive-partitioned dir;
-    raises loudly when fragments exist but none carry the key
-    (silently answering every query with zero results is worse)."""
-    dataset = ds.dataset(root, format="parquet", partitioning="hive")
-    frags: dict[int, list] = {}
-    n = 0
-    for frag in dataset.get_fragments():
-        n += 1
-        v = _partition_value(frag, key)
-        if v is not None:
-            frags.setdefault(int(v), []).append(frag)
-    if n and not frags:
-        raise ValueError(
-            f"no {key}=N partition key found in any of {n} "
-            f"{what} fragments under {root}"
+
+def _bucket_batch(bucket_dir: str) -> pa.RecordBatch:
+    """One bucket's block rows, sorted by (term_hash, unsigned
+    min_doc_id) — a term's blocks are doc-range-disjoint, so the order
+    is total and the batch is a pure function of the rows."""
+    if os.path.isdir(bucket_dir):
+        t = ds.dataset(bucket_dir, format="parquet").to_table(
+            columns=_BLOCK_COLUMNS
         )
-    return frags
+    else:
+        t = _IMAGE_SCHEMA.empty_table()
+    order = np.lexsort(
+        (
+            t.column("min_doc_id").to_numpy().astype(np.uint64),
+            t.column("term_hash").to_numpy(),
+        )
+    )
+    t = t.take(order)
+    return pa.record_batch(
+        [t.column(c).combine_chunks() for c in _BLOCK_COLUMNS],
+        schema=_IMAGE_SCHEMA,
+    )
+
+
+def write_serving_image(seg_dir: str, n_buckets: int, sink=None) -> None:
+    """Write the serving image of one segment epoch dir: one record
+    batch per bucket 0..n_buckets-1 (an empty bucket gets an empty
+    batch), read and written one bucket at a time, so memory is
+    bounded by the largest bucket.  With no `sink` it is committed as
+    `seg_dir/_serving.arrow` through a hidden tmp file + os.replace,
+    like the manifest."""
+    if sink is None:
+        tmp = os.path.join(seg_dir, f".{SERVING_IMAGE}.{uuid.uuid4().hex}.tmp")
+        with pa.OSFile(tmp, "wb") as fh:
+            write_serving_image(seg_dir, n_buckets, fh)
+        os.replace(tmp, os.path.join(seg_dir, SERVING_IMAGE))
+        return
+    with pa.ipc.new_file(sink, _IMAGE_SCHEMA) as w:
+        for b in range(n_buckets):
+            w.write_batch(_bucket_batch(os.path.join(seg_dir, f"bucket={b}")))
+
+
+def _open_image(seg_dir: str, n_buckets: int) -> list[tuple]:
+    """[(term_hash int64 view, batch)] per bucket of one epoch: its
+    committed image memory-mapped, or one built in memory from its
+    segments when the epoch has none."""
+    try:
+        src = pa.memory_map(os.path.join(seg_dir, SERVING_IMAGE))
+    except FileNotFoundError:
+        if not os.path.isdir(seg_dir):
+            raise
+        sink = pa.BufferOutputStream()
+        write_serving_image(seg_dir, n_buckets, sink)
+        src = pa.BufferReader(sink.getvalue())
+    reader = pa.ipc.open_file(src)
+    if reader.num_record_batches != n_buckets:
+        raise ValueError(
+            f"{seg_dir}: serving image has {reader.num_record_batches} "
+            f"buckets, the manifest says {n_buckets}"
+        )
+    batches = [reader.get_batch(b) for b in range(n_buckets)]
+    return [(b.column(0).to_numpy(), b) for b in batches]
+
+
+def index_epochs(index_dir: str) -> list[int]:
+    """Sorted epoch ids present under segments/."""
+    seg_dir = os.path.join(index_dir, "segments")
+    if not os.path.isdir(seg_dir):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(seg_dir)
+        if d.startswith("epoch=")
+    )
 
 
 def _path_fingerprint(path: str) -> tuple:
@@ -107,31 +172,31 @@ def _lookup(ids: np.ndarray, doc_ids: np.ndarray) -> tuple:
 
 
 class LocalSearcher:
-    """Low-latency top-k BM25 search over a segments directory."""
+    """Low-latency top-k BM25 search over an index's mapped serving
+    images."""
 
     def __init__(self, index_dir: str):
         with open(os.path.join(index_dir, "manifest.json")) as fh:
             self.manifest = json.load(fh)
         self.cfg = self.manifest["config"]
         self.stats = self.manifest["stats"]
-        # memoized partition pruning: walking the dataset's fragment
-        # list and re-evaluating hive partition expressions PER QUERY
-        # grows with index size (the r02 serve_p50 regression at 100k
-        # docs); resolve bucket -> fragments ONCE here.  Fragment
-        # objects cache their parquet footer after first use, so
-        # repeated queries also skip footer re-reads.
-        self._segments_root = os.path.join(index_dir, "segments")
-        self._frags_by_bucket = _hive_fragment_map(
-            self._segments_root, "bucket", "segment"
-        )
+        # every epoch's serving image, mapped once here: the searcher
+        # serves this snapshot's postings for its whole life
+        self._images = [
+            _open_image(
+                os.path.join(index_dir, "segments", f"epoch={e}"),
+                self.cfg["n_buckets"],
+            )
+            for e in index_epochs(index_dir)
+        ]
         self._docmeta_dir = os.path.join(index_dir, "docmeta")
         # decoded per-term postings cache: hash -> (doc_ids int64[],
         # float contribs) over all epochs, None = probed and absent
         # (negative cache) — the driver-local analogue of the
         # reference's DECODE-FREE fixed-record index (its mmap'd shard
         # pays no per-query decode either, query_disk_index.rs:73-81).
-        # A searcher is built per manifest (appends write NEW epoch
-        # dirs and a NEW manifest), so entries need no invalidation.
+        # Entries derive from the images and the manifest stats, both
+        # fixed at open, so they need no invalidation.
         # LRU (evict-oldest at cap), never a clear(): that would dump
         # every warm term at the cap crossing and serve a latency
         # cliff to concurrent traffic (r4 advice #4).  Bounded by total
@@ -161,39 +226,25 @@ class LocalSearcher:
             return dict(self._counts)
 
     def _read_terms(self, hashes: list[int]) -> dict[int, tuple | None]:
-        """Decoded entries for `hashes` from ONE pruned block read:
-        bucket pruning via the memoized fragment map, term_hash
-        row-group/row filter inside each fragment, then every fetched
-        block decoded in one varbyte pass (terms sharing a bucket share
-        the scan).  df is recomputed as the global per-term sum(n_docs)
-        — exact on any epoch layout (epoch-local stored df is never
-        trusted; see builder._finalize_epoch)."""
-        buckets = sorted({h % self.cfg["n_buckets"] for h in hashes})
-        filt = pc.field("term_hash").isin(hashes)
-        for attempt in (0, 1):
-            try:
-                tables = []
-                for b in buckets:
-                    for frag in self._frags_by_bucket.get(b, []):
-                        t = frag.to_table(columns=_BLOCK_COLUMNS, filter=filt)
-                        if t.num_rows:
-                            tables.append(t)
-                break
-            except OSError:
-                # segments dir swapped under us (compact_index finished
-                # between our fragment resolve and this read — the
-                # in-flight-request race, VERDICT r07 #3).  Re-resolve
-                # the fragment map once and retry; compaction preserves
-                # logical content, so already-decoded entries stay valid.
-                if attempt:
-                    raise
-                self._frags_by_bucket = _hive_fragment_map(
-                    self._segments_root, "bucket", "segment"
-                )
+        """Decoded entries for `hashes`: per hash and epoch, one
+        searchsorted into the mapped bucket's term_hash column and a
+        zero-copy slice of its rows, then every fetched block decoded
+        in one varbyte pass.  df is recomputed as the global per-term
+        sum(n_docs) — exact on any epoch layout (epoch-local stored df
+        is never trusted; see builder._finalize_epoch)."""
+        nb = self.cfg["n_buckets"]
+        pieces = []
+        for h in hashes:
+            for image in self._images:
+                th, batch = image[h % nb]
+                lo = int(th.searchsorted(h))
+                hi = int(th.searchsorted(h, side="right"))
+                if hi > lo:
+                    pieces.append(batch.slice(lo, hi - lo))
         entries: dict[int, tuple | None] = dict.fromkeys(hashes)
-        if not tables:
+        if not pieces:
             return entries
-        t = pa.concat_tables(tables)
+        t = pa.Table.from_batches(pieces)
         th = t.column("term_hash").to_numpy()
         # blocks grouped by term, each term's in unsigned min_doc_id
         # order (blocks are doc-range-disjoint, so its doc_ids come out

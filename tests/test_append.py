@@ -2,10 +2,13 @@
 build(500) — segments content, stats, and query results (the online
 reindex loop parity, SURVEY.md §2.9)."""
 
+import glob
 import json
 import os
+import shutil
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 import pyspark.sql.functions as F
@@ -14,11 +17,16 @@ from meme_search_engine_spark.datagen import ensure_corpus, generate_queries
 from meme_search_engine_spark.index.builder import (
     append_to_index,
     build_index,
+    index_epochs,
     load_index,
     read_ledger,
 )
 from meme_search_engine_spark.index.postings import IndexConfig
-from meme_search_engine_spark.query.serve import LocalSearcher
+from meme_search_engine_spark.query.serve import (
+    SERVING_IMAGE,
+    LocalSearcher,
+    write_serving_image,
+)
 
 N_DOCS = 500
 SPLIT = 400
@@ -58,6 +66,57 @@ def _decoded_content(spark, d):
             .collect(),
         )
     )
+
+
+def _ids_scores(results):
+    return [(r["doc_id"], r["score_fixed"]) for r in results]
+
+
+def _assert_images_rebuild_identically(d):
+    """Every epoch's committed serving image equals, byte for byte, the
+    image rebuilt from that epoch's parquet segments."""
+    for e in index_epochs(d):
+        seg_dir = os.path.join(d, "segments", f"epoch={e}")
+        sink = pa.BufferOutputStream()
+        write_serving_image(seg_dir, CFG.n_buckets, sink)
+        with open(os.path.join(seg_dir, SERVING_IMAGE), "rb") as fh:
+            assert fh.read() == sink.getvalue().to_pybytes(), seg_dir
+
+
+def test_serving_images_rebuild_identically(dirs):
+    cold, incr = dirs
+    assert index_epochs(cold) == [0] and index_epochs(incr) == [0, 1]
+    for d in dirs:
+        _assert_images_rebuild_identically(d)
+
+
+def test_index_without_images_answers_identically(dirs, tmp_path):
+    """An index written before serving images existed (here: a copy of
+    the appended index with every image deleted) gets its images built
+    in memory and answers every query path exactly as the mapped
+    images do, without writing into the index."""
+    _, incr = dirs
+    bare = str(tmp_path / "bare")
+    shutil.copytree(incr, bare)
+    images = glob.glob(os.path.join(bare, "segments", "*", SERVING_IMAGE))
+    assert len(images) == 2
+    for p in images:
+        os.remove(p)
+    mapped, built = LocalSearcher(incr), LocalSearcher(bare)
+    texts = [q["text"] for q in generate_queries(N_DOCS)[:30]]
+    assert any(mapped.search(t) for t in texts)
+    for text in texts:
+        weighted = list(zip(text.split(), (1.0, -0.5, 2.0)))
+        assert built.search(text, 10, with_urls=True) == mapped.search(
+            text, 10, with_urls=True
+        ), text
+        assert built.search_weighted(weighted, 10) == mapped.search_weighted(
+            weighted, 10
+        ), text
+        assert built.search_quality(text, 10) == mapped.search_quality(
+            text, 10
+        ), text
+    assert not glob.glob(os.path.join(bare, "segments", "*", SERVING_IMAGE))
 
 
 def test_appended_content_equals_cold_build(spark, dirs):
@@ -178,6 +237,12 @@ def test_compaction_preserves_results(spark, dirs, tmp_path):
     # through the compaction
     early = LocalSearcher(out)
     assert early.urls_for([0]) and not early.urls_for([SPLIT])
+    # ...and it keeps serving the postings it opened with: record the
+    # pre-append answers for terms `early` never queries until after
+    # the append and the compaction
+    pinned_terms = ["term0100"] + [f"term{i:04d}" for i in range(200, 224)]
+    ref = LocalSearcher(out)
+    pinned = {t: _ids_scores(ref.search(t, 10)) for t in pinned_terms}
     appended = pages.filter(F.col("doc_id") >= SPLIT)
     want_urls = {r["doc_id"]: r["url"] for r in appended.collect()}
     new_ids = np.array(sorted(want_urls), dtype=np.int64)
@@ -197,6 +262,12 @@ def test_compaction_preserves_results(spark, dirs, tmp_path):
     after_s = LocalSearcher(out)
     after = [after_s.search(q["text"], q["k"]) for q in queries]
     assert before == after
+    assert {t: _ids_scores(early.search(t, 10)) for t in pinned_terms} == pinned
+    # the appended docs do move these answers in the current index
+    assert any(
+        _ids_scores(after_s.search(t, 10)) != pinned[t] for t in pinned_terms
+    )
+    _assert_images_rebuild_identically(out)
     # compacted index == cold-build content (global df restored)
     assert _decoded_content(spark, out) == _decoded_content(spark, dirs[0])
 

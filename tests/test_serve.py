@@ -154,10 +154,11 @@ def test_local_searcher_latency(built):
 
 
 def test_serve_survives_compaction_swap(spark, tmp_path):
-    """A searcher whose fragment map predates a compact_index swap must
-    serve THROUGH the swap (re-resolve + retry, VERDICT r07 #3) — no
-    FileNotFoundError, results identical to a fresh post-compact
-    searcher, and already-decoded terms stay correct."""
+    """A searcher opened before a compact_index swap must serve
+    THROUGH the swap from the serving images it mapped at open: the
+    mappings stay readable after the swap unlinks their files, so
+    there is no FileNotFoundError, results equal a fresh post-compact
+    searcher's, and already-decoded terms stay correct."""
     import pyspark.sql.functions as F
 
     from meme_search_engine_spark.datagen import rare_term
@@ -179,7 +180,7 @@ def test_serve_survives_compaction_swap(spark, tmp_path):
     head_before = s.search("term0001", 10)  # warms + decodes this term
     compact_index(spark, out)  # old segment files are GONE now
 
-    # uncached terms force fragment reads through the stale map
+    # uncached terms are read from the pre-compaction images
     fresh = LocalSearcher(out)
     for text in (rare_term(5), "term0002 term0150", "term0100"):
         assert s.search(text, 10) == fresh.search(text, 10), text
