@@ -2,60 +2,168 @@
 (POST / with weighted terms: /root/reference/mse.py:37-47 and
 src/main.rs:1044-1050 QueryRequest) re-hosted over LocalSearcher.
 
-stdlib-only (http.server): no web framework in this environment.
-Request JSON (mse.py-compatible subset):
-    {"text": [["query terms", weight], ...], "top_k": 10}
-or the simple form:
-    {"query": "free text", "top_k": 10}
-or a saved preset (the reference's predefined_embeddings — reusable
-named query vectors registered server-side, src/main.rs:102-127,
-976-985 — as named term-weight presets stored in the index dir):
-    {"preset": "name", "top_k": 10}
-Response JSON:
-    {"matches": [{"rank", "doc_id", "score", "score_fixed"}, ...]}
+POST / takes {"query": "free text", "top_k": 10}, weighted terms
+{"text": [["query terms", weight], ...], "top_k": 10} (the mse.py
+subset), or {"preset": "name", "top_k": 10}: a named term-weight preset
+stored in the index dir (the reference's predefined_embeddings,
+src/main.rs:102-127,976-985), saved by {"save_preset": "name", "text":
+[...]} and listed by GET /presets.  It answers {"matches": [{"rank",
+"doc_id", "score", "score_fixed", "url"}, ...]}.
 
-GET /presets lists saved presets; PUT semantics via
-{"save_preset": "name", "text": [[...], ...]} persist one.
+Serving core (stdlib socket + threading): POOL_THREADS threads loop on
+accept(2) of one listening socket, as the reference serves from a
+fixed set of runtime threads (query_disk_index.rs:711-736).  A thread
+reads one request (request line, headers up to _MAX_HEAD bytes, a
+Content-Length body) within _TIMEOUT_S, sends the HTTP/1.0 reply in one
+sendall and closes the connection.  Against ThreadingHTTPServer (a
+thread per connection, headers parsed by email.feedparser) server CPU
+per sequential request fell 0.30 -> 0.07 ms for GET /health and 1.17 ->
+0.83 ms for a warm query (medians of 6 runs on one pinned CPU of a
+4-vCPU host, 6,000-page index).
 
-Every POST gets exactly one reply and one count in /metrics: 200 for
-an answer, 400 for a malformed body (not a JSON object, a bad top_k,
-an unknown field or query shape), 404 for an unknown preset, and a
-500 counted as kind="internal" for any other failure.  GET /metrics
-also carries the searcher's decoded term cache counters
-(mse_term_cache_{hits,misses,evictions}_total) and how often it
-reloaded the resident docmeta (mse_docmeta_reloads_total).
+Every POST and every unreadable request gets one reply and one count
+in /metrics: 200 for an answer; 400 as kind="invalid" for a malformed
+body (not a JSON object, bad top_k, unknown field or shape) or request
+(garbled request line, no single integer Content-Length on a POST, a
+body shorter than it, headers over the cap, unknown method); 404 for an
+unknown preset; 500 as kind="internal" for any other failure.  A silent
+client is closed uncounted at the timeout.  GET /metrics also carries
+LocalSearcher.counts (decoded term cache, docmeta reloads).
 """
 
 from __future__ import annotations
 
+import errno
 import json
 import logging
 import os
+import socket
 import threading
 import time
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .serve import LocalSearcher
 
 # request field that selects the query shape -> metrics kind, in
 # routing priority order
-_SHAPES = {
-    "save_preset": "save_preset",
-    "preset": "preset",
-    "text": "weighted",
-    "query": "simple",
-}
+_SHAPES = {"save_preset": "save_preset", "preset": "preset",
+           "text": "weighted", "query": "simple"}
 _FIELDS = frozenset(_SHAPES) | {"top_k"}
 MAX_TOP_K = 10_000
+# Accept-loop threads per process.  The GIL runs one at a time, so more
+# add no CPU; 4 overlap socket waits, keep a few slow or silent clients
+# (each held for at most _TIMEOUT_S) from stalling the rest, and match
+# perfbench's client concurrency.
+POOL_THREADS = 4
+_TIMEOUT_S = 5.0  # per request, from accept to its last body byte
+_MAX_HEAD = 64 * 1024
+_MAX_BODY = 1 << 20
+_REASONS = {200: b"OK", 400: b"Bad Request", 404: b"Not Found",
+            500: b"Internal Server Error"}
+log = logging.getLogger(__name__)
 
 
-class _Server(ThreadingHTTPServer):
-    # socketserver's default listen backlog is 5: a 100-concurrent
-    # client burst (the reference's perf_test.py shape) overflows it
-    # and connections get RST before accept.  The reference's tokio
-    # listener has no such cap; match it.
-    request_queue_size = 128
-    daemon_threads = True
+def listen(host: str, port: int) -> socket.socket:
+    """A TCP socket on (host, port) with a listen backlog of 128: a
+    backlog of 5 overflows under a 100-concurrent burst (perf_test.py)."""
+    sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+    sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+    sock.bind((host, port))
+    sock.listen(128)
+    return sock
+
+
+def _recv(conn: socket.socket, deadline: float) -> bytes:
+    """The client's next bytes; b"" at EOF, reset or past `deadline`."""
+    try:
+        conn.settimeout(max(deadline - time.monotonic(), 1e-3))
+        return conn.recv(65536)
+    except OSError:
+        return b""
+
+
+def _read_request(conn: socket.socket) -> tuple[bytes, bytes, bytes] | None:
+    """(method, path, body) of one request; None when the client sent
+    nothing; ValueError when it is malformed or incomplete."""
+    deadline = time.monotonic() + _TIMEOUT_S
+    buf = b""
+    while (end := buf.find(b"\r\n\r\n")) < 0 and len(buf) <= _MAX_HEAD:
+        if not (chunk := _recv(conn, deadline)):
+            if not buf:
+                return None
+            raise ValueError("request ended inside the header block")
+        buf += chunk
+    if not 0 <= end <= _MAX_HEAD:
+        raise ValueError(f"header block over {_MAX_HEAD} bytes")
+    request_line, *headers = buf[:end].split(b"\r\n")
+    parts = request_line.split()
+    if len(parts) != 3 or not parts[2].startswith(b"HTTP/"):
+        raise ValueError("malformed request line")
+    if parts[0] == b"GET":
+        return b"GET", parts[1], b""
+    if parts[0] != b"POST":
+        raise ValueError("unsupported method")
+    lengths = [
+        int(value)  # ValueError when not an integer
+        for name, _, value in (h.partition(b":") for h in headers)
+        if name.strip().lower() == b"content-length"
+    ]
+    if len(lengths) != 1 or not 0 <= lengths[0] <= _MAX_BODY:
+        raise ValueError(f"POST needs one Content-Length in [0, {_MAX_BODY}]")
+    body = buf[end + 4:]
+    while len(body) < lengths[0]:
+        if not (chunk := _recv(conn, deadline)):
+            raise ValueError("body ended before Content-Length")
+        body += chunk
+    return b"POST", parts[1], body[: lengths[0]]
+
+
+def _reply(conn: socket.socket, code: int, body: bytes,
+           ctype: bytes = b"application/json") -> None:
+    conn.settimeout(_TIMEOUT_S)  # not what is left of the read deadline
+    conn.sendall(b"HTTP/1.0 %d %s\r\nContent-Type: %s\r\nContent-Length: %d\r\n"
+                 b"Connection: close\r\n\r\n%s"
+                 % (code, _REASONS[code], ctype, len(body), body))
+
+
+def _linger(conn: socket.socket) -> None:
+    """Half-close, then drain what the client still sends (for at most
+    1 s), so close() does not reset away a reply to a request that was
+    rejected before it was read whole."""
+    try:
+        conn.shutdown(socket.SHUT_WR)
+    except OSError:
+        return
+    deadline = time.monotonic() + 1.0
+    while _recv(conn, deadline):
+        pass
+
+
+def _accept_loop(sock: socket.socket, handle) -> None:
+    while True:
+        try:
+            conn, _ = sock.accept()
+        except OSError as e:
+            if e.errno in (errno.EINVAL, errno.EBADF):
+                return  # the listening socket was shut down or closed
+            time.sleep(0.01)  # e.g. out of fds: retry without spinning
+            continue
+        with conn:
+            try:
+                handle(conn)
+            except (ConnectionError, TimeoutError):
+                pass  # the client went away or stopped reading
+            except Exception:
+                log.exception("connection handler failed")
+
+
+def serve_pool(sock: socket.socket, handle) -> list[threading.Thread]:
+    """Start POOL_THREADS daemon threads that each accept on `sock` and
+    run `handle(conn)` per connection, until `sock` is shut down."""
+    threads = [threading.Thread(target=_accept_loop, args=(sock, handle), daemon=True)
+               for _ in range(POOL_THREADS)]
+    for t in threads:
+        t.start()
+    return threads
 
 
 class PresetStore:
@@ -66,20 +174,17 @@ class PresetStore:
     def __init__(self, index_dir: str):
         self._path = os.path.join(index_dir, "presets.json")
         self._presets: dict[str, list] = {}
-        # ThreadingHTTPServer handlers call save()/get() concurrently:
-        # guard the dict and serialize writers so two saves can't
-        # interleave on the same temp file and rename a torn JSON into
-        # place (ADVICE r02)
+        # pool threads call save()/get() concurrently: guard the dict
+        # and serialize writers so two saves can't interleave on the
+        # same temp file and rename a torn JSON into place
         self._lock = threading.Lock()
         self._mtime_ns = -1
         self._reload_locked()
 
     def _reload_locked(self) -> None:
         """Refresh from disk when the file changed.  presets.json is
-        the shared state between pre-fork workers (mp_server): a save
-        through one worker process must be visible to queries routed
-        to any OTHER worker, so every read path re-checks the file's
-        mtime (one stat) before answering."""
+        the state pre-fork workers (mp_server) share, so every read
+        re-checks its mtime (one stat) and sees any worker's save."""
         try:
             st = os.stat(self._path)
         except OSError:
@@ -103,24 +208,17 @@ class PresetStore:
 
     def save(self, name: str, terms: list[tuple[str, float]]) -> None:
         with self._lock:
-            # merge-on-save under an INTER-process lock: threading.Lock
-            # only serializes threads of this worker, but presets.json
-            # is shared across pre-fork workers (mp_server) — two
-            # workers saving different names concurrently could both
-            # reload, then the second os.replace would drop the first
-            # worker's new entry.  flock a sidecar (not the data file:
-            # os.replace swaps the inode the lock lives on) for the
-            # whole reload+write+swap, so last-writer-wins is per NAME,
-            # never a sibling's whole entry.
+            # merge-on-save under an INTER-process lock, so two workers
+            # saving different names never drop each other's entry.
+            # flock a sidecar (os.replace swaps the data file's inode)
+            # for the whole reload+write+swap.
             import fcntl
 
             with open(f"{self._path}.lock", "w") as lockfh:
                 fcntl.flock(lockfh, fcntl.LOCK_EX)
                 self._reload_locked()
                 self._presets[name] = [[t, w] for t, w in terms]
-                tmp = (
-                    f"{self._path}.{os.getpid()}.{threading.get_ident()}.tmp"
-                )
+                tmp = f"{self._path}.{os.getpid()}.{threading.get_ident()}.tmp"
                 with open(tmp, "w") as fh:
                     json.dump(self._presets, fh, indent=1)
                 os.replace(tmp, self._path)  # atomic swap, like the manifest
@@ -153,13 +251,9 @@ class Metrics:
         """The exposition text; `searcher_counts` (LocalSearcher.counts)
         become one mse_<name>_total counter each."""
         with self._lock:
-            lines = [
-                "# TYPE mse_queries_total counter",
-            ]
+            lines = ["# TYPE mse_queries_total counter"]
             for key in sorted(self._counts):
-                lines.append(
-                    f'mse_queries_total{{kind="{key}"}} {self._counts[key]}'
-                )
+                lines.append(f'mse_queries_total{{kind="{key}"}} {self._counts[key]}')
             for name, v in sorted(searcher_counts.items()):
                 lines.append(f"# TYPE mse_{name}_total counter")
                 lines.append(f"mse_{name}_total {v}")
@@ -168,20 +262,16 @@ class Metrics:
                 lines.append("# TYPE mse_query_latency_ms summary")
                 for q, name in ((0.5, "0.5"), (0.9, "0.9"), (0.99, "0.99")):
                     v = lat[min(int(q * len(lat)), len(lat) - 1)]
-                    lines.append(
-                        f'mse_query_latency_ms{{quantile="{name}"}} {v:.3f}'
-                    )
+                    lines.append(f'mse_query_latency_ms{{quantile="{name}"}} {v:.3f}')
                 lines.append(f"mse_query_latency_ms_count {len(lat)}")
             return "\n".join(lines) + "\n"
 
 
-def make_handler(
-    searcher: LocalSearcher,
-    presets: PresetStore,
-    metrics: Metrics | None = None,
-):
+def make_handler(searcher: LocalSearcher, presets: PresetStore,
+                 metrics: Metrics | None = None):
+    """handle(conn): read one request from an accepted connection and
+    send its one reply."""
     metrics = metrics or Metrics()
-    log = logging.getLogger(__name__)
 
     def parse(raw: bytes) -> tuple[str, dict, int]:
         """(shape, request, k) of a POST body; ValueError/TypeError
@@ -220,99 +310,84 @@ def make_handler(
             matches = searcher.search(str(req["query"]), k, with_urls=True)
         return 200, {"matches": matches}
 
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, fmt, *args):  # quiet
-            pass
+    def post(raw: bytes) -> tuple[int, dict]:
+        kind, ms = "invalid", 0.0
+        try:
+            shape, req, k = parse(raw)
+            kind = _SHAPES[shape]
+            t0 = time.time()
+            code, payload = answer(shape, req, k)
+            ms = (time.time() - t0) * 1000.0
+        except (TypeError, ValueError) as e:
+            code, payload = 400, {"error": f"bad request: {e}"}
+        except Exception as e:
+            log.exception("query failed")
+            kind = "internal"
+            code, payload = 500, {"error": f"internal error: {type(e).__name__}"}
+        metrics.observe(kind, ms, ok=code == 200)
+        return code, payload
 
-        def _reply(self, code: int, payload: dict) -> None:
-            body = json.dumps(payload).encode()
-            self.send_response(code)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+    def handle(conn: socket.socket) -> None:
+        try:
+            request = _read_request(conn)
+        except ValueError as e:
+            metrics.observe("invalid", 0.0, ok=False)
+            _reply(conn, 400, json.dumps({"error": f"bad request: {e}"}).encode())
+            return _linger(conn)
+        if request is None:
+            return  # connected and sent nothing: not a request
+        method, path, body = request
+        if method == b"POST":
+            code, payload = post(body)
+        elif path == b"/metrics":
+            text = metrics.render(searcher.counts()).encode()
+            return _reply(conn, 200, text, b"text/plain; version=0.0.4")
+        elif path == b"/presets":
+            code, payload = 200, {"presets": presets.names()}
+        elif path == b"/health":
+            code, payload = 200, {
+                "status": "ok",
+                # which process answered — observable worker spread
+                # for the pre-fork server (mp_server)
+                "pid": os.getpid(),
+                "n_docs": searcher.stats["N"],
+                "avgdl": searcher.stats["avgdl"],
+            }
+        else:
+            code, payload = 404, {"error": "POST / with a JSON query"}
+        _reply(conn, code, json.dumps(payload).encode())
 
-        def do_POST(self):
-            kind, ms = "invalid", 0.0
-            try:
-                length = int(self.headers.get("Content-Length", "0"))
-                shape, req, k = parse(self.rfile.read(length))
-                kind = _SHAPES[shape]
-                t0 = time.time()
-                code, payload = answer(shape, req, k)
-                ms = (time.time() - t0) * 1000.0
-            except (TypeError, ValueError) as e:
-                code, payload = 400, {"error": f"bad request: {e}"}
-            except Exception as e:
-                log.exception("query failed")
-                kind = "internal"
-                code, payload = 500, {"error": f"internal error: {type(e).__name__}"}
-            metrics.observe(kind, ms, ok=code == 200)
-            self._reply(code, payload)
-
-        def do_GET(self):
-            if self.path == "/metrics":
-                body = metrics.render(searcher.counts()).encode()
-                self.send_response(200)
-                self.send_header(
-                    "Content-Type", "text/plain; version=0.0.4"
-                )
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-                return
-            if self.path == "/presets":
-                return self._reply(200, {"presets": presets.names()})
-            if self.path == "/health":
-                return self._reply(
-                    200,
-                    {
-                        "status": "ok",
-                        # which process answered — observable worker
-                        # spread for the pre-fork server (mp_server)
-                        "pid": os.getpid(),
-                        "n_docs": searcher.stats["N"],
-                        "avgdl": searcher.stats["avgdl"],
-                    },
-                )
-            self._reply(404, {"error": "POST / with a JSON query"})
-
-    return Handler
+    return handle
 
 
 class SearchServer:
-    """Threaded HTTP server wrapper (start()/stop()); the reference's
-    axum/aiohttp server role."""
+    """HTTP server over one LocalSearcher, served by a fixed pool of
+    accept-loop threads (start()/stop()); the reference's axum/aiohttp
+    server role."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        host: str = "127.0.0.1",
-        port: int = 0,
-    ):
+    def __init__(self, index_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.searcher = LocalSearcher(index_dir)
         self.presets = PresetStore(index_dir)
-        self._httpd = _Server(
-            (host, port), make_handler(self.searcher, self.presets)
-        )
-        self._thread: threading.Thread | None = None
-
-    @property
-    def port(self) -> int:
-        return self._httpd.server_address[1]
+        self._handle = make_handler(self.searcher, self.presets)
+        self._sock = listen(host, port)
+        self.port = self._sock.getsockname()[1]
+        self._threads: list[threading.Thread] = []
 
     def start(self) -> "SearchServer":
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
-        )
-        self._thread.start()
+        self._threads = serve_pool(self._sock, self._handle)
         return self
 
     def stop(self) -> None:
-        self._httpd.shutdown()
-        if self._thread:
-            self._thread.join(timeout=10)
-        self._httpd.server_close()
+        """Stop accepting, join the pool threads (each first finishes its
+        connection) and close the socket; also for a never-started server."""
+        try:
+            # wakes every thread blocked in accept() with EINVAL
+            self._sock.shutdown(socket.SHUT_RDWR)
+        except OSError:
+            pass
+        for t in self._threads:
+            t.join(timeout=2 * _TIMEOUT_S)
+        self._sock.close()
 
 
 def main() -> None:  # pragma: no cover - manual entry point

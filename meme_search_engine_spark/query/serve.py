@@ -203,7 +203,7 @@ class LocalSearcher:
         # cached postings (head terms dominate) AND entry count
         # (absent terms cost zero postings and would otherwise grow
         # unboundedly under diverse junk-term traffic).  Guarded by a
-        # lock: ThreadingHTTPServer handlers search concurrently.
+        # lock: the HTTP server's pool threads search concurrently.
         self._scored_cache: OrderedDict[int, tuple | None] = OrderedDict()
         self._scored_postings = 0
         self._scored_postings_cap = 50_000_000  # ~0.8 GB worst case

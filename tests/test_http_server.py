@@ -3,6 +3,10 @@ LocalSearcher (mse.py:37-47 request shape)."""
 
 import json
 import os
+import socket
+import sys
+import threading
+import time
 import urllib.request
 
 import pytest
@@ -172,6 +176,135 @@ def test_malformed_bodies_get_counted_400(server):
     assert code == 200
 
 
+def _raw(port: int, data: bytes, half_close: bool = False) -> tuple[int, bytes]:
+    """Send raw bytes on a fresh connection; (status, body) of the
+    reply read to EOF, or (0, b"") when the server closed silently."""
+    with socket.create_connection(("127.0.0.1", port), timeout=30) as s:
+        s.sendall(data)
+        if half_close:
+            s.shutdown(socket.SHUT_WR)
+        reply = b""
+        while chunk := s.recv(65536):
+            reply += chunk
+    if not reply:
+        return 0, b""
+    head, _, body = reply.partition(b"\r\n\r\n")
+    return int(head.split()[1]), body
+
+
+def test_unreadable_requests_get_counted_400(server):
+    """Requests the server cannot read each get a 400 reply and exactly
+    one kind="invalid" count, never a dropped connection; afterwards
+    the pool still answers, and every request moved one counter."""
+    srv, oracle = server
+    pad = b"X-Pad: " + b"a" * (80 * 1024) + b"\r\n"
+    cases = [
+        (b"GARBLED\r\n\r\n", False),
+        (b"POST / HTTP/1.1\r\nHost: x\r\n\r\n", False),
+        (b"POST / HTTP/1.1\r\nContent-Length: ten\r\n\r\n{}", False),
+        (b"POST / HTTP/1.1\r\nContent-Length: 100\r\n\r\n{\"query\"", True),
+        (b"GET /health HTTP/1.1\r\n" + pad + b"\r\n", False),
+        (b"DELETE / HTTP/1.1\r\n\r\n", False),
+    ]
+    before = _counts(srv.port)
+    for data, half_close in cases:
+        code, body = _raw(srv.port, data, half_close)
+        assert code == 400, data[:40]
+        assert json.loads(body)["error"].startswith("bad request")
+    query = b'{"query": "term0001 term0100", "top_k": 5}'
+    code, body = _raw(
+        srv.port,
+        b"POST / HTTP/1.0\r\nContent-Length: %d\r\n\r\n%s" % (len(query), query),
+    )
+    assert code == 200
+    got = [(m["rank"], m["doc_id"], m["score_fixed"]) for m in json.loads(body)["matches"]]
+    assert got == [(r, d, sf) for r, d, sf, _ in oracle.topk("term0001 term0100", 5)]
+    after = _counts(srv.port)
+    delta = {k: after.get(k, 0) - before.get(k, 0) for k in after}
+    assert {k: v for k, v in delta.items() if v} == {
+        "invalid_error": len(cases),
+        "simple": 1,
+    }
+
+
+def test_idle_connections_do_not_stall_the_pool(server, monkeypatch):
+    """Clients holding all but one pool thread (one sends nothing, the
+    rest a partial header) do not delay a query; each is cut at the
+    request timeout: the silent one is closed uncounted, a partial
+    request gets a counted 400."""
+    from meme_search_engine_spark.query import http_server
+
+    monkeypatch.setattr(http_server, "_TIMEOUT_S", 1.5)
+    srv, _ = server
+    before = _counts(srv.port)
+    held = [socket.create_connection(("127.0.0.1", srv.port), timeout=30)
+            for _ in range(http_server.POOL_THREADS - 1)]
+    try:
+        for s in held[1:]:
+            s.sendall(b"POST / HTTP/1.1\r\nContent-")
+        time.sleep(0.2)  # every held connection is accepted
+        t0 = time.monotonic()
+        code, body = _post(srv.port, {"query": "term0001", "top_k": 3})
+        assert time.monotonic() - t0 < 1.0
+        assert code == 200 and len(body["matches"]) == 3
+        assert held[0].recv(1) == b""  # closed at the timeout, no reply
+        for s in held[1:]:
+            assert s.recv(64).startswith(b"HTTP/1.0 400 ")
+    finally:
+        for s in held:
+            s.close()
+    after = _counts(srv.port)
+    assert after.get("invalid_error", 0) - before.get("invalid_error", 0) == len(held) - 1
+    assert after.get("simple", 0) - before.get("simple", 0) == 1
+
+
+def test_every_concurrent_request_counted_once(server):
+    """Pool threads share one Metrics: under concurrent load with a
+    short switch interval, every request moves exactly one counter."""
+    import concurrent.futures
+
+    srv, _ = server
+    before = _counts(srv.port)
+    bodies = [{"query": f"term{i % 40:04d}", "top_k": 3} for i in range(60)]
+    bodies += [{"query": "x", "top_k": 0}] * 20
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with concurrent.futures.ThreadPoolExecutor(16) as ex:
+            codes = list(ex.map(lambda b: _post(srv.port, b)[0], bodies))
+    finally:
+        sys.setswitchinterval(interval)
+    assert codes == [200] * 60 + [400] * 20
+    after = _counts(srv.port)
+    assert after["simple"] - before.get("simple", 0) == 60
+    assert after["invalid_error"] - before.get("invalid_error", 0) == 20
+
+
+def test_stop_joins_the_pool_and_frees_the_port(server, monkeypatch):
+    """stop() with a silent client connected returns within seconds,
+    joins every pool thread and frees the listening port."""
+    from meme_search_engine_spark.query import http_server
+
+    monkeypatch.setattr(http_server, "_TIMEOUT_S", 1.5)
+    threads_before = set(threading.enumerate())
+    srv = SearchServer(_index_dir_of(server[0])).start()
+    pool = set(threading.enumerate()) - threads_before
+    assert len(pool) == http_server.POOL_THREADS
+    with urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/health", timeout=10) as resp:
+        assert resp.status == 200
+    idle = socket.create_connection(("127.0.0.1", srv.port), timeout=30)
+    try:
+        time.sleep(0.2)
+        t0 = time.monotonic()
+        srv.stop()
+        assert time.monotonic() - t0 < 5.0
+    finally:
+        idle.close()
+    assert not any(t.is_alive() for t in pool)
+    assert not pool & set(threading.enumerate())
+    http_server.listen("127.0.0.1", srv.port).close()  # the port is free
+
+
 def test_internal_error_gets_counted_500(server, monkeypatch):
     """An I/O failure inside the searcher becomes a counted 500 with a
     JSON body, not a dropped connection."""
@@ -202,7 +335,7 @@ def test_serving_process_imports_no_spark(server):
         f"srv = SearchServer({_index_dir_of(server[0])!r})\n"
         "assert srv.searcher.search('term0001 term0100', 5, with_urls=True)\n"
         "assert 'pyspark' not in sys.modules, 'query'\n"
-        "srv._httpd.server_close()\n"
+        "srv.stop()\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,

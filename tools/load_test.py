@@ -169,7 +169,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--workers", type=int, default=0,
-        help="0 = single-process ThreadingHTTPServer (the r5 shape); "
+        help="0 = single-process SearchServer (one pool of accept threads); "
         "N>0 = pre-fork N worker processes on one shared socket",
     )
     args = ap.parse_args()
