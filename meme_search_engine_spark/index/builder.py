@@ -16,20 +16,24 @@ idempotent-upsert sinks (src/main.rs:324-339), Spark-first:
 
 Layout of an index directory:
     stats.json                 corpus stats {N, avgdl} + input snapshot
-    partials/part_id=*/        stage-1 salted block rows
     ledger/                    checkpoint ledger (parquet, append)
+    docmeta/epoch=*/           per-doc url / doc_len / quality channels
     segments/epoch=*/bucket=*/ final block rows (term-hash bucketed)
     segments/epoch=*/_serving.arrow
                                per-epoch serving image (query.serve)
-    term_stats/                per-term df / n_blocks / global bound
     manifest.json              config + stats + lineage
+    partials/epoch=E/part_id=*/
+                               stage-1 salted block rows, kept only
+                               until epoch E's manifest commit
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
+import shutil
 import time
 from dataclasses import asdict
 
@@ -43,7 +47,6 @@ from .postings import (
     build_partials_from_docs,
     finalize_segments,
     part_col,
-    term_stats_from_partials,
 )
 
 
@@ -301,7 +304,9 @@ def build_index(
     fail_after_batches: int | None = None,
     timings: dict | None = None,
 ) -> dict:
-    """Resumable end-to-end index build.  Returns the manifest dict.
+    """Resumable end-to-end index build.  Returns the manifest dict;
+    over the input of a committed build it returns that manifest and
+    writes nothing.
 
     timings: pass a dict to collect per-phase wall seconds
     (stats/partials/ledger/docmeta/finalize, and image: the serving
@@ -317,6 +322,12 @@ def build_index(
     t = timings if timings is not None else {}
     t0 = time.time()
     snapshot = input_snapshot(pages)
+    manifest_path = os.path.join(out_dir, "manifest.json")
+    if os.path.exists(manifest_path):
+        with open(manifest_path) as fh:
+            manifest = json.load(fh)
+        if manifest["input_snapshot"] == snapshot:
+            return manifest  # committed: its partials are already gone
     docs = _tokenized_docs(spark, pages)
 
     # ---- pass 0: corpus stats + per-part rows (skipped on resume) ----
@@ -409,7 +420,7 @@ def build_index(
         t["finalize"] = tail_t["finalize"]
         t["image"] = futs[2].result()
         t["ledger"] = tail_t["ledger"]
-        return _write_manifest(out_dir, cfg, stats, snapshot)
+        return _commit(out_dir, cfg, stats, snapshot, epoch=0)
 
     batches_done = 0
     while pending:
@@ -443,7 +454,7 @@ def build_index(
     # ---- stage 2: concat-merge finalize ------------------------------
     t["image"] = _finalize_epoch(spark, out_dir, cfg, epoch=0)
     t["finalize"] = round(time.time() - t0, 3)
-    return _write_manifest(out_dir, cfg, stats, snapshot)
+    return _commit(out_dir, cfg, stats, snapshot, epoch=0)
 
 
 def _write_docmeta(docs: DataFrame, out_dir: str, epoch: int) -> None:
@@ -496,11 +507,11 @@ def _finalize_epoch(
     spark: SparkSession, out_dir: str, cfg: IndexConfig, epoch: int
 ) -> float:
     """Finalize ONE epoch: partials/epoch=E -> segments/epoch=E (with
-    its serving image) + term_stats/epoch=E; -> the image write's wall
-    seconds.  Append cost is therefore ∝ the DELTA, never
-    the index (the r02 full-rewrite was the one genuine 100-TB
-    blocker): previous epochs' files are untouched, and the read side
-    merges epochs for free because blocks of a term are doc-range
+    its serving image); -> the image write's wall seconds.  Append
+    cost is therefore ∝ the DELTA, never the index (the r02
+    full-rewrite was the one genuine 100-TB blocker): previous
+    epochs' files are untouched, and the read side merges epochs for
+    free because blocks of a term are doc-range
     disjoint ACROSS epochs too (append contract: doc_ids strictly
     increase), so the WAND kernel's unsigned-min_doc sort consumes
     multi-epoch blocks as-is.  Within an epoch, block_id / df /
@@ -509,42 +520,24 @@ def _finalize_epoch(
     up by the readers.  Rerunnable (overwrite of this epoch's dirs
     only) — the reference swaps in only new state on reindex
     (main.rs:1005-1035)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     partials = spark.read.parquet(
         os.path.join(out_dir, "partials", f"epoch={epoch}")
     )
-    segments = finalize_segments(partials, cfg)
-    seg_dir = os.path.join(out_dir, "segments", f"epoch={epoch}")
-
-    def write_term_stats():
-        # aggregated from partials, NOT a re-read of the written
-        # segments: identical values (same block rows), but the job is
-        # independent of the segments write, so both run concurrently
-        # and the finalize wall-clock is max(), not sum() — this
-        # sequential write+re-read was the finalize phase's Amdahl
-        # tail in the scaling protocol (1.28x at 2->8 cores)
-        term_stats_from_partials(partials).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "term_stats", f"epoch={epoch}")
-        )
-
-    with ThreadPoolExecutor(2) as ex:
-        futs = [
-            ex.submit(_write_segments_and_image, segments, seg_dir, cfg),
-            ex.submit(write_term_stats),
-        ]
-        for f in futs:
-            f.result()
-    return futs[0].result()
+    return _write_segments_and_image(
+        finalize_segments(partials, cfg),
+        os.path.join(out_dir, "segments", f"epoch={epoch}"),
+        cfg,
+    )
 
 
 def _write_manifest(
     out_dir: str, cfg: IndexConfig, stats: dict, snapshot: str
 ) -> dict:
     """manifest.json is the COMMIT MARKER: written last, after every
-    derived dir (segments/term_stats/stats.json) is consistent.  Written
-    to a hidden tmp file and swapped in with os.replace, so a concurrent
-    reader sees the old or the new manifest, never a torn one."""
+    derived file (segments with their images, docmeta, stats.json) is
+    consistent.  Written to a hidden tmp file and swapped in with
+    os.replace, so a concurrent reader sees the old or the new
+    manifest, never a torn one."""
     import uuid
 
     manifest = {
@@ -561,73 +554,88 @@ def _write_manifest(
     return manifest
 
 
+def _commit(
+    out_dir: str, cfg: IndexConfig, stats: dict, snapshot: str, epoch: int
+) -> dict:
+    """Commit an epoch: write the manifest, then delete the epoch's
+    partials.  Once committed, the epoch is served and compacted from
+    its segments, and the ledger stays its resume record.  A crash
+    before the manifest keeps the partials, so a retry finalizes from
+    them again."""
+    manifest = _write_manifest(out_dir, cfg, stats, snapshot)
+    partials = os.path.join(out_dir, "partials")
+    shutil.rmtree(os.path.join(partials, f"epoch={epoch}"), ignore_errors=True)
+    with contextlib.suppress(OSError):
+        os.rmdir(partials)  # kept while another epoch is uncommitted
+    return manifest
+
+
 _COMPACT_MARKER = "compact.commit"
-_SWAP_NAMES = ("segments", "term_stats")
+
+
+def _swap_dirs(out_dir: str) -> tuple[str, str, str]:
+    """(final, old, tmp) paths of the segments directory a compaction
+    swaps."""
+    final = os.path.join(out_dir, "segments")
+    return final, final + ".old", final + ".tmp"
 
 
 def _apply_compaction_swap(out_dir: str) -> None:
     """Roll a COMMITTED compaction swap forward — idempotent, so the
     crash-recovery path (_heal_compaction) and the happy path share
-    it.  Per dir the states a crash can leave are all distinguishable
-    by existence of {final, final.old, final.tmp} and each resolves
+    it.  The states a crash can leave are all distinguishable by
+    existence of {final, final.old, final.tmp} and each resolves
     toward the new (tmp) contents, which are complete by the time the
     commit marker exists."""
-    import shutil
-
-    for name in _SWAP_NAMES:
-        final = os.path.join(out_dir, name)
-        old = final + ".old"
-        tmp = final + ".tmp"
-        if os.path.isdir(tmp):
-            if os.path.isdir(final) and os.path.isdir(old):
-                raise RuntimeError(
-                    f"compaction swap: {final}, {old} and {tmp} all "
-                    "exist — not a state this protocol produces; "
-                    "refusing to guess"
-                )
-            if os.path.isdir(final):
-                os.rename(final, old)
-            os.rename(tmp, final)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+    final, old, tmp = _swap_dirs(out_dir)
+    if os.path.isdir(tmp):
+        if os.path.isdir(final) and os.path.isdir(old):
+            raise RuntimeError(
+                f"compaction swap: {final}, {old} and {tmp} all "
+                "exist — not a state this protocol produces; "
+                "refusing to guess"
+            )
+        if os.path.isdir(final):
+            os.rename(final, old)
+        os.rename(tmp, final)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
 
 
 def _heal_compaction(out_dir: str) -> None:
     """Repair any interrupted compact_index swap (ADVICE r07): with
-    the commit marker present the tmp dirs are complete — roll the
-    swap FORWARD; without it the tmps are a partial pre-commit write —
-    roll BACK (delete tmps, restore any legacy .old).  Runs at
+    the commit marker present the tmp dir is complete — roll the
+    swap FORWARD; without it the tmp is a partial pre-commit write —
+    roll BACK (delete the tmp, restore any legacy .old).  Runs at
     load/append/compact entry; every step is existence-guarded, so a
     crash during healing heals again."""
-    import shutil
-
     marker = os.path.join(out_dir, _COMPACT_MARKER)
     if os.path.exists(marker):
         _apply_compaction_swap(out_dir)
         os.remove(marker)
         return
-    for name in _SWAP_NAMES:
-        final = os.path.join(out_dir, name)
-        old = final + ".old"
-        tmp = final + ".tmp"
-        if os.path.isdir(old):
-            # legacy (pre-marker) crash window: old exists only after
-            # final was moved aside — restore or drop it
-            if not os.path.isdir(final):
-                os.rename(old, final)
-            else:
-                shutil.rmtree(old)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
+    final, old, tmp = _swap_dirs(out_dir)
+    if os.path.isdir(old):
+        # legacy (pre-marker) crash window: old exists only after
+        # final was moved aside — restore or drop it
+        if not os.path.isdir(final):
+            os.rename(old, final)
+        else:
+            shutil.rmtree(old)
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
 
 
 def compact_index(spark: SparkSession, out_dir: str) -> dict:
     """Maintenance op: merge ALL epochs back into a single epoch 0
-    (full rewrite — the cost appends no longer pay).  Restores
+    (full rewrite — the cost appends no longer pay).  It re-finalizes
+    the committed segments' block rows: blocks of a term are
+    doc-range-disjoint across epochs, so finalize_segments renumbers
+    them exactly as it does a cold build's partials.  Restores
     globally-dense block_id / exact stored df; queries are identical
     before and after (pytest).  Crash-safe via a commit marker: the
-    new dirs are fully written as .tmp, `compact.commit` is the
-    atomic commit point, and the per-dir renames roll FORWARD from it
+    new segments are fully written as segments.tmp, `compact.commit`
+    is the atomic commit point, and the rename rolls FORWARD from it
     (a crash anywhere is healed by _heal_compaction at the next
     load/append/compact — the rename window the r7 advice flagged is
     closed).  Runs either explicitly or via
@@ -635,8 +643,6 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     rebuild->atomic-swap loop (main.rs:1005-1035) folds this rewrite
     into every cycle; here appends are delta-cost and the rewrite is
     amortized by policy instead."""
-    import shutil
-
     _heal_compaction(out_dir)
     with open(os.path.join(out_dir, "manifest.json")) as fh:
         manifest = json.load(fh)
@@ -644,33 +650,12 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     epochs = index_epochs(out_dir)
     if len(epochs) <= 1:
         return manifest
-    partials = spark.read.parquet(os.path.join(out_dir, "partials"))
-    segments = finalize_segments(partials.drop("epoch"), cfg)
-    seg_tmp = os.path.join(out_dir, "segments.tmp")
-    ts_tmp = os.path.join(out_dir, "term_stats.tmp")
-    for p in (seg_tmp, ts_tmp):
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-    # same independence argument as _finalize_epoch: both rewrites
-    # aggregate the partials directly, so they run CONCURRENTLY and the
-    # compaction wall is max(), not sum()
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_ts():
-        term_stats_from_partials(
-            partials.drop("epoch")
-        ).write.mode("overwrite").parquet(os.path.join(ts_tmp, "epoch=0"))
-
+    final, _, seg_tmp = _swap_dirs(out_dir)
+    segments = finalize_segments(spark.read.parquet(final).drop("epoch"), cfg)
     # the serving image lands in segments.tmp/epoch=0 before the commit
     # marker, so the swap carries it
-    seg0 = os.path.join(seg_tmp, "epoch=0")
-    with ThreadPoolExecutor(2) as ex:
-        for f in [
-            ex.submit(_write_segments_and_image, segments, seg0, cfg),
-            ex.submit(_write_ts),
-        ]:
-            f.result()
-    # commit point: both tmp dirs are complete; from here the swap only
+    _write_segments_and_image(segments, os.path.join(seg_tmp, "epoch=0"), cfg)
+    # commit point: the tmp dir is complete; from here the swap only
     # rolls forward (see _apply_compaction_swap/_heal_compaction)
     marker = os.path.join(out_dir, _COMPACT_MARKER)
     with open(marker + ".tmp", "w") as fh:
@@ -678,8 +663,6 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     os.replace(marker + ".tmp", marker)
     _apply_compaction_swap(out_dir)
     os.remove(marker)
-    # partials stay as-is: the union of ALL partial epochs remains the
-    # durable source for any future compaction (ledger keys unchanged).
     # Record the rewrite in the ledger: status='compacted' never
     # matches completed_parts (filters status=='done'), part_id=-1
     # never collides with a real part, and epoch=max merged epoch
@@ -712,8 +695,10 @@ def append_to_index(
     - WAND block bounds are avgdl-independent ((max_tf, min_dl) per
       block), so older epochs' pruning metadata stays valid under the
       shifted avgdl;
-    - the new epoch gets its own partials dir + ledger rows: appends
-      are themselves resumable and never touch previous epochs' files;
+    - the new epoch gets its own ledger rows and a partials dir that
+      lives until its manifest commit: appends are themselves
+      resumable (a retry before the commit finalizes from the kept
+      partials) and never touch previous epochs' files;
     - auto_compact_epochs=E bounds the multi-epoch WAND df-fixup
       penalty (+18-27% measured, BENCH/BASELINE.md §multi-epoch) in a
       long-running deployment: once the committed index exceeds E
@@ -811,7 +796,7 @@ def append_to_index(
     _finalize_epoch(spark, out_dir, cfg, epoch)
     with open(os.path.join(out_dir, "stats.json"), "w") as fh:
         json.dump(stats, fh)
-    manifest = _write_manifest(out_dir, cfg, stats, old.get("input_snapshot"))
+    manifest = _commit(out_dir, cfg, stats, old.get("input_snapshot"), epoch)
     if (
         auto_compact_epochs is not None
         and len(index_epochs(out_dir)) > auto_compact_epochs
@@ -826,20 +811,23 @@ def load_index(spark: SparkSession, out_dir: str):
     segments span epoch=*/bucket=* hive partitions; manifest carries
     n_epochs so query planners know whether stored per-block df is
     already global (single epoch) or needs the sum(n_docs) fixup
-    (multi-epoch — see _finalize_epoch).  term_stats is aggregated to
-    global per-term stats across epochs (df/n_blocks/bytes additive,
-    bound is a max) — lazily, only if the caller evaluates it."""
+    (multi-epoch — see _finalize_epoch).
+
+    term_stats is a lazy per-term aggregate of the segments (df,
+    n_blocks, max_block_max, bytes), global across epochs; nothing
+    evaluates it unless the caller does.  No query needs it: wand_topk
+    keeps an unused term_stats parameter, and both stay only because
+    perfbench/spark_phase.py passes it to wand_topk and reads n_blocks
+    from it.  They go with the benchmark's next revision."""
     _heal_compaction(out_dir)
     with open(os.path.join(out_dir, "manifest.json")) as fh:
         manifest = json.load(fh)
     manifest["n_epochs"] = max(1, len(index_epochs(out_dir)))
     segments = spark.read.parquet(os.path.join(out_dir, "segments"))
-    term_stats = spark.read.parquet(os.path.join(out_dir, "term_stats"))
-    if "epoch" in term_stats.columns:
-        term_stats = term_stats.groupBy("term_hash").agg(
-            F.sum("df").alias("df"),
-            F.sum("n_blocks").alias("n_blocks"),
-            F.max("max_block_max").alias("max_block_max"),
-            F.sum("bytes").alias("bytes"),
-        )
+    term_stats = segments.groupBy("term_hash").agg(
+        F.sum("n_docs").alias("df"),
+        F.count("*").alias("n_blocks"),
+        F.max("block_max_tfnorm").alias("max_block_max"),
+        F.sum("bytes").alias("bytes"),
+    )
     return segments, term_stats, manifest

@@ -183,9 +183,9 @@ def _encode_sorted_run(
             "block_max_tfnorm": block_max,
             "max_tf": block_max_tf.astype(np.int32),
             "min_dl": block_min_dl.astype(np.int32),
-            # stored compressed size: downstream metrics/term_stats
-            # aggregate THIS int column instead of re-scanning the
-            # binary payloads just to take their lengths
+            # stored compressed size: downstream metrics aggregate
+            # THIS int column instead of re-scanning the binary
+            # payloads just to take their lengths
             "bytes": np.fromiter(
                 (len(a) + len(b) + len(c)
                  for a, b, c in zip(doc_bytes, tf_bytes, dl_bytes)),
@@ -384,35 +384,6 @@ def finalize_segments(partials: DataFrame, cfg: IndexConfig) -> DataFrame:
         .withColumn("df", F.sum("n_docs").over(w))
         .withColumn("n_blocks", F.count("*").over(w))
         .select(*SEGMENTS_COLUMNS)
-    )
-
-
-def term_stats_from_segments(segments: DataFrame) -> DataFrame:
-    """Per-term planning stats (query-side idf + WAND global bounds)."""
-    return segments.groupBy("term_hash").agg(
-        F.first("df").alias("df"),
-        F.first("n_blocks").alias("n_blocks"),
-        F.max("block_max_tfnorm").alias("max_block_max"),
-        F.sum("bytes").alias("bytes"),  # int column: the scan never
-        # touches the binary payloads (column pruning)
-    )
-
-
-def term_stats_from_partials(partials: DataFrame) -> DataFrame:
-    """term_stats aggregated DIRECTLY from partial blocks — the same
-    row set finalize_segments renumbers, so the values are identical to
-    term_stats_from_segments(finalized) (pytest-asserted), but the job
-    needs neither the finalize window nor a re-read of the written
-    segments: a column-pruned scan of 4 int/double partials columns
-    (never the binary payloads) + one groupBy.  That independence is
-    what lets _finalize_epoch run the term_stats write CONCURRENTLY
-    with the big segments write (the r3 scaling protocol measured the
-    sequential write+re-read as the finalize phase's Amdahl tail)."""
-    return partials.groupBy("term_hash").agg(
-        F.sum("n_docs").alias("df"),
-        F.count("*").alias("n_blocks"),
-        F.max("block_max_tfnorm").alias("max_block_max"),
-        F.sum("bytes").alias("bytes"),
     )
 
 

@@ -37,6 +37,11 @@ from .http_server import listen
 
 log = logging.getLogger(__name__)
 
+# start()'s /health probe timeout: a probe no worker accepts waits this
+# long in the listen backlog before the next exit-code check, so it
+# bounds how late a worker that died at startup is reported
+_PROBE_TIMEOUT_S = 0.5
+
 
 def _worker_main(
     sock: socket.socket, index_dir: str
@@ -95,7 +100,8 @@ class ForkServer:
     def _health_pid(self) -> int | None:
         try:
             with urllib.request.urlopen(
-                f"http://{self.host}:{self.port}/health", timeout=5
+                f"http://{self.host}:{self.port}/health",
+                timeout=_PROBE_TIMEOUT_S,
             ) as resp:
                 if resp.status == 200:
                     return json.loads(resp.read())["pid"]
@@ -117,7 +123,8 @@ class ForkServer:
         # Probe /health in concurrent bursts until every worker pid has
         # answered: a worker busy on one probe lets a sibling accept the
         # next.  A worker that died post-fork (bad index path, OOM)
-        # never answers, so check exitcodes each lap and fail fast.
+        # never answers, so check exitcodes each lap (at most
+        # _PROBE_TIMEOUT_S apart) and fail fast.
         seen: set[int] = set()
         n_probes = min(2 * self.workers, 16)
         with ThreadPoolExecutor(n_probes) as ex:

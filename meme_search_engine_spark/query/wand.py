@@ -572,6 +572,9 @@ def wand_topk(
     index.  Returns (query_id, rank, doc_id, score_fixed, score) —
     rank-identical to the exhaustive engine.
 
+    term_stats is unused; it stays in the signature only because
+    perfbench/spark_phase.py passes load_index's middle element here.
+
     Scoring groups are (query_id, doc-range) — per-task input is
     bounded by the range width regardless of term df (head-term safe);
     the per-query global merge sees ≤ k·n_ranges rows."""

@@ -83,6 +83,59 @@ def _assert_images_rebuild_identically(d):
             assert fh.read() == sink.getvalue().to_pybytes(), seg_dir
 
 
+def _assert_postings_stored_once(d):
+    """A committed index keeps its postings only in segments/: no
+    term_stats/, and no partials of a committed epoch."""
+    assert not os.path.exists(os.path.join(d, "term_stats"))
+    assert not os.path.exists(os.path.join(d, "partials"))
+    assert index_epochs(d)
+
+
+def test_committed_index_keeps_no_partials_or_term_stats(dirs):
+    for d in dirs:
+        _assert_postings_stored_once(d)
+
+
+def test_rebuild_of_committed_index_is_noop(spark, dirs, tmp_path):
+    """Running build_index again over a committed build's input
+    returns the committed manifest and writes nothing: no file is
+    added, removed or rewritten."""
+    cold, _ = dirs
+    out = str(tmp_path / "rebuilt")
+    shutil.copytree(cold, out)  # copy2: mtimes carried over
+
+    def files():
+        return {
+            os.path.join(root, f): (
+                os.path.getmtime(os.path.join(root, f)),
+                os.path.getsize(os.path.join(root, f)),
+            )
+            for root, _, names in os.walk(out)
+            for f in names
+        }
+
+    before = files()
+    with open(os.path.join(out, "manifest.json")) as fh:
+        manifest = json.load(fh)
+    pages = spark.read.parquet(
+        os.path.join(os.path.dirname(cold), f"pages_{N_DOCS}")
+    )
+    assert build_index(spark, pages, out, CFG) == manifest
+    assert files() == before
+
+
+def test_term_stats_df_equal_appended_vs_cold(spark, dirs):
+    """load_index's per-term stats aggregate across epochs: the
+    appended index gives every term the cold build's df."""
+
+    def df(d):
+        _, term_stats, _ = load_index(spark, d)
+        return sorted(map(tuple, term_stats.select("term_hash", "df").collect()))
+
+    cold, incr = dirs
+    assert df(incr) == df(cold)
+
+
 def test_serving_images_rebuild_identically(dirs):
     cold, incr = dirs
     assert index_epochs(cold) == [0] and index_epochs(incr) == [0, 1]
@@ -175,7 +228,7 @@ def test_append_contract_enforced(spark, dirs, tmp_path):
 
 def test_append_touches_only_new_epoch_files(spark, dirs, tmp_path):
     """Delta-cost finalize: appending 100 docs to a 400-doc index must
-    not rewrite epoch 0's segment/term_stats files (VERDICT r02 #4 —
+    not rewrite epoch 0's segment files (VERDICT r02 #4 —
     at 100 TB an append that rewrites the index is a blocker)."""
     base = os.path.dirname(dirs[1])
     pages = spark.read.parquet(os.path.join(base, f"pages_{N_DOCS}"))
@@ -191,10 +244,8 @@ def test_append_touches_only_new_epoch_files(spark, dirs, tmp_path):
         return state
 
     seg0 = snap("segments/epoch=0")
-    ts0 = snap("term_stats/epoch=0")
     append_to_index(spark, pages.filter(F.col("doc_id") >= SPLIT), out)
     assert snap("segments/epoch=0") == seg0
-    assert snap("term_stats/epoch=0") == ts0
     assert os.path.isdir(os.path.join(out, "segments", "epoch=1"))
     # and the appended index still answers identically to the cold one
     s_cold, s_new = LocalSearcher(dirs[0]), LocalSearcher(out)
@@ -258,6 +309,7 @@ def test_compaction_preserves_results(spark, dirs, tmp_path):
     before = [LocalSearcher(out).search(q["text"], q["k"]) for q in queries]
     compact_index(spark, out)
     assert index_epochs(out) == [0]
+    _assert_postings_stored_once(out)
     assert_docmeta_fresh()
     after_s = LocalSearcher(out)
     after = [after_s.search(q["text"], q["k"]) for q in queries]
@@ -303,6 +355,7 @@ def test_auto_compaction_policy(spark, dirs, tmp_path):
         auto_compact_epochs=2,
     )
     assert index_epochs(out) == [0]
+    _assert_postings_stored_once(out)
     led = read_ledger(spark, out)
     compacted = led.filter(F.col("status") == "compacted").collect()
     assert len(compacted) == 1
@@ -397,10 +450,9 @@ def test_append_crash_resume_reuses_epoch(spark, dirs, tmp_path):
 def test_compaction_crash_midswap_heals_forward(
     spark, dirs, tmp_path, monkeypatch
 ):
-    """A crash AFTER the compact.commit marker, between the segments
-    and term_stats swaps, rolls FORWARD at the next load_index
-    (ADVICE r07 crash-window): single epoch, no debris, identical
-    query results."""
+    """A crash AFTER the compact.commit marker, before segments.tmp is
+    swapped in, rolls FORWARD at the next load_index (ADVICE r07
+    crash-window): single epoch, no debris, identical query results."""
     from meme_search_engine_spark.index import builder
 
     base = os.path.dirname(dirs[1])
@@ -414,32 +466,22 @@ def test_compaction_crash_midswap_heals_forward(
 
     real_swap = builder._apply_compaction_swap
 
-    def crash_after_segments(d):
-        monkeypatch.setattr(builder, "_SWAP_NAMES", ("segments",))
-        try:
-            real_swap(d)
-        finally:
-            monkeypatch.setattr(
-                builder, "_SWAP_NAMES", ("segments", "term_stats")
-            )
-        raise RuntimeError("injected crash mid-swap")
+    def crash_before_swap(d):
+        raise RuntimeError("injected crash before the swap")
 
-    monkeypatch.setattr(
-        builder, "_apply_compaction_swap", crash_after_segments
-    )
+    monkeypatch.setattr(builder, "_apply_compaction_swap", crash_before_swap)
     with pytest.raises(RuntimeError, match="injected crash"):
         builder.compact_index(spark, out)
     monkeypatch.setattr(builder, "_apply_compaction_swap", real_swap)
-    # the crash state the advice described: marker committed, segments
-    # already swapped, term_stats still multi-epoch with its tmp
+    # the crash state: marker committed, the compacted segments complete
+    # in segments.tmp, the live segments still multi-epoch
     assert os.path.exists(os.path.join(out, "compact.commit"))
-    assert os.path.isdir(os.path.join(out, "term_stats.tmp"))
+    assert os.path.isdir(os.path.join(out, "segments.tmp"))
+    assert index_epochs(out) == [0, 1]
     load_index(spark, out)  # any reader heals forward
     assert not os.path.exists(os.path.join(out, "compact.commit"))
-    assert not os.path.isdir(os.path.join(out, "term_stats.tmp"))
-    assert not os.path.isdir(os.path.join(out, "term_stats.old"))
-    from meme_search_engine_spark.index.builder import index_epochs
-
+    assert not os.path.isdir(os.path.join(out, "segments.tmp"))
+    assert not os.path.isdir(os.path.join(out, "segments.old"))
     assert index_epochs(out) == [0]
     s2 = LocalSearcher(out)
     after = [s2.search(q["text"], q["k"]) for q in queries]

@@ -563,15 +563,19 @@ def test_fork_server_refork_cap_decays(server):
 def test_fork_server_start_reports_startup_death(tmp_path):
     """A worker that dies during startup (here: nonexistent index dir)
     must surface as a fast RuntimeError from start(), not a 60 s
-    timeout with sporadic connection errors later (ADVICE r06)."""
+    timeout with sporadic connection errors later (ADVICE r06), nor
+    only after a /health probe waits out a long timeout."""
     import pytest as _pytest
 
     from meme_search_engine_spark.query.mp_server import ForkServer
 
     fork = ForkServer(str(tmp_path / "no_such_index"), workers=2)
+    t0 = time.monotonic()
     with _pytest.raises(RuntimeError, match="died during startup"):
         fork.start(timeout=30)
+    elapsed = time.monotonic() - t0
     fork.stop()
+    assert elapsed < 2.0, elapsed
 
 
 def test_fork_server_preset_coherence_across_workers(server):

@@ -210,33 +210,6 @@ def test_ledger_lineage_and_metrics(spark, index_dir):
     assert all(r["input_snapshot"] == led[0]["input_snapshot"] for r in led)
 
 
-def test_term_stats_from_partials_equals_from_segments(spark, index_dir):
-    """_finalize_epoch aggregates term_stats straight from partials (so
-    the write runs concurrently with the segments write); the values
-    must equal the segment-derived aggregation exactly."""
-    import os
-
-    from meme_search_engine_spark.index.postings import (
-        term_stats_from_partials,
-        term_stats_from_segments,
-    )
-
-    seg = spark.read.parquet(os.path.join(index_dir, "segments"))
-    parts = spark.read.parquet(os.path.join(index_dir, "partials"))
-    a = sorted(map(tuple, term_stats_from_segments(seg.drop("epoch")).collect()))
-    b = sorted(map(tuple, term_stats_from_partials(parts.drop("epoch")).collect()))
-    assert a == b
-    stored = sorted(
-        map(
-            tuple,
-            spark.read.parquet(os.path.join(index_dir, "term_stats"))
-            .drop("epoch")
-            .collect(),
-        )
-    )
-    assert stored == a
-
-
 def test_combine_pre_count_identical_to_raw_explode(spark, pages_path):
     """The doc-local JVM tf pre-combine (doc_term_tf_exploded) must
     produce bit-identical partial blocks to exploding raw token

@@ -28,7 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 DATA_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data"
 )
-REPO_DIR = os.path.dirname(DATA_DIR)
 
 
 def _cpu_control(n: int = 20_000_000) -> float:
@@ -201,13 +200,6 @@ def main() -> None:
     def emit(payload: dict) -> None:
         payload = {**payload, "cpu_control_mops": _cpu_control()}
         print(json.dumps(payload))
-        try:  # full distribution survives sessions, like bench_scaling
-            with open(
-                os.path.join(REPO_DIR, "BENCH", "runs.jsonl"), "a"
-            ) as fh:
-                fh.write(json.dumps(payload) + "\n")
-        except OSError:
-            pass
 
     try:
         common = {
